@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench harness: runs the declared oracle queries (q*) on
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -27,18 +25,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench")
     // optional substring filter for focused iteration runs; the
     // default sweep is the q* set, but an EXPLICIT filter can also
     // name ml_* entries (for their BASELINE.md shape rows)
@@ -57,15 +44,9 @@ object Bench {
           .write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch { case e: Throwable =>
-        // nextOption: an EMPTY (non-null) message would make .next()
-        // throw from inside the failure handler and kill the sweep
-        val msg = Option(e.getMessage).filter(_.nonEmpty)
-          .getOrElse(e.getClass.getName)
-        System.err.println(s"[bench] $name FAILED: ${msg.take(300)}")
-        // first INFORMATIVE line: a leading newline in the message
-        // would otherwise record an empty error string
-        Left(msg.linesIterator.find(_.trim.nonEmpty)
-          .getOrElse(msg).take(200))
+        val line = BenchGate.errorLine(e)
+        System.err.println(s"[bench] $name FAILED: $line")
+        Left(line)
       }
     }
 
@@ -123,20 +104,8 @@ object Bench {
     def jnum(pairs: Seq[(String, Double)]): String =
       pairs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
         .mkString("{", ",", "}")
-    // full JSON string escape incl. control chars — a tab inside a
-    // Spark error message would otherwise make the driver's parse
-    // target (and target/bench.json) invalid JSON
-    def jesc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     def jstr(pairs: Seq[(String, String)]): String =
-      pairs.map { case (k, v) => "\"" + k + "\":\"" + jesc(v) + "\"" }
+      pairs.map { case (k, v) => "\"" + k + "\":" + BenchGate.jsonString(v) }
         .mkString("{", ",", "}")
     // canonical per-query numbers: min over every successful
     // measurement this run (sweep min-of-two and, where a flagged
@@ -181,7 +150,7 @@ object Bench {
       // truncate the RAW message, then escape — truncating after
       // escaping could cut an escape sequence in half and leave an
       // unterminated JSON string
-      println(s"""{"bench_query":"$k","err":true,"msg":"${jesc(e.take(120))}"}""")
+      println(s"""{"bench_query":"$k","err":true,"msg":${BenchGate.jsonString(e.take(120))}}""")
     }
     // durable artifact: every run writes target/bench.json; ONLY an
     // explicit `--anchor` invocation also writes the tracked

@@ -90,4 +90,31 @@ object BenchGate {
     * JSON's "sweep"/"focused" maps. */
   def canonicalValue(sweepMin: Double, focusedMin: Option[Double]): Double =
     focusedMin.fold(sweepMin)(math.min(sweepMin, _))
+
+  /** `s` as a JSON string literal: quotes plus a full escape of
+    * backslash, quote and ALL control chars (< 0x20) — a tab or CR in
+    * a Spark error message or in builder-authored oracle SQL would
+    * otherwise make the emitted JSON (the bench line,
+    * target/bench.json, oracle_sql.json, errors.json) invalid. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The recorded error of a failed query: the first INFORMATIVE line
+    * of its exception message, at most 200 chars. An empty (non-null)
+    * message falls back to the exception class — `.next()` on its
+    * lines would throw from inside the failure handler and abort the
+    * whole run — and a leading newline must not record an empty
+    * string. */
+  def errorLine(e: Throwable): String = {
+    val msg = Option(e.getMessage).filter(_.nonEmpty)
+      .getOrElse(e.getClass.getName)
+    msg.linesIterator.find(_.trim.nonEmpty).getOrElse(msg).take(200)
+  }
 }

@@ -13,7 +13,12 @@ import org.apache.spark.sql.SparkSession
   *  - FAIR scheduling so the per-site ML fan-out's concurrent jobs
   *    share executors instead of convoying (reference used FIFO with 8
   *    driver threads, JobRunner.scala:15,51-54);
-  *  - the engine's SQL functions registered via GraftExtensions.
+  *  - the engine's SQL functions, planner strategy and optimizer rule
+  *    installed via GraftExtensions.
+  *
+  * Every entry point — the CLI, the harness mains, the test suite and
+  * the benchmark — gets its session here; nothing else calls
+  * `SparkSession.builder`.
   */
 object Sessions {
 
@@ -36,8 +41,13 @@ object Sessions {
     master.fold(b)(b.master)
   }
 
-  def local(appName: String = "graft", cores: String = "*"): SparkSession = {
-    val spark = builder(appName, Some(s"local[$cores]")).getOrCreate()
+  /** The harness mains' session: `local[N]` with N shuffle partitions,
+    * N = `SPARK_GRAFT_CPUS` (default 4), UI off, WARN logging. */
+  def local(appName: String = "graft"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = builder(appName, Some(s"local[$cpus]"), cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -22,14 +22,6 @@ final class Tables(val spark: SparkSession, val dir: String) {
   lazy val events: DataFrame = Tables.load(spark, dir, "events")
   lazy val documents: DataFrame = Tables.load(spark, dir, "documents")
   lazy val embeddings: DataFrame = Tables.load(spark, dir, "embeddings")
-
-  /** Register every table as a same-named temp view (for `spark.sql`
-    * users; forces all schema reads). */
-  def registerViews(): Tables = {
-    Tables.names.foreach(n =>
-      Tables.load(spark, dir, n).createOrReplaceTempView(n))
-    this
-  }
 }
 
 object Tables {

@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // optional substring filter for focused local iteration; the driver
     // sets no filter and always dumps the full set
@@ -33,14 +23,8 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        // nextOption guards an EMPTY (non-null) message — .next()
-        // would throw from inside the handler, abort the loop, and
-        // silently drop every remaining query from the artifact
-        val msg = Option(e.getMessage).filter(_.nonEmpty)
-          .getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name FAILED: ${msg.take(300)}")
-        val firstLine = msg.linesIterator.find(_.trim.nonEmpty)
-          .getOrElse(msg).take(200)
+        val firstLine = BenchGate.errorLine(e)
+        System.err.println(s"[verify] $name FAILED: $firstLine")
         // the marker dir must be EMPTY: a mid-write failure leaves
         // _temporary debris, and a rerun over a previous success would
         // otherwise serve STALE parquet as current results. If the
@@ -67,18 +51,7 @@ object Verify {
             s"[verify] $name marker dir NOT emptied — stale risk")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import BenchGate.{jsonString => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

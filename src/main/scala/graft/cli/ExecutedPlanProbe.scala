@@ -2,15 +2,14 @@ package graft.cli
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Diagnostic: prints the EXECUTED physical plan (the final
-  * adaptive plan, after AQE re-optimization and exchange reuse) for
-  * the named declared queries — the evidence instrument for
-  * shared-subtree claims. `graft.Explain` prints the pre-execution
-  * plan, where every reference to a shared frame shows as its own
+/** Diagnostic: prints, for the named declared queries, the formatted
+  * pre-execution plan and then the EXECUTED physical plan (the final
+  * adaptive plan, after AQE re-optimization and exchange reuse) — the
+  * evidence instrument for shared-subtree claims. In the pre-execution
+  * plan every reference to a shared frame shows as its own
   * scan+exchange subtree; whether those subtrees are COMPUTED once or
   * N times is decided at runtime by exchange reuse, which only the
   * executed plan shows (`ReusedExchange` / `TableCacheQueryStage`
@@ -19,17 +18,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object ExecutedPlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-executed-plan-probe")
     val captured = new AtomicReference[String]("")
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(
@@ -40,8 +29,10 @@ object ExecutedPlanProbe {
     })
     args.foreach { n =>
       captured.set("")
-      graft.SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      val df = graft.SparkEntry.queries(n)(spark, sfDir)
+      println(s"===== $n (pre-execution, formatted) =====")
+      df.explain("formatted")
+      df.write.format("noop").mode("overwrite").save()
       // the listener bus is asynchronous; poll briefly for the capture
       var waited = 0
       while (captured.get.isEmpty && waited < 10000) {

@@ -75,14 +75,7 @@ case class VectorDot(left: Expression, right: Expression)
 
 /** Column-API surface for the native vector expressions. */
 object VectorFunctions {
-  import org.apache.spark.sql.functions.sqrt
-
   def vec_dot(a: Column, b: Column): Column =
     GraftBridge.column(
       VectorDot(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  def vec_norm(a: Column): Column = sqrt(vec_dot(a, a))
-
-  def vec_cosine(a: Column, b: Column): Column =
-    vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
 }

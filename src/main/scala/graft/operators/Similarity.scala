@@ -126,7 +126,6 @@ object Similarity {
     * of vec_dot is index-ascending, matching the oracle's
     * list_transform formulation bit-for-bit. */
   def sqlCosineTopK(t: graft.Tables): DataFrame = {
-    graft.plans.GraftExtensions.register(t.spark)
     t.embeddings.createOrReplaceTempView("graft_q77_embeddings")
     t.spark.sql(
       """WITH v AS (

@@ -972,7 +972,6 @@ object TextAnalysis {
     val maxQuota = Option(scala.concurrent.Await.result(mObs.future,
         scala.concurrent.duration.Duration(300, "s"))
         .getAs[java.lang.Long]("mq")).map(_.longValue).getOrElse(0L)
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val ranked = graft.plans.TopKPerKey.topK(
       documents
         .select(col("doc_id"), col("lang"), col("source"))
@@ -1086,7 +1085,6 @@ object TextAnalysis {
       documents: DataFrame, terms: Seq[String], k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25TopK: at least one query term")
-    graft.plans.GraftExtensions.register(documents.sparkSession)
     val dl = documents.select(
       col("doc_id"), size(tokens(col("text"))).as("dl"))
     // always exactly one row: agg without groupBy never returns empty

@@ -11,10 +11,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * native vector functions for SQL users
   * (`SELECT vec_dot(a, b) ...`) and the [[TopKPerKeyNode]] bounded-heap
   * operator as a table-valued function
-  * (`FROM graft_topk('t', 'key', 'col DESC, tie', 5)`). Enable with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`;
-  * [[GraftExtensions.register]] does the same on a live session.
+  * (`FROM graft_topk('t', 'key', 'col DESC, tie', 5)`). Installed on
+  * every session by [[graft.Sessions.builder]] (or, outside graft's
+  * entry points, `spark.sql.extensions=graft.plans.GraftExtensions`).
   *
   * Custom rules: exactly one, [[IntervalJoinRewrite]] — the only place
   * built-in Catalyst genuinely mis-plans a reference-relevant shape
@@ -159,21 +158,5 @@ object GraftExtensions {
     val k = args(3).eval().asInstanceOf[Number].intValue()
     TopKPerKeyNode(keys, order, k,
       UnresolvedRelation(Seq(str(args(0)))))
-  }
-
-  /** Register the engine functions + planner strategy on an
-    * already-built session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(ident, info, builder)
-    }
-    tableFunctions.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry
-        .registerFunction(ident, info, builder)
-    }
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
   }
 }

@@ -30,8 +30,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * the bucket — linear, AQE-splittable. The rule leaves joins that
   * already have an equi conjunct untouched (they plan fine, and that
   * guard also makes the rewrite a fixed point: its own output contains
-  * an equi key). Enabled via [[GraftExtensions]] or
-  * `spark.experimental.extraOptimizations`.
+  * an equi key). Installed on every graft session through
+  * [[GraftExtensions]]; `spark.sql.optimizer.excludedRules=
+  * graft.plans.IntervalJoinRewrite` turns it off for a session.
   */
 object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -72,11 +72,10 @@ object TopKPerKey {
   }
 
   /** Q56 — top-5 events per event_type by value (total tiebreak on
-    * event_id), through the custom bounded-heap plan node. Requires the
-    * [[GraftExtensions]] strategy on the session. */
+    * event_id), through the custom bounded-heap plan node (planned by
+    * the [[GraftExtensions]] strategy every graft session carries). */
   def q56(t: graft.Tables): DataFrame = {
     import org.apache.spark.sql.functions._
-    GraftExtensions.register(t.spark)
     topK(t.events.select("event_type", "event_id", "user_id", "value"),
         Seq("event_type"), Seq(col("value").desc, col("event_id")), k = 5)
       .select(col("event_type"), col("event_id"), col("user_id"),
@@ -90,7 +89,6 @@ object TopKPerKey {
     * exactly as the Column API path does — one operator, two surfaces.
     * k=3 (vs q56's 5) so the two gates exercise distinct outputs. */
   def q76(t: graft.Tables): DataFrame = {
-    GraftExtensions.register(t.spark)
     t.events.createOrReplaceTempView("graft_q76_events")
     t.spark.sql(
       """SELECT event_type, event_id, user_id, ROUND(value, 4) AS value

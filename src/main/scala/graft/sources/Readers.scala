@@ -122,11 +122,6 @@ object Readers {
     spark.read.parquet(path).as[SitelinkPageviewsEntry]
   }
 
-  /** S4 — SQL source over a registered view/catalog table: the
-    * warehouse-extraction shape (reference DataGatherer.scala:68-74),
-    * with partition-pruning predicates expected in the WHERE clause. */
-  def fromSql(spark: SparkSession, sql: String): DataFrame = spark.sql(sql)
-
   /** JSON-lines source (one object per line — the interchange format
     * LLM-corpus dumps actually ship as). Schema is REQUIRED: schema
     * inference reads the whole input twice at warehouse scale; with a

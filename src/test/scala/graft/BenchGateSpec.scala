@@ -125,4 +125,28 @@ class BenchGateSpec extends AnyFunSuite {
     assert(BenchGate.loadQueryBaseline("/nonexistent/gate.json").isEmpty)
     assert(BenchGate.loadStageBudgets("/nonexistent/gate.json").isEmpty)
   }
+
+  test("jsonString escapes quote, backslash and every control char, " +
+    "and the result parses back to the original string") {
+    val raw = "a\tb\rc\"d\\e\u0001f\ng"
+    val lit = BenchGate.jsonString(raw)
+    assert(lit == "\"a\\tb\\rc\\\"d\\\\e\\u0001f\\ng\"", lit)
+    assert(!lit.exists(_ < ' '), lit)
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(lit).asText()
+    assert(back == raw)
+  }
+
+  test("errorLine records the first informative line, falls back to " +
+    "the exception class on an empty message, and caps at 200 chars") {
+    assert(BenchGate.errorLine(new RuntimeException("")) ==
+      "java.lang.RuntimeException")
+    assert(BenchGate.errorLine(new IllegalStateException(null: String)) ==
+      "java.lang.IllegalStateException")
+    assert(BenchGate.errorLine(
+      new RuntimeException("\n  \n[UNRESOLVED_COLUMN] x\nplan...")) ==
+      "[UNRESOLVED_COLUMN] x")
+    assert(BenchGate.errorLine(new RuntimeException("y" * 500)) ==
+      "y" * 200)
+  }
 }

@@ -24,18 +24,11 @@ class HiveCatalogSpec extends AnyFunSuite {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("HiveCatalogSpec")
+    Sessions.builder("HiveCatalogSpec", Some("local[4]"), 4)
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
       .config("spark.hadoop.javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
   }

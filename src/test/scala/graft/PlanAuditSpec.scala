@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Plan-audit gate (SURVEY §4.3), wired into `sbt test` so a new query
-  * cannot land with a single-task scale hazard unnoticed (previously
-  * `AuditAll` was a manual main). AQE is disabled for the audit so the
-  * STATIC physical plan is complete and no query needs executing —
-  * auditing all ~155 declared queries stays cheap.
+  * cannot land with a single-task scale hazard unnoticed. AQE is
+  * disabled for the audit so the STATIC physical plan is complete and
+  * no query needs executing — auditing all ~155 declared queries stays
+  * cheap.
   */
 class PlanAuditSpec extends SparkSpec {
   import spark.implicits._

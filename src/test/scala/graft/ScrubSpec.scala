@@ -136,8 +136,6 @@ class ScrubSpec extends SparkSpec {
       .select(nfc_normalize(col("text")))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), plan)
-    // SQL surface registered by GraftExtensions.register
-    graft.plans.GraftExtensions.register(spark)
     assert(spark.sql("SELECT nfc_normalize('café')").head()
       .getString(0) == "café")
   }
@@ -304,7 +302,6 @@ class ScrubSpec extends SparkSpec {
 
   test("the hygiene suite is SQL-callable and the SQL surface equals " +
     "the Column API row-for-row") {
-    graft.plans.GraftExtensions.register(spark)
     tables.documents.limit(50).createOrReplaceTempView("docs_sql")
     // html_strip
     val viaSql = spark.sql(

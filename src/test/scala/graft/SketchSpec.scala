@@ -348,7 +348,6 @@ class SketchSpec extends SparkSpec {
   test("the sketch suite is SQL-callable: a pure-SQL KLL build+merge+" +
     "read pipeline keeps exact counts and bounded ranks, and a " +
     "pure-SQL theta overlap equals the exact matrix in exact mode") {
-    graft.plans.GraftExtensions.register(spark)
     events.createOrReplaceTempView("events_sql")
     val exactN = events.filter(col("value").isNotNull)
       .groupBy("event_type").agg(count(lit(1)).as("n"))

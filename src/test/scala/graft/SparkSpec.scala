@@ -3,20 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared ScalaTest base: one local SparkSession per suite. */
+/** Shared ScalaTest base: one local SparkSession per suite, on the
+  * engine's own bootstrap ([[Sessions.builder]]) so the suite runs the
+  * posture that ships. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.builder(getClass.getSimpleName, Some("local[4]"), 4)
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
   lazy val tables: Tables = Tables(spark, sfDir)

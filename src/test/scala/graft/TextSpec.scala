@@ -908,8 +908,6 @@ class TextSpec extends SparkSpec {
     assert(cr(1L).getAs[Int]("repetitive_flag") == 1)
     assert(cr(2L).getAs[Int]("repetitive_flag") == 0)
 
-    // SQL surface registered by GraftExtensions.register
-    graft.plans.GraftExtensions.register(spark)
     val sqlLen = spark.sql(
       "SELECT deflate_len('abababababababab') AS l").head().getInt(0)
     assert(sqlLen == graft.functions.CompressionFunctions

@@ -1,14 +1,12 @@
 package graft
 
-import graft.plans.{GraftExtensions, TopKPerKey, TopKPerKeyExec}
+import graft.plans.{TopKPerKey, TopKPerKeyExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Custom whole-operator plan node (logical + strategy + physical):
   * per-key bounded-heap top-k vs the window row_number reference. */
 class TopKPerKeySpec extends SparkSpec {
-
-  GraftExtensions.register(spark)
 
   private lazy val events = tables.events
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 class VectorExprSpec extends SparkSpec {
@@ -42,7 +41,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("SQL registration: SELECT vec_dot(...) works") {
-    GraftExtensions.register(spark)
     vecs.createOrReplaceTempView("vecs_view")
     val n = spark.sql(
       """SELECT a.vec_id, vec_dot(a.v, b.v) AS d

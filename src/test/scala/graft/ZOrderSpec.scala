@@ -47,7 +47,6 @@ class ZOrderSpec extends SparkSpec {
 
   test("interleave_bits16 is registered as a SQL function, is null-" +
     "safe, and stays inside whole-stage codegen") {
-    graft.plans.GraftExtensions.register(spark)
     assert(spark.sql("SELECT interleave_bits16(3L, 5L)").head().getLong(0)
       == 39L)
     val nulls = spark.sql(
@@ -67,7 +66,6 @@ class ZOrderSpec extends SparkSpec {
   test("interleave_bits at 31 bits matches the bit-loop reference, " +
     "and Writers.zValueN's 2-equal-budget delegation is bit-identical " +
     "to the general fold's documented packing") {
-    graft.plans.GraftExtensions.register(spark)
     val sweep = (0 until 300).map { i =>
       ((i * 2654435761L) & 0x7fffffffL, (i * 40503L * 65537L) & 0x7fffffffL)
     }
