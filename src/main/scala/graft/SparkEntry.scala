@@ -113,8 +113,9 @@ object SparkEntry {
     "q80_value_histogram" -> q(Relational.q80),
     "q81_streaks" -> q(Relational.q81),
     "q82_activity_profile" -> q(Relational.q82),
-    // rows-only gate: the coarse quantizer is seeded KMeans with no
-    // DuckDB twin; recall vs brute force is asserted in SimilaritySpec
+    // rows-only gate: the coarse quantizer is Lloyd's k-means on a
+    // hash-chosen sample (Similarity.ivfCentroids) with no DuckDB twin;
+    // recall vs brute force is asserted in SimilaritySpec
     "q83_ivf_topk" -> q(t => Similarity.ivfCosineTopK(t.embeddings)),
     "q84_ffill_resample" -> q(Relational.q84),
     "q85_canonical_docs" -> q(t => Dedup.canonicalDocs(t.documents)),
@@ -204,8 +205,8 @@ object SparkEntry {
       q(t => TextAnalysis.attritionFunnel(t.documents)),
     "q164_script_mix" -> q(t => TextAnalysis.scriptMix(t.documents)),
     "q165_k_anonymity" -> q(Constraints.q165),
-    // rows-only (q83 precedent): seeded KMeans coarse quantizer has
-    // no DuckDB twin; recall asserted in SimilaritySpec
+    // rows-only (q83 precedent): the sample-trained coarse quantizer
+    // has no DuckDB twin; recall asserted in SimilaritySpec
     "q166_ivf_sq8_ann" -> q(t => Similarity.ivfSq8TopK(t.embeddings)),
     // rows-only: PCA rotation (iterative Jacobi) ahead of SQ8; PcaSpec
     // measures recall on planted low-rank data
@@ -248,12 +249,13 @@ object SparkEntry {
         .unionByName(spark.read.parquet(s"$out/batch_1"))
         .orderBy("doc_id")
     }),
-    // q183: the persisted incremental ANN index (fifth ledger) — init
+    // q180: the persisted incremental ANN index (fifth ledger) — init
     // on 80% of the embeddings, absorb the rest as an increment (no
     // corpus rescan), serve quantized top-k from committed state only.
-    // Rows-only (seeded KMeans, q83/q166 precedent); IndexLedgerSpec
-    // gates recall ≥ the q166 bar, increment-composition parity,
-    // exactly-once replay, and the no-corpus-rescan scan set.
+    // Rows-only (sample-trained quantizer, q83/q166 precedent);
+    // IndexLedgerSpec gates recall ≥ the q166 bar, increment-
+    // composition parity, exactly-once replay, and the no-corpus-rescan
+    // scan set.
     "q180_index_ledger_ann" -> ((spark: SparkSession, dir: String) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables(spark, dir).embeddings

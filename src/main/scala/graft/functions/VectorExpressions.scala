@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expression for the similarity hot path (SURVEY
   * §7.3's "Expression for fused vector ops"): a dot product over
@@ -71,6 +71,95 @@ case class VectorDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VectorDot =
     copy(left = newLeft, right = newRight)
+}
+
+/** Native symmetric per-vector int8 scalar quantization (the SQ8
+  * codes of [[graft.operators.Similarity.sq8Codes]]): one pass for
+  * m = max(max|x_i|, 1e-12), one pass writing
+  * `floor(x_i / (m / 127) + 0.5)` as a long.
+  *
+  * Why not `transform` + `array_max`? As a column formula the
+  * per-vector scale sits inside the per-element lambda, so it is
+  * re-derived for every element: O(d²) interpreted lambda steps per
+  * vector instead of O(d). This is the formula's arithmetic step for
+  * step — NaN ranks above every value (as in `array_max`/`greatest`),
+  * null elements are skipped by the max and code to null, and
+  * `(long) Math.floor` is Spark's `floor` on a double — so the codes
+  * are bit-identical (VectorExprSpec pins both eval paths against the
+  * formula).
+  *
+  * Null semantics: null array → null result (nullSafeEval).
+  */
+case class Sq8Codes(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an ARRAY<DOUBLE> input, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = child.dataType match {
+    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
+    case _ => ArrayType(LongType)
+  }
+
+  override def prettyName: String = "sq8_codes"
+
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val n = x.numElements()
+    var m = 1e-12
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i)) {
+        val v = math.abs(x.getDouble(i))
+        if (v > m || v != v) m = v
+      }
+      i += 1
+    }
+    val scale = m / 127.0
+    val out = ArrayData.allocateArrayData(8, n, " sq8_codes")
+    i = 0
+    while (i < n) {
+      if (x.isNullAt(i)) out.setNullAt(i)
+      else out.setLong(i, math.floor(x.getDouble(i) / scale + 0.5).toLong)
+      i += 1
+    }
+    out
+  }
+
+  override protected def doGenCode(
+      ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val i = ctx.freshName("i")
+      val n = ctx.freshName("n")
+      val m = ctx.freshName("m")
+      val v = ctx.freshName("v")
+      val scale = ctx.freshName("scale")
+      val out = ctx.freshName("out")
+      val arrayData = classOf[ArrayData].getName
+      s"""
+         |int $n = $a.numElements();
+         |double $m = 1e-12;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if (!$a.isNullAt($i)) {
+         |    double $v = java.lang.Math.abs($a.getDouble($i));
+         |    if ($v > $m || $v != $v) $m = $v;
+         |  }
+         |}
+         |double $scale = $m / 127.0;
+         |$arrayData $out = $arrayData.allocateArrayData(8, $n, " sq8_codes");
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i)) $out.setNullAt($i);
+         |  else $out.setLong($i,
+         |    (long) java.lang.Math.floor($a.getDouble($i) / $scale + 0.5));
+         |}
+         |${ev.value} = $out;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Sq8Codes =
+    copy(child = newChild)
 }
 
 /** Column-API surface for the native vector expressions. */

@@ -322,9 +322,10 @@ object Similarity {
   }
 
   /** IVF (inverted-file) approximate NN — the other standard ANN scale
-    * path besides LSH: a seeded k-means coarse quantizer partitions the
-    * corpus into `nlist` cells; each query probes its `nprobe` nearest
-    * cells and exact cosine re-ranks only those cells' vectors.
+    * path besides LSH: a sample-trained coarse quantizer
+    * ([[ivfCentroids]]) partitions the corpus into `nlist` cells; each
+    * query probes its `nprobe` nearest cells and exact cosine re-ranks
+    * only those cells' vectors.
     *
     * Plan shape at scale: centroids are tiny (nlist × dim, broadcast);
     * cell assignment is one map-side pass; the probe join is an
@@ -334,28 +335,14 @@ object Similarity {
   def ivfCosineTopK(
       embeddings: DataFrame, dim: Int = 64, queryMaxId: Long = 10,
       k: Int = 5, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
     val vecs = embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("n", norm(col("v")))
-      .withColumn("features", array_to_vector(col("v")))
-      .cache()
-    val km = new KMeans().setK(nlist).setSeed(42L)
-      .setFeaturesCol("features").setPredictionCol("cell")
-    val model = km.fit(vecs)
-    // centroid list as literal arrays: tiny, recomputable on any executor
-    val centroids = model.clusterCenters.zipWithIndex.map {
-      case (c, i) => (i, c.toArray)
-    }
-    val assigned = model.transform(vecs)
-      .select(col("vec_id"), col("v"), col("n"), col("cell"))
+    val centDf = ivfCentroids(vecs, "vec_id", "v", nlist)
+    val assigned = ivfAssign(vecs, centDf, "vec_id", "v")
     // query-side: distance to every centroid (nlist is small), keep the
     // nprobe nearest cells
-    val centDf = spark.createDataFrame(centroids.toIndexedSeq).toDF("cell", "cv")
-    val q = assigned.filter(col("vec_id") < queryMaxId)
+    val q = vecs.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("n").as("qn"))
     val qCells = q.crossJoin(broadcast(centDf))
       .select(col("qid"), col("qv"), col("qn"), col("cell"),
@@ -364,35 +351,81 @@ object Similarity {
         Window.partitionBy("qid").orderBy(col("sim").desc, col("cell"))))
       .filter(col("rk") <= nprobe)
       .select("qid", "qv", "qn", "cell")
-    val cand = assigned.as("c")
-      .join(broadcast(qCells),
-        col("c.cell") === qCells("cell") && col("c.vec_id") =!= col("qid"))
-      .select(col("qid"), col("c.vec_id").as("cid"),
-        round(dot(col("qv"), col("c.v")) / (col("qn") * col("c.n")), 6)
+    val cand = assigned
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn"),
+        col("cell"))
+      .join(broadcast(qCells), Seq("cell"))
+      .filter(col("cid") =!= col("qid"))
+      .select(col("qid"), col("cid"),
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
           .as("cos"))
       .distinct()
     val w = Window.partitionBy("qid")
       .orderBy(col("cos").desc, col("cid").asc)
-    val result = cand.withColumn("rk", row_number().over(w))
+    cand.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("qid"), col("cid"), col("cos"),
         col("rk").cast("long").as("rk"))
       .orderBy("qid", "rk")
-      // the cache is required while KMeans iterates and the probe join
-      // runs, but must not outlive the call: eager-materialize the
-      // small top-k result, then release
-      .localCheckpoint(eager = true)
-    vecs.unpersist()
-    result
   }
 
-  /** Deterministic local Lloyd's k-means for PQ codebook training:
-    * centroids initialized at evenly spaced sample points (no RNG —
-    * reruns are bit-identical), empty clusters keep their previous
-    * centroid. Runs on a BOUNDED driver-side sample by design — the
-    * FAISS convention: codebooks train on ~10⁴–10⁵ sampled vectors
-    * regardless of corpus size, while encoding/scoring stay fully
-    * distributed. */
+  /** Training rows per IVF cell: the FAISS train-on-sample convention
+    * (its k-means warns below 39 and samples down above 256 points per
+    * centroid). */
+  private val IvfSamplePerCell = 256
+
+  /** The IVF coarse quantizer of q83, q166 and the [[graft.sources
+    * .IndexLedger]] build: Lloyd's k-means ([[kmeansLocal]], 20
+    * iterations) on the driver over a bounded sample of at most
+    * 256·nlist rows. The sample is the first rows in
+    * (`xxhash64(id)`, id) order — ONE collect job whose result does
+    * not depend on partitioning, so the centroids are deterministic
+    * and independent of corpus size beyond the sample. k clamps to the
+    * sample size (the [[pqCodebooks]] rule), so every centroid seeds
+    * from a distinct sample point. Returns the centroid frame
+    * (cell, cv, c2) with c2 = ||cv||², the form [[ivfAssign]] reads. */
+  def ivfCentroids(
+      frame: DataFrame, idCol: String, vecCol: String,
+      nlist: Int): DataFrame = {
+    val spark = frame.sparkSession
+    import spark.implicits._
+    val sample = frame
+      .orderBy(xxhash64(col(idCol)), col(idCol))
+      .limit(IvfSamplePerCell * nlist)
+      .select(col(vecCol))
+      .collect().map(_.getSeq[Double](0).toArray)
+    require(sample.nonEmpty,
+      "ivfCentroids: input is empty — cannot train a coarse quantizer")
+    kmeansLocal(sample, math.min(nlist, sample.length), iters = 20)
+      .zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cell", "cv")
+      .withColumn("c2", dot(col("cv"), col("cv")))
+  }
+
+  /** (id, v, ...) → (id, v, ..., cell, cv): nearest centroid of an
+    * [[ivfCentroids]] frame by Euclidean argmin — rank by
+    * (c2 − 2·v·c), the ||v||²-free form, tie-broken by cell id so
+    * assignment is deterministic. One narrow map with a kilobyte
+    * broadcast; no shuffle beyond the window's id hash. Keeps the
+    * matched centroid `cv` (the drift statistic reads it). */
+  def ivfAssign(
+      vs: DataFrame, cent: DataFrame, idCol: String,
+      vecCol: String): DataFrame = {
+    val scored = vs.crossJoin(broadcast(cent))
+      .withColumn("__ad", col("c2") - lit(2.0) * dot(col(vecCol), col("cv")))
+    val w = Window.partitionBy(idCol).orderBy(col("__ad"), col("cell"))
+    scored.withColumn("__ar", row_number().over(w))
+      .filter(col("__ar") === 1)
+      .drop("__ad", "__ar", "c2")
+  }
+
+  /** Deterministic local Lloyd's k-means for PQ codebooks and the IVF
+    * coarse quantizer: centroids initialized at evenly spaced sample
+    * points (no RNG — reruns are bit-identical), empty clusters keep
+    * their previous centroid. Runs on a BOUNDED driver-side sample by
+    * design — the FAISS convention: quantizers train on ~10⁴–10⁵
+    * sampled vectors regardless of corpus size, while encoding/scoring
+    * stay fully distributed. */
   private def kmeansLocal(
       pts: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
     val d = pts.head.length
@@ -743,12 +776,11 @@ object Similarity {
     *
     * `floor(x + 0.5)` rather than `round`: engines disagree on
     * negative-half rounding (HALF_UP vs away-from-zero); floor+0.5 is
-    * one deterministic rule everywhere. */
-  def sq8Codes(v: Column): Column = {
-    val scale = greatest(array_max(transform(v, x => abs(x))),
-      lit(1e-12)) / lit(127.0)
-    transform(v, x => floor(x / scale + lit(0.5)).cast("long"))
-  }
+    * one deterministic rule everywhere. The native
+    * [[graft.functions.Sq8Codes]] kernel computes the scale once per
+    * vector (O(d)); codes are bit-identical to the column formula. */
+  def sq8Codes(v: Column): Column = org.apache.spark.sql.GraftBridge.column(
+    graft.functions.Sq8Codes(org.apache.spark.sql.GraftBridge.expression(v)))
 
   /** q162 — SQ8 cosine top-k: same contract as [[cosineTopK]] but
     * scored on int8 codes. Scale: identical plan shape to q26
@@ -800,14 +832,12 @@ object Similarity {
     * finish rescores the k·`oversample` quantized survivors with
     * exact float cosine so the output scores carry no quantization
     * error — only the CANDIDATE CHOICE is approximate (the FAISS
-    * IVF+SQ design). Seeded KMeans ⇒ rows-only gate (q83 precedent);
-    * SimilaritySpec measures recall vs brute force. */
+    * IVF+SQ design). The coarse quantizer is the sample-trained
+    * [[ivfCentroids]] ⇒ rows-only gate (q83 precedent); SimilaritySpec
+    * measures recall vs brute force. */
   def ivfSq8TopK(
       embeddings: DataFrame, queryMaxId: Long = 10, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, oversample: Int = 4): DataFrame = {
-    val spark = embeddings.sparkSession
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     import graft.functions.VectorFunctions.vec_dot
 
     val vecs = embeddings.select(
@@ -816,18 +846,9 @@ object Similarity {
       .withColumn("qc", sq8Codes(col("v")).cast("array<double>"))
       .withColumn("d2", vec_dot(col("qc"), col("qc")))
       .filter(col("d2") > 0.0)
-      .withColumn("features", array_to_vector(col("v")))
-      .cache()
-    val model = new KMeans().setK(nlist).setSeed(42L)
-      .setFeaturesCol("features").setPredictionCol("cell").fit(vecs)
-    val assigned = model.transform(vecs)
-      .select(col("vec_id"), col("v"), col("n"), col("qc"),
-        col("d2"), col("cell"))
-    val centDf = spark.createDataFrame(
-      model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray) }.toIndexedSeq)
-      .toDF("cell", "cv")
-    val q = assigned.filter(col("vec_id") < queryMaxId)
+    val centDf = ivfCentroids(vecs, "vec_id", "v", nlist)
+    val assigned = ivfAssign(vecs, centDf, "vec_id", "v")
+    val q = vecs.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("n").as("qn"), col("qc").as("qqc"), col("d2").as("qd2"))
     val qCells = q.crossJoin(broadcast(centDf))
@@ -839,14 +860,15 @@ object Similarity {
       .filter(col("pr") <= nprobe)
       .select("qid", "qv", "qn", "qqc", "qd2", "cell")
     // stage 1: quantized scoring over the probed cells only
-    val cand = assigned.as("c")
-      .join(broadcast(qCells),
-        col("c.cell") === qCells("cell") && col("c.vec_id") =!= col("qid"))
-      .select(col("qid"), col("qv"), col("qn"),
-        col("c.vec_id").as("cid"), col("c.v").as("cv2"),
-        col("c.n").as("cn"),
-        (vec_dot(col("qqc"), col("c.qc")) /
-          (sqrt(col("qd2")) * sqrt(col("c.d2")))).as("approx"))
+    val cand = assigned
+      .select(col("vec_id").as("cid"), col("v").as("cv2"),
+        col("n").as("cn"), col("qc"), col("d2"), col("cell"))
+      .join(broadcast(qCells), Seq("cell"))
+      .filter(col("cid") =!= col("qid"))
+      .select(col("qid"), col("qv"), col("qn"), col("cid"), col("cv2"),
+        col("cn"),
+        (vec_dot(col("qqc"), col("qc")) /
+          (sqrt(col("qd2")) * sqrt(col("d2")))).as("approx"))
       .distinct()
     val wApprox = Window.partitionBy("qid")
       .orderBy(col("approx").desc, col("cid").asc)
@@ -855,7 +877,7 @@ object Similarity {
     // stage 2: exact rescore of the shortlist, final top-k
     val wExact = Window.partitionBy("qid")
       .orderBy(col("cos").desc, col("cid").asc)
-    val result = shortlist
+    shortlist
       .select(col("qid"), col("cid"),
         round(dot(col("qv"), col("cv2")) / (col("qn") * col("cn")), 6)
           .as("cos"))
@@ -864,9 +886,6 @@ object Similarity {
       .select(col("qid"), col("cid"), col("cos"),
         col("rk").cast("long").as("rk"))
       .orderBy("qid", "rk")
-      .localCheckpoint(eager = true)
-    vecs.unpersist()
-    result
   }
 
   /** q171 — PCA-rotated SQ8 ANN: the FAISS PCAR/OPQ-lite

@@ -58,7 +58,7 @@ import org.apache.spark.sql.functions._
   * centroid collect. */
 object IndexLedger {
 
-  import graft.operators.Similarity.{asDouble, sq8Codes}
+  import graft.operators.Similarity.{asDouble, ivfAssign, ivfCentroids, sq8Codes}
   import graft.functions.VectorFunctions.vec_dot
 
   private def centroidsDir(statePath: String, version: Long) =
@@ -92,62 +92,51 @@ object IndexLedger {
       throw new IllegalStateException(
         s"no index ledger at $statePath — call init first")))
 
+  /** The manifest in force: CURRENT for a negative version, else the
+    * as-of one. */
+  private def ixAt(statePath: String, asOfVersion: Long): IxManifest =
+    if (asOfVersion < 0) readIx(statePath)
+    else parse(DedupLedger.readManifestAt(statePath, asOfVersion))
+
   /** Committed centroid frame (cell, cv, c2) — CURRENT or as-of. */
   def centroids(
       spark: SparkSession, statePath: String,
-      asOfVersion: Long = -1L): DataFrame = {
-    val ix =
-      if (asOfVersion < 0) readIx(statePath)
-      else parse(DedupLedger.readManifestAt(statePath, asOfVersion))
-    spark.read.parquet(centroidsDir(statePath, ix.centroidVersion))
-  }
+      asOfVersion: Long = -1L): DataFrame =
+    spark.read.parquet(centroidsDir(statePath,
+      ixAt(statePath, asOfVersion).centroidVersion))
 
   /** Committed per-vector state (vec_id, cell, qc, d2) — CURRENT or
     * as-of. qc reads back as array<tinyint>; [[topK]] casts for the
     * exact-integer double dot. */
   def codes(
       spark: SparkSession, statePath: String,
-      asOfVersion: Long = -1L): DataFrame = {
-    val ix =
-      if (asOfVersion < 0) readIx(statePath)
-      else parse(DedupLedger.readManifestAt(statePath, asOfVersion))
-    spark.read.parquet(
-      ix.codeParts.map(codesDir(statePath, _)): _*)
-  }
+      asOfVersion: Long = -1L): DataFrame =
+    spark.read.parquet(ixAt(statePath, asOfVersion).codeParts
+      .map(codesDir(statePath, _)): _*)
 
-  /** (id, v) → (id, cell): nearest committed centroid by Euclidean
-    * argmin — rank by (c2 − 2·v·c), the ||v||²-free form, tie-broken
-    * by cell id so assignment is deterministic. One narrow map with a
-    * kilobyte broadcast; no shuffle beyond the window's id hash. */
-  private def assign(vs: DataFrame, cent: DataFrame): DataFrame = {
-    val scored = vs.crossJoin(broadcast(cent))
-      .withColumn("__ad", col("c2") - lit(2.0) * vec_dot(col("__v"), col("cv")))
-    val w = Window.partitionBy("__aid").orderBy(col("__ad"), col("cell"))
-    scored.withColumn("__ar", row_number().over(w))
-      .filter(col("__ar") === 1)
-      .drop("__ad", "__ar", "c2")
-  }
+  /** (__aid, __v, ...) → + (cell, cv): nearest committed centroid —
+    * the shared [[graft.operators.Similarity.ivfAssign]] argmin. */
+  private def assign(vs: DataFrame, cent: DataFrame): DataFrame =
+    ivfAssign(vs, cent, "__aid", "__v")
 
-  /** Mean angular distortion 1 − cos(v, centroid(v)) of an assigned
+  /** Mean angular distortion 1 − cos(v, centroid(v)) over an assigned
     * frame — the drift statistic. */
-  private def distortionOf(assigned: DataFrame): Double =
-    assigned
-      .select((lit(1.0) - vec_dot(col("__v"), col("cv")) /
-        (sqrt(vec_dot(col("__v"), col("__v"))) *
-          sqrt(vec_dot(col("cv"), col("cv"))))).as("__e"))
-      .agg(avg("__e")).head().getDouble(0)
+  private val meanDistortion =
+    avg(lit(1.0) - vec_dot(col("__v"), col("cv")) /
+      (sqrt(vec_dot(col("__v"), col("__v"))) *
+        sqrt(vec_dot(col("cv"), col("cv")))))
 
-  /** The same statistic as [[distortionOf]], attached as an observed
-    * metric so the baseline falls out of the frame's ONE write job
-    * (init/refresh) instead of a second aggregate pass. Returns the
-    * frame to write and the pending observation. */
+  private def distortionOf(assigned: DataFrame): Double =
+    assigned.agg(meanDistortion).head().getDouble(0)
+
+  /** [[meanDistortion]] attached as an observed metric, so the
+    * baseline falls out of the frame's ONE write job (init/refresh)
+    * instead of a second aggregate pass. Returns the frame to write
+    * and the pending observation. */
   private def observedDistortion(
       assigned: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation()
-    (assigned.observe(obs,
-      avg(lit(1.0) - vec_dot(col("__v"), col("cv")) /
-        (sqrt(vec_dot(col("__v"), col("__v"))) *
-          sqrt(vec_dot(col("cv"), col("cv"))))).as("base")), obs)
+    (assigned.observe(obs, meanDistortion.as("base")), obs)
   }
 
   /** Normalize an embeddings frame to (__aid, __v) with zero vectors
@@ -167,51 +156,40 @@ object IndexLedger {
       .write.mode("overwrite").parquet(codesDir(statePath, part))
 
   /** Build the index from the seed corpus — the ONE full embedding
-    * scan this state requires (KMeans is seeded, so the build is
-    * deterministic). Refuses to overwrite existing state. */
+    * scan this state requires (the coarse quantizer trains on a
+    * deterministic sample, so the build is deterministic). Refuses to
+    * overwrite existing state. */
   def init(
       spark: SparkSession, statePath: String, embeddings: DataFrame,
       nlist: Int = 16): Unit = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     require(DedupLedger.readManifest(statePath).isEmpty,
       s"index ledger already initialized at $statePath")
-    val vecs = prep(embeddings)
-      .withColumn("features", array_to_vector(col("__v")))
-      .cache()
-    val model = new KMeans().setK(nlist).setSeed(42L)
-      .setFeaturesCol("features").setPredictionCol("__cell").fit(vecs)
-    val cent = centroidFrame(spark,
-      model.clusterCenters.map(_.toArray))
-    cent.write.mode("overwrite").parquet(centroidsDir(statePath, 1L))
-    val persistedCent = spark.read.parquet(centroidsDir(statePath, 1L))
-    // assignment goes through the SAME persisted-centroid expression
-    // path absorb uses — model.transform could tie-break differently,
-    // and init==absorb assignment parity is the composition contract
-    // assign() keeps the matched cv column, so the float-vector
-    // distortion baseline (same statistic driftRatio later computes
-    // on batches) falls out of the assigned frame directly
-    // round-16 (guide §5): the float-vector distortion baseline is
-    // OBSERVED during the one writeCodes job instead of persisting the
-    // assigned frame and paying a second aggregate pass over it —
-    // same avg over the same matched-cv rows, one job, no cache entry
-    val (assigned, baseObs) =
-      observedDistortion(assign(vecs.drop("features"), persistedCent))
-    writeCodes(spark, statePath, DedupLedger.partName(1L), assigned)
-    val base = scala.concurrent.Await.result(baseObs.future,
-      scala.concurrent.duration.Duration(300, "s")).getDouble(0)
-    vecs.unpersist()
-    DedupLedger.writeManifest(statePath, manifestOf(IxManifest(
-      1L, Seq(DedupLedger.partName(1L)), 1L, base, None)))
+    build(spark, statePath, prep(embeddings), nlist,
+      IxManifest(1L, Seq(DedupLedger.partName(1L)), 1L, 0.0, None))
   }
 
-  private def centroidFrame(
-      spark: SparkSession, centers: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    centers.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "cv")
-      .withColumn("c2", vec_dot(col("cv"), col("cv")))
+  /** The build body of [[init]] and [[refresh]]: fit the coarse
+    * quantizer on a sample of `vecs` (__aid, __v, __qc, __d2), write
+    * the centroids, assign every vector against the PERSISTED
+    * centroids (the same expression path [[absorb]] uses — init ==
+    * absorb assignment parity is the composition contract), write the
+    * one code part with the float-vector distortion baseline observed
+    * during that write, then commit `ix` with that baseline. */
+  private def build(
+      spark: SparkSession, statePath: String, vecs: DataFrame, nlist: Int,
+      ix: IxManifest): Unit = {
+    val fit = ivfCentroids(vecs, "__aid", "__v", nlist)
+    fit.write.mode("overwrite")
+      .parquet(centroidsDir(statePath, ix.centroidVersion))
+    // the schema is known: no footer-inference job on the read back
+    val cent = spark.read.schema(fit.schema)
+      .parquet(centroidsDir(statePath, ix.centroidVersion))
+    val (assigned, baseObs) = observedDistortion(assign(vecs, cent))
+    writeCodes(spark, statePath, ix.codeParts.head, assigned)
+    val base = scala.concurrent.Await.result(baseObs.future,
+      scala.concurrent.duration.Duration(300, "s")).getDouble(0)
+    DedupLedger.writeManifest(statePath,
+      manifestOf(ix.copy(baseDistortion = base)))
   }
 
   /** Derived-but-uncommitted increment state. */
@@ -348,42 +326,22 @@ object IndexLedger {
 
   /** Re-fit the coarse quantizer FROM COMMITTED CODES: decode each
     * vector's direction (qc/|qc| — SQ8 is symmetric per-vector, so
-    * direction survives to ~1/127), seeded KMeans over the unit
-    * sphere, reassign every committed vector, write new centroids +
-    * ONE compacted code part, commit one version. No corpus rescan —
+    * direction survives to ~1/127), train [[ivfCentroids]] over the
+    * unit sphere, reassign every committed vector, write new centroids
+    * + ONE compacted code part, commit one version. No corpus rescan —
     * the whole point of persisting codes. Distortion baseline resets
     * to the refreshed fit. */
   def refresh(
       spark: SparkSession, statePath: String, nlist: Int = 16): Unit = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     val ix = readIx(statePath)
     val decoded = codes(spark, statePath)
-      .select(col("vec_id").as("__aid"), col("qc"), col("d2"))
-      .withColumn("__v", transform(col("qc").cast("array<double>"),
-        x => x / sqrt(col("d2"))))
-      .withColumn("__qc", col("qc").cast("array<double>"))
-      .withColumn("__d2", col("d2"))
-      .drop("qc", "d2")
-      .withColumn("features", array_to_vector(col("__v")))
-      .cache()
-    val model = new KMeans().setK(nlist).setSeed(42L)
-      .setFeaturesCol("features").setPredictionCol("__cell")
-      .fit(decoded)
+      .select(col("vec_id").as("__aid"),
+        transform(col("qc").cast("array<double>"),
+          x => x / sqrt(col("d2"))).as("__v"),
+        col("qc").cast("array<double>").as("__qc"), col("d2").as("__d2"))
     val next = ix.version + 1
-    val cent = centroidFrame(spark, model.clusterCenters.map(_.toArray))
-    cent.write.mode("overwrite").parquet(centroidsDir(statePath, next))
-    val persistedCent = spark.read.parquet(centroidsDir(statePath, next))
-    // same one-job observe fusion as init (round-16)
-    val (assigned, baseObs) =
-      observedDistortion(assign(decoded.drop("features"), persistedCent))
-    writeCodes(spark, statePath, DedupLedger.partName(next), assigned)
-    val base = scala.concurrent.Await.result(baseObs.future,
-      scala.concurrent.duration.Duration(300, "s")).getDouble(0)
-    decoded.unpersist()
-    DedupLedger.writeManifest(statePath, manifestOf(IxManifest(
-      next, Seq(DedupLedger.partName(next)), next, base,
-      ix.lastBatchId)))
+    build(spark, statePath, decoded, nlist, IxManifest(
+      next, Seq(DedupLedger.partName(next)), next, 0.0, ix.lastBatchId))
   }
 
   /** Erasure for the per-vector index state (the [[DedupLedger

@@ -157,6 +157,10 @@ class PlanAuditSpec extends SparkSpec {
     "q77_sql_vector" -> "query batch (same serving-batch bound as q26)",
     "q162_sq8_ann" -> "query batch (same serving-batch bound as q26)",
     "q171_pca_sq8_ann" -> "query batch (same serving-batch bound as q26)",
+    "q83_ivf_topk" -> ("query batch × its nprobe probed cells (same " +
+      "serving-batch bound as q26)"),
+    "q166_ivf_sq8_ann" -> ("query batch × its nprobe probed cells (same " +
+      "serving-batch bound as q26)"),
     "q180_index_ledger_ann" ->
       "query batch of quantized codes (same serving-batch bound as q26)",
     "q186_retrieval_eval" ->
