@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persistent incremental ANN index — the fifth ledger. The q166
   * composed path ([[graft.operators.Similarity.ivfSq8TopK]]) rebuilds
@@ -36,10 +37,16 @@ import org.apache.spark.sql.functions._
   *  - [[topK]] serves from committed state only: broadcast the
   *    kilobyte centroid frame, probe `nprobe` cells, score int8 codes
   *    (`vec_dot` over exact-integer doubles — the q162 discipline),
-  *    take the k·oversample shortlist then the final k. The corpus is
-  *    not touched; scores are quantized cosines (exact rescore
-  *    remains a caller-side join of the k·oversample shortlist
-  *    against the float vectors, as in q166 stage 2).
+  *    keep each query's k·oversample best with the engine's
+  *    bounded-heap [[graft.plans.TopKPerKey]] (partial heap → one qid
+  *    exchange → final heap; the candidates are never sorted), rank
+  *    those survivors, then take the final k. Both frames are read
+  *    with the schema the ledger wrote and from ONE resolved
+  *    manifest, so a concurrent commit can never pair new codes with
+  *    old centroids. The corpus is not touched; scores are quantized
+  *    cosines (exact rescore remains a caller-side join of the
+  *    k·oversample shortlist against the float vectors, as in q166
+  *    stage 2).
   *  - [[refresh]] re-fits the coarse quantizer FROM COMMITTED CODES
   *    (unit-decoded directions — SQ8 preserves direction to ~1/127)
   *    when [[driftRatio]] says the centroids no longer fit the data;
@@ -54,12 +61,24 @@ import org.apache.spark.sql.functions._
   * 100 TB posture: per-increment work is O(|batch| · nlist) assign +
   * O(|batch| · d) code — a narrow map over the batch with a kilobyte
   * broadcast; queries touch `nprobe/nlist` of the code rows via the
-  * cell equi-join; nothing driver-side exceeds the `nlist`-row
-  * centroid collect. */
+  * cell equi-join, and each task keeps at most k·oversample
+  * candidates per query (the heap bound), so candidates are never
+  * shuffled or sorted in full; the k·|query batch| result is ordered
+  * inside one partition (a serving batch is bounded by the caller);
+  * nothing driver-side exceeds the `nlist`-row centroid collect. */
 object IndexLedger {
 
   import graft.operators.Similarity.{asDouble, ivfAssign, ivfCentroids, sq8Codes}
   import graft.functions.VectorFunctions.vec_dot
+  import graft.plans.TopKPerKey
+
+  /** The schemas of the two frames the ledger writes, declared on every
+    * read so that no read infers a footer (IndexLedgerSpec checks them
+    * against the written footers). */
+  private val CentroidSchema =
+    StructType.fromDDL("cell INT, cv ARRAY<DOUBLE>, c2 DOUBLE")
+  private val CodeSchema = StructType.fromDDL(
+    "vec_id BIGINT, cell INT, qc ARRAY<TINYINT>, d2 DOUBLE")
 
   private def centroidsDir(statePath: String, version: Long) =
     f"$statePath/centroids/v_$version%08d"
@@ -98,12 +117,23 @@ object IndexLedger {
     if (asOfVersion < 0) readIx(statePath)
     else parse(DedupLedger.readManifestAt(statePath, asOfVersion))
 
+  /** The centroid frame of one resolved manifest. */
+  private def readCentroids(
+      spark: SparkSession, statePath: String, ix: IxManifest): DataFrame =
+    spark.read.schema(CentroidSchema)
+      .parquet(centroidsDir(statePath, ix.centroidVersion))
+
+  /** The code frame of one resolved manifest. */
+  private def readCodes(
+      spark: SparkSession, statePath: String, ix: IxManifest): DataFrame =
+    spark.read.schema(CodeSchema)
+      .parquet(ix.codeParts.map(codesDir(statePath, _)): _*)
+
   /** Committed centroid frame (cell, cv, c2) — CURRENT or as-of. */
   def centroids(
       spark: SparkSession, statePath: String,
       asOfVersion: Long = -1L): DataFrame =
-    spark.read.parquet(centroidsDir(statePath,
-      ixAt(statePath, asOfVersion).centroidVersion))
+    readCentroids(spark, statePath, ixAt(statePath, asOfVersion))
 
   /** Committed per-vector state (vec_id, cell, qc, d2) — CURRENT or
     * as-of. qc reads back as array<tinyint>; [[topK]] casts for the
@@ -111,8 +141,7 @@ object IndexLedger {
   def codes(
       spark: SparkSession, statePath: String,
       asOfVersion: Long = -1L): DataFrame =
-    spark.read.parquet(ixAt(statePath, asOfVersion).codeParts
-      .map(codesDir(statePath, _)): _*)
+    readCodes(spark, statePath, ixAt(statePath, asOfVersion))
 
   /** (__aid, __v, ...) → + (cell, cv): nearest committed centroid —
     * the shared [[graft.operators.Similarity.ivfAssign]] argmin. */
@@ -151,7 +180,7 @@ object IndexLedger {
   private def writeCodes(
       spark: SparkSession, statePath: String, part: String,
       assigned: DataFrame): Unit =
-    assigned.select(col("__aid").as("vec_id"), col("cell"),
+    assigned.select(col("__aid").cast("long").as("vec_id"), col("cell"),
         col("__qc").cast("array<tinyint>").as("qc"), col("__d2").as("d2"))
       .write.mode("overwrite").parquet(codesDir(statePath, part))
 
@@ -178,12 +207,9 @@ object IndexLedger {
   private def build(
       spark: SparkSession, statePath: String, vecs: DataFrame, nlist: Int,
       ix: IxManifest): Unit = {
-    val fit = ivfCentroids(vecs, "__aid", "__v", nlist)
-    fit.write.mode("overwrite")
+    ivfCentroids(vecs, "__aid", "__v", nlist).write.mode("overwrite")
       .parquet(centroidsDir(statePath, ix.centroidVersion))
-    // the schema is known: no footer-inference job on the read back
-    val cent = spark.read.schema(fit.schema)
-      .parquet(centroidsDir(statePath, ix.centroidVersion))
+    val cent = readCentroids(spark, statePath, ix)
     val (assigned, baseObs) = observedDistortion(assign(vecs, cent))
     writeCodes(spark, statePath, ix.codeParts.head, assigned)
     val base = scala.concurrent.Await.result(baseObs.future,
@@ -199,9 +225,9 @@ object IndexLedger {
       spark: SparkSession, statePath: String,
       batch: DataFrame): Pending = {
     val ix = readIx(statePath)
-    val cent = spark.read.parquet(
-      centroidsDir(statePath, ix.centroidVersion))
-    val known = codes(spark, statePath).select(col("vec_id").as("__aid"))
+    val cent = readCentroids(spark, statePath, ix)
+    val known = readCodes(spark, statePath, ix)
+      .select(col("vec_id").as("__aid"))
     val fresh = prep(batch).join(known, Seq("__aid"), "left_anti")
     Pending(assign(fresh, cent).persist(), ix)
   }
@@ -259,15 +285,17 @@ object IndexLedger {
 
   /** The k·oversample stage-1 shortlist per query, from committed
     * state only: probe the `nprobe` best cells by centroid dot (the
-    * q166 probe rule), score int8 codes. Columns (qid, cid, approx,
-    * ar). */
+    * q166 probe rule), score int8 codes, keep each query's best
+    * k·oversample by bounded heap and rank them. Columns (qid, cid,
+    * approx, ar). */
   def shortlist(
       spark: SparkSession, statePath: String, queries: DataFrame,
       k: Int = 5, nprobe: Int = 4, oversample: Int = 4,
       excludeSelf: Boolean = false,
       asOfVersion: Long = -1L): DataFrame = {
-    val cent = centroids(spark, statePath, asOfVersion)
-    val cs = codes(spark, statePath, asOfVersion)
+    val ix = ixAt(statePath, asOfVersion)
+    val cent = readCentroids(spark, statePath, ix)
+    val cs = readCodes(spark, statePath, ix)
     val q = queries.select(col("vec_id").as("qid"),
         asDouble(col("embedding")).as("qv"))
       .withColumn("qqc", sq8Codes(col("qv")).cast("array<double>"))
@@ -285,10 +313,14 @@ object IndexLedger {
       .select(col("qid"), col("vec_id").as("cid"),
         (vec_dot(col("qqc"), col("qc").cast("array<double>")) /
           (sqrt(col("qd2")) * sqrt(col("d2")))).as("approx"))
-      .distinct() // a (qid,cid) pair reachable via two probed cells
-    cand.withColumn("ar", row_number().over(
-        Window.partitionBy("qid").orderBy(col("approx").desc, col("cid"))))
-      .filter(col("ar") <= k.toLong * oversample)
+    // (qid, cid) is unique without a distinct: each vec_id has one code
+    // row (ivfAssign keeps one cell per id within a write, absorb
+    // anti-joins the committed ids) and a query's probed cells are
+    // distinct
+    val order = Seq(col("approx").desc, col("cid"))
+    TopKPerKey.topK(cand, Seq("qid"), order, k * oversample)
+      .withColumn("ar",
+        row_number().over(Window.partitionBy("qid").orderBy(order: _*)))
   }
 
   /** Final quantized-cosine top-k per query (qid, cid, cos_q, rk) —
@@ -306,7 +338,9 @@ object IndexLedger {
       .select(col("qid"), col("cid"),
         round(col("approx"), 6).as("cos_q"),
         col("ar").cast("long").as("rk"))
-      .orderBy("qid", "rk")
+      // k·|query batch| rows, bounded by the caller's serving batch:
+      // ordered inside one partition, so no range-sampling job runs
+      .coalesce(1).orderBy("qid", "rk")
 
   /** Batch drift statistic: mean angular distortion of the batch under
     * the COMMITTED centroids, relative to the baseline recorded when
@@ -318,8 +352,7 @@ object IndexLedger {
       spark: SparkSession, statePath: String,
       batch: DataFrame): Double = {
     val ix = readIx(statePath)
-    val cent = spark.read.parquet(
-      centroidsDir(statePath, ix.centroidVersion))
+    val cent = readCentroids(spark, statePath, ix)
     val d = distortionOf(assign(prep(batch), cent))
     if (ix.baseDistortion <= 0.0) 1.0 else d / ix.baseDistortion
   }
@@ -334,7 +367,7 @@ object IndexLedger {
   def refresh(
       spark: SparkSession, statePath: String, nlist: Int = 16): Unit = {
     val ix = readIx(statePath)
-    val decoded = codes(spark, statePath)
+    val decoded = readCodes(spark, statePath, ix)
       .select(col("vec_id").as("__aid"),
         transform(col("qc").cast("array<double>"),
           x => x / sqrt(col("d2"))).as("__v"),
@@ -361,7 +394,7 @@ object IndexLedger {
     val doomed = vecIds
       .select(col(vecIds.columns.head).cast("long").as("vec_id"))
       .distinct()
-    val current = codes(spark, statePath)
+    val current = readCodes(spark, statePath, ix)
     val retained =
       current.join(broadcast(doomed), Seq("vec_id"), "left_anti")
     val removed = current.count() - retained.count()
@@ -397,7 +430,7 @@ object IndexLedger {
     if (ix.codeParts.lengthCompare(1) <= 0) false
     else {
       val next = ix.version + 1
-      codes(spark, statePath).write.mode("overwrite")
+      readCodes(spark, statePath, ix).write.mode("overwrite")
         .parquet(codesDir(statePath, DedupLedger.partName(next)))
       DedupLedger.writeManifest(statePath, manifestOf(ix.copy(
         version = next,

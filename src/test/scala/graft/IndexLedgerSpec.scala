@@ -4,6 +4,7 @@ import graft.sources.{DedupLedger, IndexLedger}
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The persisted incremental ANN index (q166's IVF+SQ8 layout with
   * the DedupLedger manifest discipline): increments assign+code only
@@ -263,5 +264,93 @@ class IndexLedgerSpec extends SparkSpec {
       b1.filter($"vec_id".isin(doomedIds: _*))).collect()
     assert(IndexLedger.codes(spark, state)
       .select("vec_id").as[Long].collect().toSet == allBefore)
+  }
+
+  test("pinned read schemas: after init → absorb → refresh → absorb → " +
+    "compact → purge, codes and centroids read back with exactly the " +
+    "declared schema, which is the one every written footer carries, " +
+    "and no column reads back null") {
+    val (seedDir, b1Dir, b2Dir, state) = fixture("schema")
+    IndexLedger.init(spark, state, spark.read.parquet(seedDir))
+    IndexLedger.absorb(spark, state, spark.read.parquet(b1Dir)).collect()
+    IndexLedger.refresh(spark, state)
+    IndexLedger.absorb(spark, state, spark.read.parquet(b2Dir)).collect()
+    assert(IndexLedger.compact(spark, state))
+    assert(IndexLedger.purge(spark, state,
+      Seq(6L, 7L).toDF("vec_id")) == 2L)
+    val declared = Map(
+      "codes" -> StructType.fromDDL(
+        "vec_id BIGINT, cell INT, qc ARRAY<TINYINT>, d2 DOUBLE"),
+      "centroids" -> StructType.fromDDL(
+        "cell INT, cv ARRAY<DOUBLE>, c2 DOUBLE"))
+    val read = Map(
+      "codes" -> IndexLedger.codes(spark, state),
+      "centroids" -> IndexLedger.centroids(spark, state))
+    for ((frame, schema) <- declared) {
+      assert(read(frame).schema == schema, frame)
+      // every dir any step wrote, footer-inferred
+      val dirs = new java.io.File(s"$state/$frame").listFiles
+        .filter(_.isDirectory).map(_.getPath)
+      assert(dirs.length >= 2, s"$frame: ${dirs.mkString(", ")}")
+      for (d <- dirs)
+        assert(spark.read.parquet(d).schema == schema, d)
+      val df = read(frame)
+      val nonNull = df.agg(count(lit(1)),
+        df.columns.toSeq.map(c => count(col(c))): _*).head()
+      assert(nonNull.getLong(0) > 0, s"$frame is empty")
+      for (i <- df.columns.indices)
+        assert(nonNull.getLong(i + 1) == nonNull.getLong(0),
+          s"$frame.${df.columns(i)} reads back null")
+    }
+    // the code elements carry values, not nulls
+    assert(read("codes").filter(exists($"qc", _.isNull)).isEmpty)
+    assert(read("centroids").filter(exists($"cv", _.isNull)).isEmpty)
+  }
+
+  test("an INT vec_id input is stored and read back as BIGINT with the " +
+    "same ids") {
+    val state = java.nio.file.Files
+      .createTempDirectory("ixledger_intid").toString + "/state"
+    val emb = tables.embeddings
+      .select($"vec_id".cast("int").as("vec_id"), $"embedding")
+    IndexLedger.init(spark, state, emb)
+    val cs = IndexLedger.codes(spark, state)
+    assert(cs.schema("vec_id").dataType == LongType)
+    assert(cs.select("vec_id").as[Long].collect().toSet ==
+      tables.embeddings.select($"vec_id".cast("long"))
+        .as[Long].collect().toSet)
+  }
+
+  test("uniqueness: repeated and already-committed vec_ids still leave " +
+    "one code row per id, so topK serves exactly k distinct (qid, cid) " +
+    "per query without a distinct") {
+    val (seedDir, b1Dir, _, state) = fixture("unique")
+    val seed = spark.read.parquet(seedDir)
+    val b1 = spark.read.parquet(b1Dir)
+    // id 0 again, carrying another vector
+    val seedRepeat = seed.filter($"vec_id" === 1).withColumn("vec_id",
+      lit(0L).cast(seed.schema("vec_id").dataType))
+    IndexLedger.init(spark, state, seed.unionByName(seedRepeat))
+    // the batch overlaps committed ids (0..2) and repeats a new id
+    val b1First = b1.agg(min("vec_id")).head().get(0)
+    val batch = b1
+      .unionByName(seed.filter($"vec_id" < 3))
+      .unionByName(seed.filter($"vec_id" === 3).withColumn("vec_id",
+        lit(b1First).cast(b1.schema("vec_id").dataType)))
+    IndexLedger.absorb(spark, state, batch).collect()
+    val ids = IndexLedger.codes(spark, state).select("vec_id")
+      .as[Long].collect()
+    assert(ids.length == ids.distinct.length,
+      s"${ids.length - ids.distinct.length} repeated vec_ids in codes")
+    assert(ids.contains(0L) && ids.contains(
+      b1First.asInstanceOf[Number].longValue))
+    val k = 5
+    val served = IndexLedger.topK(spark, state, queries10, k = k)
+      .select("qid", "cid").as[(Long, Long)].collect()
+    assert(served.length == served.distinct.length,
+      "repeated (qid, cid) in topK")
+    val perQuery = served.groupBy(_._1).map { case (q, r) => q -> r.length }
+    assert(perQuery.size == 10 && perQuery.values.forall(_ == k),
+      perQuery.toString)
   }
 }

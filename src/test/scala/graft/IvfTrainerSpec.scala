@@ -5,11 +5,13 @@ import graft.sources.IndexLedger
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The one IVF coarse-quantizer trainer ([[Similarity.ivfCentroids]]):
   * a deterministic sample of at most 256·nlist rows collected in one
-  * job, Lloyd's iterations on the driver. */
+  * job, Lloyd's iterations on the driver — and the exact job counts of
+  * the [[IndexLedger]] calls built on it (init, absorb, topK). */
 class IvfTrainerSpec extends SparkSpec {
 
   private lazy val vecs = tables.embeddings
@@ -55,25 +57,81 @@ class IvfTrainerSpec extends SparkSpec {
     }
   }
 
-  test("IndexLedger.init runs exactly 5 jobs: the sample collect, the " +
-    "centroid write, and the code write's broadcast, shuffle map and " +
-    "write stages") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** A job `body` ran: its name (its result stage's call site, as in
+    * the web UI) and whether it ran inside a SQL execution. */
+  private final case class Job(name: String, inQuery: Boolean)
+
+  /** The jobs `body` runs, counted exactly: the listener bus is drained
+    * on both sides of `body`. */
+  private def jobsOf(body: => Unit): Seq[Job] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        jobs.add(Job(js.stageInfos.maxBy(_.stageId).name,
+          Option(js.properties).exists(
+            _.getProperty(SQLExecution.EXECUTION_ID_KEY) != null)))
     }
-    val emb = tables.embeddings
-    emb.inputFiles // resolve the file listing outside the count
     ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
-      val state = java.nio.file.Files
-        .createTempDirectory("ivf_jobs").toString + "/state"
-      IndexLedger.init(spark, state, emb)
+      body
       ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 5, s"IndexLedger.init ran ${jobs.get} jobs")
+    jobs.toArray(new Array[Job](0)).toSeq
+  }
+
+  private def freshState(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString + "/state"
+
+  /** No ledger read may infer a parquet footer: the ledger wrote both
+    * frames, so every read declares their schema. A footer-inference
+    * job runs while the read is analyzed, outside any SQL execution;
+    * the ledger's parquet WRITES carry the same name inside one. */
+  private def assertNoFooterJobs(jobs: Seq[Job]): Unit = {
+    val footer = jobs.filter(j =>
+      !j.inQuery && j.name.startsWith("parquet at IndexLedger.scala"))
+    assert(footer.isEmpty, footer.mkString(", "))
+  }
+
+  test("IndexLedger.init runs exactly 5 jobs: the sample collect, the " +
+    "centroid write, and the code write's broadcast, shuffle map and " +
+    "write stages") {
+    val emb = tables.embeddings
+    emb.inputFiles // resolve the file listing outside the count
+    val state = freshState("ivf_jobs")
+    val jobs = jobsOf(IndexLedger.init(spark, state, emb))
+    assert(jobs.length == 5, s"IndexLedger.init ran: $jobs")
+    assertNoFooterJobs(jobs)
+  }
+
+  /** The q180 layout: init on 80% of the fixture embeddings. */
+  private def q180State(tag: String): String = {
+    val state = freshState(tag)
+    IndexLedger.init(spark, state, tables.embeddings.filter(
+      col("vec_id") % 10 < 8))
+    state
+  }
+
+  test("IndexLedger.absorb runs exactly 5 jobs, none of them a parquet " +
+    "footer read") {
+    val state = q180State("ivf_absorb_jobs")
+    val batch = tables.embeddings.filter(col("vec_id") % 10 >= 8)
+    batch.inputFiles
+    val jobs = jobsOf(IndexLedger.absorb(spark, state, batch))
+    assert(jobs.length == 5, s"IndexLedger.absorb ran: $jobs")
+    assertNoFooterJobs(jobs)
+  }
+
+  test("one IndexLedger.topK call runs exactly 5 jobs, none of them a " +
+    "parquet footer read: the centroid and probed-cell broadcasts, the " +
+    "probe and heap exchanges, and the one-partition result") {
+    val state = q180State("ivf_topk_jobs")
+    val queries = tables.embeddings.filter(col("vec_id") < 10)
+    queries.inputFiles
+    val jobs = jobsOf(IndexLedger.topK(spark, state, queries,
+      k = 10, nprobe = 8).collect())
+    assert(jobs.length == 5, s"IndexLedger.topK ran: $jobs")
+    assertNoFooterJobs(jobs)
   }
 
   test("no MLlib clustering left in the program sources") {
