@@ -70,8 +70,7 @@ import org.apache.spark.sql.functions._
   */
 object CorpusIncrement {
 
-  import DedupLedger.{Manifest, readManifest, readManifestAt,
-    writeManifest}
+  import Ledger.{Manifest, writeManifest}
 
   /** Sub-ledger roots (public: the audit surface — e.g.
     * `DedupLedger.keys(spark, dedupState(root), asOfVersion)`). */
@@ -120,8 +119,7 @@ object CorpusIncrement {
   def init(
       spark: SparkSession, root: String, corpus: DataFrame,
       prefixTokens: Int = 5, k: Int = 16): Unit = {
-    require(readManifest(root).isEmpty,
-      s"corpus-increment root already initialized at $root")
+    Ledger.requireFresh(root)
     // same one-materialization discipline as increment(): dedup,
     // minhash, and ref_counts all consume the scrubbed corpus
     val scrubbed = graft.StageTimer.timed("init/scrub") {
@@ -158,8 +156,8 @@ object CorpusIncrement {
     * gated kept rows `(doc_id, lang, source, sw_ratio, n_email,
     * n_phone, n_ip)` — committed under `kept/batch_<id>` (see the
     * ordered-commit contract above). `incrementId`s must be
-    * consecutive (the sinks' drift guard); a replay of the committed
-    * id returns the committed part unchanged. */
+    * consecutive (the sinks' drift guard, [[Ledger.admit]]); a replay
+    * of the committed id returns the committed part unchanged. */
   def increment(
       spark: SparkSession, root: String, batch: DataFrame,
       incrementId: Long, prefixTokens: Int = 5, k: Int = 16,
@@ -168,17 +166,11 @@ object CorpusIncrement {
       minSwRatio: Double = 0.05, minTokens: Int = 0,
       ksAlarm: Double = 0.2, psiAlarm: Double = 0.25,
       jsdAlarm: Double = 0.2): DataFrame = {
-    val m = readManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no corpus-increment root at $root — call init(corpus) first"))
-    m.lastBatchId.foreach { last =>
-      require(incrementId == last || incrementId == last + 1,
-        s"increment/root mismatch at $root: committed increment $last " +
-          s"but increment($incrementId) was requested; increments are " +
-          "consecutive and single-writer")
+    val m = Ledger.admit(root, incrementId, "increment/root") match {
+      case Some(m) => m
+      case None =>
+        return spark.read.parquet(keptDir(root, partOf(incrementId)))
     }
-    if (m.lastBatchId.contains(incrementId))
-      return spark.read.parquet(keptDir(root, partOf(incrementId)))
 
     // materialize the scrubbed batch ONCE (eager localCheckpoint):
     // three downstream stages consume it (exact keys, near signatures,
@@ -489,9 +481,7 @@ object CorpusIncrement {
     * fixed-state bucketed token-distribution drift vs all prior
     * increments. */
   def monitorLog(spark: SparkSession, root: String): DataFrame = {
-    val m = readManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no corpus-increment root at $root"))
+    val m = Ledger.current(root)
     require(m.keyParts.nonEmpty,
       s"no increments committed yet at $root")
     // per-part reads (1 row each, bounded by |increments|) so legacy
@@ -510,27 +500,18 @@ object CorpusIncrement {
   }
 
   /** The committed kept ledger: every increment's gated survivors —
-    * metadata rows, no text. */
-  def kept(spark: SparkSession, root: String): DataFrame = {
-    val m = readManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no corpus-increment root at $root"))
-    require(m.keyParts.nonEmpty,
-      s"no increments committed yet at $root")
-    spark.read.parquet(m.keyParts.map(keptDir(root, _)): _*)
-  }
-
-  /** Time-travel read of the kept ledger: the training set exactly as
-    * committed at root-manifest `asOfVersion` (version 1 = init, one
-    * version per increment) — "what did the mixture see before
-    * yesterday's increment?" answered off manifest snapshots, the
-    * same as-of surface the three inner ledgers expose. */
+    * metadata rows, no text. With `asOfVersion`, the time-travel read:
+    * the training set exactly as committed at that root-manifest
+    * version (version 1 = init, one version per increment) — "what did
+    * the mixture see before yesterday's increment?" answered off
+    * manifest snapshots, the same as-of surface the inner ledgers
+    * expose. */
   def kept(
       spark: SparkSession, root: String,
-      asOfVersion: Long): DataFrame = {
-    val m = readManifestAt(root, asOfVersion)
+      asOfVersion: Long = -1L): DataFrame = {
+    val m = Ledger.at(root, asOfVersion)
     require(m.keyParts.nonEmpty,
-      s"no increments committed at version $asOfVersion of $root")
+      s"no increments committed at version ${m.version} of $root")
     spark.read.parquet(m.keyParts.map(keptDir(root, _)): _*)
   }
 
@@ -640,9 +621,7 @@ object CorpusIncrement {
       spark: SparkSession, root: String, text: DataFrame,
       nShards: Int = 4, budget: Long = 300L, numMerges: Int = 40,
       salt: String = "shard"): DataFrame = {
-    val m = readManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no corpus-increment root at $root"))
+    val m = Ledger.current(root)
     require(m.keyParts.nonEmpty,
       s"no increments committed yet at $root")
     val out = shardsDir(root, m.version)
@@ -715,13 +694,6 @@ object CorpusIncrement {
 
   // ---- right-to-erasure for the composed root ---------------------
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty)
-        .foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
   /** Rewrite one committed part dir minus the doomed doc_ids, with
     * the tmp+swap discipline (write retained to `<dir>.purge_tmp`,
     * delete the original, rename tmp into place). Crash recovery is
@@ -736,7 +708,7 @@ object CorpusIncrement {
     val tmp = new java.io.File(dir + ".purge_tmp")
     if (!f.exists() && tmp.exists()) {
       require(tmp.renameTo(f), s"purge recovery rename failed: $tmp")
-    } else if (tmp.exists()) deleteRecursively(tmp)
+    } else if (tmp.exists()) Ledger.deleteRecursively(tmp)
     if (!f.exists()) return 0L
     val current = spark.read.parquet(dir)
     val retained = current
@@ -748,7 +720,7 @@ object CorpusIncrement {
     if (params.exists())
       java.nio.file.Files.copy(params.toPath,
         new java.io.File(tmp, "_PARAMS").toPath)
-    deleteRecursively(f)
+    Ledger.deleteRecursively(f)
     require(tmp.renameTo(f), s"purge swap rename failed: $tmp -> $f")
     removed
   }
@@ -789,9 +761,7 @@ object CorpusIncrement {
   def purge(
       spark: SparkSession, root: String, docs: DataFrame,
       prefixTokens: Int = 5): Long = {
-    val m = readManifest(root).getOrElse(
-      throw new IllegalStateException(
-        s"no corpus-increment root at $root"))
+    val m = Ledger.current(root)
     val scrubbed = scrub(docs)
     val doomed = scrubbed.select("doc_id").distinct()
       .localCheckpoint(true)
@@ -819,7 +789,7 @@ object CorpusIncrement {
     * the three inner ledgers (keys + blooms, signatures, sketches) AND
     * the root's own state in one call, so the operational loop has ONE
     * retention knob instead of four. Root-side semantics follow
-    * [[DedupLedger.vacuumState]] exactly: manifest snapshots older
+    * [[Ledger.vacuumState]] exactly: manifest snapshots older
     * than CURRENT−keepVersions truncate (as-of reads beyond the
     * horizon refuse loudly — `kept(spark, root, v)` and the
     * trainingShards as-of overload included), and version-keyed
@@ -837,7 +807,7 @@ object CorpusIncrement {
       DedupLedger.vacuum(dedupState(root), keepVersions) +
         MinhashLedger.vacuum(minhashState(root), keepVersions) +
         SketchLedger.vacuum(sketchState(root), keepVersions)
-    val own = DedupLedger.vacuumState(root, keepVersions,
+    val own = Ledger.vacuumState(root, keepVersions,
       m => m.keyParts.flatMap(p => Seq(
         s"kept/$p", s"monitor/$p", s"monitor_hist/$p",
         s"stage/exact/$p", s"stage/near/$p"))

@@ -19,17 +19,13 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   *   bloom/v_<version>/     one-row parquet: the MERGED Bloom payload
   *                          (GBF1 header + bit words) covering every
   *                          key part up to <version>
-  *   CURRENT                text manifest: version + the committed key
-  *                          part list, updated atomically (tmp+rename)
-  *                          AFTER the new part and bloom land
+  *   CURRENT                the [[Ledger]] manifest: version + the
+  *                          committed key part list, committed AFTER the
+  *                          new part and bloom land
   * }}}
   *
-  * Crash safety follows the [[Incremental]] ledger discipline: data
-  * first, manifest last. A crash between part write and manifest
-  * rename leaves an orphan part dir that loads ignore (only manifest-
-  * listed parts are read), and re-running the same `absorb` is
-  * idempotent — the manifest never advanced, so the replay sees the
-  * identical prior state and derives the identical kept set.
+  * Crash safety is the [[Ledger]] commit protocol: data first, manifest
+  * last, so re-running the same `absorb` after a crash is idempotent.
   *
   * Scale posture at 100 TB: an increment touches (a) the batch itself,
   * (b) the ~128 KB bloom payload (one-row parquet, broadcast as a
@@ -42,120 +38,13 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   */
 object DedupLedger {
 
+  import Ledger.{Manifest, partName}
+
   /** Same key as q153's stateless contract: md5 of the first
     * `prefixTokens` tokens (the q17b boilerplate-prefix fingerprint). */
   def keyOf(text: Column, prefixTokens: Int): Column =
     md5(concat_ws(" ", slice(split(text, " "), 1, prefixTokens)))
 
-  /** `lastBatchId` records the streaming micro-batch whose absorb this
-    * manifest version committed ([[absorbSink]]'s exactly-once marker);
-    * None for batch-mode absorbs. */
-  final case class Manifest(
-      version: Long, keyParts: Seq[String],
-      lastBatchId: Option[Long] = None)
-
-  private def currentFile(statePath: String) =
-    new java.io.File(statePath, "CURRENT")
-
-  private val BatchMarker = "lastBatch="
-
-  private def snapshotFile(statePath: String, version: Long) =
-    new java.io.File(new java.io.File(statePath, "manifests"),
-      f"v_$version%08d")
-
-  private def parseManifest(f: java.io.File): Manifest = {
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try {
-      val lines = src.getLines().filter(_.nonEmpty).toList
-      val (markers, parts) = lines.tail.partition(_.startsWith(BatchMarker))
-      Manifest(lines.head.toLong, parts,
-        markers.headOption.map(_.stripPrefix(BatchMarker).toLong))
-    } finally src.close()
-  }
-
-  def readManifest(statePath: String): Option[Manifest] = {
-    val f = currentFile(statePath)
-    if (!f.exists()) None else Some(parseManifest(f))
-  }
-
-  /** The manifest as committed at `version` — the TIME-TRAVEL surface
-    * every ledger here inherits. Snapshots are written by every
-    * [[writeManifest]] commit; an as-of read resolves the snapshot and
-    * unions exactly the parts committed then (superseded parts are
-    * never deleted by absorb/compact, so they remain readable until an
-    * explicit [[vacuum]] ages them out).
-    * Refuses versions the state cannot honestly serve:
-    *  - beyond CURRENT (an orphan snapshot from a crashed commit is
-    *    not committed state);
-    *  - before the latest [[purge]] (purge truncates older snapshots —
-    *    resurrecting purged fingerprints via time travel would defeat
-    *    erasure; this is the explicit refusal, not a silent miss);
-    *  - before this as-of facility existed for the ledger (no
-    *    snapshot on disk). */
-  private[sources] def readManifestAt(
-      statePath: String, version: Long): Manifest = {
-    val cur = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
-    require(version <= cur.version,
-      s"as-of version $version is beyond the committed ${cur.version} " +
-        s"at $statePath")
-    if (version == cur.version) cur
-    else {
-      val f = snapshotFile(statePath, version)
-      require(f.exists(),
-        s"no manifest snapshot for version $version at $statePath — " +
-          "either the version predates a purge (older snapshots are " +
-          "truncated so erased fingerprints cannot resurface) or it " +
-          "predates versioned-manifest support for this ledger")
-      parseManifest(f)
-    }
-  }
-
-  /** Drop manifest snapshots older than `before` — the [[purge]]
-    * commit's history truncation (erasure must close the time-travel
-    * door too). The physical bytes of superseded part dirs remain on
-    * disk (crash-safety orphans); full physical erasure additionally
-    * requires removing those, which is a filesystem GC concern outside
-    * the manifest contract. */
-  private[sources] def truncateSnapshots(
-      statePath: String, before: Long): Unit = {
-    val dir = new java.io.File(statePath, "manifests")
-    if (dir.exists()) dir.listFiles().foreach { f =>
-      if (f.getName.startsWith("v_") &&
-        f.getName.stripPrefix("v_").toLong < before) f.delete()
-    }
-  }
-
-  /** Data is already durable when this runs; the rename is the commit
-    * point (same tmp+rename the [[Incremental]] ledger uses). Also
-    * records an immutable per-version snapshot under `manifests/`
-    * BEFORE the CURRENT rename (an orphan snapshot from a crash here
-    * is overwritten by the idempotent replay, and as-of reads refuse
-    * versions beyond CURRENT). Package-visible so [[MinhashLedger]]
-    * and [[SketchLedger]] share the exact same manifest format and
-    * commit discipline. */
-  private[sources] def writeManifest(statePath: String, m: Manifest): Unit = {
-    val dir = new java.io.File(statePath)
-    dir.mkdirs()
-    def writeTo(f: java.io.File): Unit = {
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try {
-        w.println(m.version)
-        m.lastBatchId.foreach(id => w.println(s"$BatchMarker$id"))
-        m.keyParts.foreach(w.println)
-      } finally w.close()
-    }
-    val snap = snapshotFile(statePath, m.version)
-    snap.getParentFile.mkdirs()
-    writeTo(snap)
-    val tmp = new java.io.File(dir, ".current_tmp")
-    writeTo(tmp)
-    if (currentFile(statePath).exists()) currentFile(statePath).delete()
-    require(tmp.renameTo(currentFile(statePath)),
-      s"CURRENT rename failed under $statePath")
-  }
-
-  private[sources] def partName(version: Long) = f"part_$version%08d"
   private def keysDir(statePath: String, part: String) =
     s"$statePath/keys/$part"
   private def bloomDir(statePath: String, version: Long) =
@@ -185,8 +74,7 @@ object DedupLedger {
       prefixTokens: Int = 5, mBits: Int = 1 << 20,
       numHashes: Int = 7): Unit = {
     import graft.functions.BloomFunctions._
-    require(readManifest(statePath).isEmpty,
-      s"ledger already initialized at $statePath")
+    Ledger.requireFresh(statePath)
     val keys = corpus.select(keyOf(col("text"), prefixTokens).as("__k"))
       .distinct()
     keys.write.mode("overwrite").parquet(keysDir(statePath, partName(1)))
@@ -199,29 +87,25 @@ object DedupLedger {
       .agg(bloom_agg(xxhash64(col("__k")), mBits, numHashes)
         .as("payload"))
       .write.mode("overwrite").parquet(bloomDir(statePath, 1))
-    writeManifest(statePath, Manifest(1, Seq(partName(1))))
+    Ledger.writeManifest(statePath, Manifest(1, Seq(partName(1))))
   }
 
   /** All committed corpus keys, as the lazy union of the manifest's
-    * parts — 16-byte fingerprints, never text. */
-  def keys(spark: SparkSession, statePath: String): DataFrame = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
-    spark.read.parquet(m.keyParts.map(keysDir(statePath, _)): _*)
-  }
-
-  /** Time-travel read: the key set exactly as committed at
-    * `asOfVersion` — the audit/debug surface the versioned manifests
-    * pay for ("which keys did increment 7 dedup against?"). Absorb
-    * and compact never delete superseded parts, so every pre-purge
-    * version stays readable; versions older than the latest purge are
-    * refused (see [[readManifestAt]]). */
+    * parts — 16-byte fingerprints, never text. With `asOfVersion`, the
+    * time-travel read: the key set exactly as committed then — the
+    * audit/debug surface the versioned manifests pay for ("which keys
+    * did increment 7 dedup against?"). Absorb and compact never delete
+    * superseded parts, so every pre-purge version stays readable;
+    * versions older than the latest purge are refused (see
+    * [[Ledger.readManifestAt]]). */
   def keys(
       spark: SparkSession, statePath: String,
-      asOfVersion: Long): DataFrame = {
-    val m = readManifestAt(statePath, asOfVersion)
+      asOfVersion: Long = -1L): DataFrame =
+    keysOf(spark, statePath, Ledger.at(statePath, asOfVersion))
+
+  private def keysOf(
+      spark: SparkSession, statePath: String, m: Manifest): DataFrame =
     spark.read.parquet(m.keyParts.map(keysDir(statePath, _)): _*)
-  }
 
   /** Dedup `batch` against the ledger (and within itself), absorb its
     * new keys + bloom bits, and return the kept rows
@@ -230,7 +114,8 @@ object DedupLedger {
   def absorb(
       spark: SparkSession, statePath: String, batch: DataFrame,
       prefixTokens: Int = 5): DataFrame = {
-    val p = dedupBatch(spark, statePath, batch, prefixTokens)
+    val p = dedupBatch(
+      spark, statePath, Ledger.current(statePath), batch, prefixTokens)
     commitState(spark, statePath, p, batchId = None)
     val out = p.kept.select("doc_id", "lang", "source").orderBy("doc_id")
     p.kept.unpersist()
@@ -246,13 +131,10 @@ object DedupLedger {
       kept: DataFrame, m: Manifest, payload: Array[Long])
 
   private def dedupBatch(
-      spark: SparkSession, statePath: String, batch: DataFrame,
-      prefixTokens: Int): Pending = {
+      spark: SparkSession, statePath: String, m: Manifest,
+      batch: DataFrame, prefixTokens: Int): Pending = {
     import graft.functions.BloomFunctions._
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(
-        s"no ledger at $statePath — call init(corpus) first"))
-    val ledgerKeys = keys(spark, statePath)
+    val ledgerKeys = keysOf(spark, statePath, m)
     val payload = readBloom(spark, statePath, m.version)
 
     // same split as Dedup.incrementalDedup, with the PERSISTED bloom
@@ -320,53 +202,24 @@ object DedupLedger {
       .select(zip_with(
         lit(payload), col("p"), (a, b) => a.bitwiseOR(b)).as("payload"))
       .write.mode("overwrite").parquet(bloomDir(statePath, next))
-    writeManifest(statePath,
+    Ledger.writeManifest(statePath,
       Manifest(next, p.m.keyParts :+ partName(next), batchId))
   }
 
   /** Streaming ingest: a `foreachBatch` function that dedups each
     * micro-batch against the ledger and appends the kept rows under
     * `outDir/batch_<id>` — the production crawl-stream shape, with
-    * EXACTLY-ONCE output despite foreachBatch's at-least-once replay:
-    *
-    *  1. output lands FIRST, in a per-batch dir written with
-    *     mode=overwrite, so a replay of a half-done batch (state not
-    *     yet committed → it re-derives the identical kept set) redoes
-    *     the same deterministic dir;
-    *  2. the state commit records the batchId in the manifest LAST —
-    *     a replay of a FULLY-committed batch (crash after commit,
-    *     before the stream checkpoint advanced) sees its own id and
-    *     becomes a no-op, instead of re-absorbing against the advanced
-    *     ledger (which would derive an EMPTY kept set and clobber the
-    *     batch's real output).
-    *
-    * One stream per ledger (single-writer, as everywhere here).
+    * EXACTLY-ONCE output despite foreachBatch's at-least-once replay
+    * ([[Ledger.admit]]: output first, batchId-marked commit last, a
+    * committed replay no-ops, checkpoint/state drift fails loudly).
     * Usage: `docs.writeStream.foreachBatch(
     *   DedupLedger.absorbSink(spark, state, out)).start()`. */
   def absorbSink(
       spark: SparkSession, statePath: String, outDir: String,
       prefixTokens: Int = 5): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val cur = readManifest(statePath).getOrElse(
-        throw new IllegalStateException(
-          s"no ledger at $statePath — call init(corpus) first"))
-      // checkpoint/state drift guard: valid ids are last (replay, the
-      // no-op below) or last+1 (progress). Anything else means the
-      // stream checkpoint and the ledger diverged — most commonly a
-      // FRESH checkpoint over existing state, whose replayed early
-      // batches would re-absorb against the advanced ledger, derive
-      // EMPTY kept sets, and overwrite the real per-batch output dirs.
-      // Fail loudly instead.
-      cur.lastBatchId.foreach { last =>
-        require(batchId == last || batchId == last + 1,
-          s"stream/ledger mismatch at $statePath: ledger committed " +
-            s"micro-batch $last but foreachBatch delivered $batchId; " +
-            "the checkpoint, the ledger state, and the output dir " +
-            "form one unit — restarting a stream with a fresh " +
-            "checkpoint over existing state is not recoverable here")
-      }
-      if (!cur.lastBatchId.contains(batchId)) {
-        val p = dedupBatch(spark, statePath, batch, prefixTokens)
+    (batch, batchId) =>
+      Ledger.admit(statePath, batchId).foreach { m =>
+        val p = dedupBatch(spark, statePath, m, batch, prefixTokens)
         // the per-batch output and the keys part are independent
         // projections of the same persisted kept frame, both
         // idempotent overwrites ahead of the manifest rename — they
@@ -381,20 +234,8 @@ object DedupLedger {
             ()
           }))
         p.kept.unpersist()
-        ()
       }
-    }
 
-  /** Compact the key parts into one. Every absorb adds a part dir;
-    * after many increments the confirm join pays |parts| file listings
-    * and small-file overhead, so periodic compaction is the standard
-    * append-only-ledger maintenance step. Rewrites the (already
-    * distinct-by-construction) key union as a single part and commits
-    * a one-part manifest re-pointing at the UNCHANGED bloom bits —
-    * the filter already covers every key, and bloom bits only ever
-    * accumulate. Crash-safe like absorb: data first, manifest rename
-    * last; the superseded parts become unreferenced orphans. Returns
-    * true if compaction ran (no-op on a single-part ledger). */
   /** Right-to-erasure for the DERIVED state (the [[graft.sources
     * .Writers.purgeKeys]] counterpart — deleting a document from the
     * corpus is not enough if its fingerprint lives on in dedup
@@ -416,111 +257,60 @@ object DedupLedger {
       purgeKeys: DataFrame): Long = {
     import graft.functions.BloomFunctions._
     import org.apache.spark.sql.functions.{broadcast, xxhash64}
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
+    val m = Ledger.current(statePath)
     val doomed = purgeKeys
       .select(col(purgeKeys.columns.head).as("__k")).distinct()
-    val current = keys(spark, statePath)
+    val current = keysOf(spark, statePath, m)
     val retained = current.join(broadcast(doomed), Seq("__k"), "left_anti")
     val removed = current.count() - retained.count()
     if (removed == 0L) return 0L
-    val next = m.version + 1
-    retained.write.mode("overwrite")
-      .parquet(keysDir(statePath, partName(next)))
-    val persisted = spark.read.parquet(keysDir(statePath, partName(next)))
-    // geometry from the live header (the absorb discipline)
-    val payload = readBloom(spark, statePath, m.version)
-    val numHashes = (payload(0) & 0x7fffffffL).toInt
-    val mBits = (payload.length - 1) * 64
-    val rebuilt = persisted
-      .agg(bloom_agg(xxhash64(col("__k")), mBits, numHashes).as("p"))
-      .head().getSeq[Long](0).toArray
-    writeBloom(spark, statePath, next, rebuilt)
-    writeManifest(statePath, Manifest(next, Seq(partName(next))))
     // erasure closes the time-travel door: as-of reads before this
     // purge would resurface the doomed fingerprints
-    truncateSnapshots(statePath, next)
+    Ledger.maintain(statePath, m, erase = true) { next =>
+      retained.write.mode("overwrite")
+        .parquet(keysDir(statePath, partName(next)))
+      val persisted = spark.read.parquet(keysDir(statePath, partName(next)))
+      // geometry from the live header (the absorb discipline)
+      val payload = readBloom(spark, statePath, m.version)
+      val numHashes = (payload(0) & 0x7fffffffL).toInt
+      val mBits = (payload.length - 1) * 64
+      val rebuilt = persisted
+        .agg(bloom_agg(xxhash64(col("__k")), mBits, numHashes).as("p"))
+        .head().getSeq[Long](0).toArray
+      writeBloom(spark, statePath, next, rebuilt)
+    }
     removed
   }
 
-  // ---- age-based retention (vacuum) --------------------------------
-
-  /** Generic ledger vacuum: reclaim state referenced ONLY by manifest
-    * versions older than CURRENT − keepVersions, and truncate those
-    * snapshots so the reclaimed versions are REFUSED (the purge
-    * refusal semantics generalized to age) rather than half-served.
-    * Without this, as-of support keeps every superseded part forever
-    * and state dirs grow without bound at production cadence.
-    *
-    * Order of operations is the crash-safety argument:
-    *  1. snapshot truncation FIRST — once a version's snapshot is
-    *     gone, [[readManifestAt]] refuses it loudly, so no as-of read
-    *     can observe a half-vacuumed version;
-    *  2. then delete data dirs not referenced by ANY surviving
-    *     version (CURRENT + snapshots above the horizon). A crash
-    *     between 1 and 2 leaves unreferenced orphans — the same class
-    *     absorb crashes leave — and re-running vacuum reclaims them.
-    * CURRENT and every surviving as-of version are untouched (their
-    * referenced dirs are the live set). Also reclaims commit orphans
-    * (dirs written by a crashed absorb whose manifest never landed).
-    *
-    * `referenced` maps a manifest to the state-relative dirs it
-    * needs; `dataRoots` are the dirs vacuum may sweep. Each ledger
-    * wraps this with its own layout. Returns reclaimed dir count. */
-  private[sources] def vacuumState(
-      statePath: String,
-      keepVersions: Int,
-      referenced: Manifest => Seq[String],
-      dataRoots: Seq[String]): Long = {
-    require(keepVersions >= 1, "vacuum: keepVersions must be >= 1")
-    val cur = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
-    val horizon = cur.version - keepVersions
-    val snapsDir = new java.io.File(statePath, "manifests")
-    val snapped: Seq[Manifest] =
-      if (!snapsDir.exists()) Seq.empty
-      else snapsDir.listFiles().toSeq
-        .filter(_.getName.startsWith("v_"))
-        .map(parseManifest)
-        .filter(m => m.version > horizon && m.version <= cur.version)
-    val live = (snapped :+ cur).flatMap(referenced).toSet
-    if (horizon >= 1) truncateSnapshots(statePath, horizon + 1)
-    var reclaimed = 0L
-    def deleteRecursively(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-      f.delete()
-    }
-    for (root <- dataRoots) {
-      val dir = new java.io.File(statePath, root)
-      if (dir.exists()) Option(dir.listFiles()).foreach(_.foreach { d =>
-        if (!live.contains(s"$root/${d.getName}")) {
-          deleteRecursively(d); reclaimed += 1
-        }
-      })
-    }
-    reclaimed
-  }
-
   /** Age-based retention for this ledger's keys + per-version bloom
-    * payloads. See [[vacuumState]]. */
+    * payloads. See [[Ledger.vacuumState]]. */
   def vacuum(statePath: String, keepVersions: Int): Long =
-    vacuumState(statePath, keepVersions,
+    Ledger.vacuumState(statePath, keepVersions,
       m => m.keyParts.map("keys/" + _) :+ s"bloom/v_${m.version}",
       Seq("keys", "bloom"))
 
+  /** Compact the key parts into one. Every absorb adds a part dir;
+    * after many increments the confirm join pays |parts| file listings
+    * and small-file overhead, so periodic compaction is the standard
+    * append-only-ledger maintenance step. Rewrites the (already
+    * distinct-by-construction) key union as a single part and commits
+    * a one-part manifest ([[Ledger.maintain]]) re-pointing at the
+    * UNCHANGED bloom bits — the filter already covers every key, and
+    * bloom bits only ever accumulate. Crash-safe like absorb: data
+    * first, manifest rename last; the superseded parts become
+    * unreferenced orphans. Returns true if compaction ran (no-op on a
+    * single-part ledger). */
   def compact(spark: SparkSession, statePath: String): Boolean = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
+    val m = Ledger.current(statePath)
     if (m.keyParts.lengthCompare(1) <= 0) false
     else {
-      val next = m.version + 1
-      keys(spark, statePath)
-        .write.mode("overwrite")
-        .parquet(keysDir(statePath, partName(next)))
-      writeBloom(spark, statePath, next,
-        readBloom(spark, statePath, m.version))
-      writeManifest(statePath, Manifest(next, Seq(partName(next))))
+      Ledger.maintain(statePath, m, erase = false) { next =>
+        keysOf(spark, statePath, m)
+          .write.mode("overwrite")
+          .parquet(keysDir(statePath, partName(next)))
+        writeBloom(spark, statePath, next,
+          readBloom(spark, statePath, m.version))
+      }
       true
     }
   }

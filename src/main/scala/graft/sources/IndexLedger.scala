@@ -19,12 +19,11 @@ import org.apache.spark.sql.types.StructType
   *    cell, qc, d2) with qc the SQ8 int8 codes stored as
   *    `array<tinyint>` (~d bytes per vector + 12 — the FAISS
   *    IVF+SQ8 budget; the float corpus is ~4d);
-  *  - `manifests/v_*` + `CURRENT` — the [[DedupLedger]] manifest
-  *    format and tmp+rename commit discipline verbatim (data first,
-  *    manifest rename last; orphans from crashes are ignored and
-  *    reclaimed by the idempotent replay). Extra marker lines carry
-  *    the centroid version in force (`cv=N`) and the init-time
-  *    distortion baseline (`dist=x`).
+  *  - `manifests/v_*` + `CURRENT` — the [[Ledger]] manifest format and
+  *    commit protocol (data first, manifest rename last; orphans from
+  *    crashes are ignored and reclaimed by the idempotent replay).
+  *    Extra marker lines carry the centroid version in force (`cv=N`)
+  *    and the init-time distortion baseline (`dist=x`).
   *
   * Contracts:
   *  - [[absorb]] assigns + codes ONLY the batch's new vectors against
@@ -52,8 +51,8 @@ import org.apache.spark.sql.types.StructType
   *    when [[driftRatio]] says the centroids no longer fit the data;
   *    still no corpus rescan. Reassigns all vectors, writes one
   *    compacted part + new centroids, commits one version.
-  *  - [[absorbSink]] gives streaming parity with the [[DedupLedger
-  *    .absorbSink]] exactly-once batchId discipline; [[codes]]/
+  *  - [[absorbSink]] gives streaming parity with the [[Ledger.admit]]
+  *    exactly-once batchId discipline; [[codes]]/
   *    [[centroids]] take an as-of version for time travel; [[compact]]
   *    folds parts; [[vacuum]] (ledger-wide, see Vacuum) reclaims
   *    superseded state beyond a version horizon.
@@ -71,6 +70,7 @@ object IndexLedger {
   import graft.operators.Similarity.{asDouble, ivfAssign, ivfCentroids, sq8Codes}
   import graft.functions.VectorFunctions.vec_dot
   import graft.plans.TopKPerKey
+  import Ledger.{Manifest, partName}
 
   /** The schemas of the two frames the ledger writes, declared on every
     * read so that no read infers a footer (IndexLedgerSpec checks them
@@ -89,7 +89,7 @@ object IndexLedger {
       version: Long, codeParts: Seq[String], centroidVersion: Long,
       baseDistortion: Double, lastBatchId: Option[Long])
 
-  private def parse(m: DedupLedger.Manifest): IxManifest = {
+  private def parse(m: Manifest): IxManifest = {
     val parts = m.keyParts.filter(_.startsWith("part_"))
     val cv = m.keyParts.find(_.startsWith("cv="))
       .map(_.stripPrefix("cv=").toLong)
@@ -100,22 +100,16 @@ object IndexLedger {
     IxManifest(m.version, parts, cv, dist, m.lastBatchId)
   }
 
-  private def manifestOf(ix: IxManifest): DedupLedger.Manifest =
-    DedupLedger.Manifest(ix.version,
+  private def manifestOf(ix: IxManifest): Manifest =
+    Manifest(ix.version,
       ix.codeParts ++ Seq(s"cv=${ix.centroidVersion}",
         s"dist=${ix.baseDistortion}"),
       ix.lastBatchId)
 
-  private def readIx(statePath: String): IxManifest =
-    parse(DedupLedger.readManifest(statePath).getOrElse(
-      throw new IllegalStateException(
-        s"no index ledger at $statePath — call init first")))
-
-  /** The manifest in force: CURRENT for a negative version, else the
-    * as-of one. */
-  private def ixAt(statePath: String, asOfVersion: Long): IxManifest =
-    if (asOfVersion < 0) readIx(statePath)
-    else parse(DedupLedger.readManifestAt(statePath, asOfVersion))
+  /** The manifest in force: CURRENT for a negative version (the
+    * default), else the as-of one. */
+  private def ixAt(statePath: String, asOfVersion: Long = -1L): IxManifest =
+    parse(Ledger.at(statePath, asOfVersion))
 
   /** The centroid frame of one resolved manifest. */
   private def readCentroids(
@@ -191,10 +185,9 @@ object IndexLedger {
   def init(
       spark: SparkSession, statePath: String, embeddings: DataFrame,
       nlist: Int = 16): Unit = {
-    require(DedupLedger.readManifest(statePath).isEmpty,
-      s"index ledger already initialized at $statePath")
+    Ledger.requireFresh(statePath)
     build(spark, statePath, prep(embeddings), nlist,
-      IxManifest(1L, Seq(DedupLedger.partName(1L)), 1L, 0.0, None))
+      IxManifest(1L, Seq(partName(1L)), 1L, 0.0, None))
   }
 
   /** The build body of [[init]] and [[refresh]]: fit the coarse
@@ -214,7 +207,7 @@ object IndexLedger {
     writeCodes(spark, statePath, ix.codeParts.head, assigned)
     val base = scala.concurrent.Await.result(baseObs.future,
       scala.concurrent.duration.Duration(300, "s")).getDouble(0)
-    DedupLedger.writeManifest(statePath,
+    Ledger.writeManifest(statePath,
       manifestOf(ix.copy(baseDistortion = base)))
   }
 
@@ -222,9 +215,8 @@ object IndexLedger {
   private final case class Pending(assigned: DataFrame, ix: IxManifest)
 
   private def deriveBatch(
-      spark: SparkSession, statePath: String,
+      spark: SparkSession, statePath: String, ix: IxManifest,
       batch: DataFrame): Pending = {
-    val ix = readIx(statePath)
     val cent = readCentroids(spark, statePath, ix)
     val known = readCodes(spark, statePath, ix)
       .select(col("vec_id").as("__aid"))
@@ -236,10 +228,10 @@ object IndexLedger {
       spark: SparkSession, statePath: String, p: Pending,
       batchId: Option[Long]): Unit = {
     val next = p.ix.version + 1
-    writeCodes(spark, statePath, DedupLedger.partName(next), p.assigned)
-    DedupLedger.writeManifest(statePath, manifestOf(p.ix.copy(
+    writeCodes(spark, statePath, partName(next), p.assigned)
+    Ledger.writeManifest(statePath, manifestOf(p.ix.copy(
       version = next,
-      codeParts = p.ix.codeParts :+ DedupLedger.partName(next),
+      codeParts = p.ix.codeParts :+ partName(next),
       lastBatchId = batchId)))
   }
 
@@ -251,7 +243,7 @@ object IndexLedger {
   def absorb(
       spark: SparkSession, statePath: String,
       batch: DataFrame): DataFrame = {
-    val p = deriveBatch(spark, statePath, batch)
+    val p = deriveBatch(spark, statePath, ixAt(statePath), batch)
     commitState(spark, statePath, p, batchId = None)
     val out = p.assigned.select(col("__aid").as("vec_id"), col("cell"))
       .orderBy("vec_id")
@@ -259,29 +251,21 @@ object IndexLedger {
     out
   }
 
-  /** Streaming ingest with the [[DedupLedger.absorbSink]] exactly-once
+  /** Streaming ingest with the [[Ledger.admit]] exactly-once
     * discipline: per-batch output dir first (deterministic overwrite),
     * batchId-marked manifest commit last, replay of a committed batch
     * is a no-op, checkpoint/state drift fails loudly. */
   def absorbSink(
       spark: SparkSession, statePath: String,
       outDir: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val ix = readIx(statePath)
-      ix.lastBatchId.foreach { last =>
-        require(batchId == last || batchId == last + 1,
-          s"stream/ledger mismatch at $statePath: ledger committed " +
-            s"micro-batch $last but foreachBatch delivered $batchId")
-      }
-      if (!ix.lastBatchId.contains(batchId)) {
-        val p = deriveBatch(spark, statePath, batch)
+    (batch, batchId) =>
+      Ledger.admit(statePath, batchId).foreach { m =>
+        val p = deriveBatch(spark, statePath, parse(m), batch)
         p.assigned.select(col("__aid").as("vec_id"), col("cell"))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
         commitState(spark, statePath, p, Some(batchId))
         p.assigned.unpersist()
-        ()
       }
-    }
 
   /** The k·oversample stage-1 shortlist per query, from committed
     * state only: probe the `nprobe` best cells by centroid dot (the
@@ -351,7 +335,7 @@ object IndexLedger {
   def driftRatio(
       spark: SparkSession, statePath: String,
       batch: DataFrame): Double = {
-    val ix = readIx(statePath)
+    val ix = ixAt(statePath)
     val cent = readCentroids(spark, statePath, ix)
     val d = distortionOf(assign(prep(batch), cent))
     if (ix.baseDistortion <= 0.0) 1.0 else d / ix.baseDistortion
@@ -366,7 +350,7 @@ object IndexLedger {
     * to the refreshed fit. */
   def refresh(
       spark: SparkSession, statePath: String, nlist: Int = 16): Unit = {
-    val ix = readIx(statePath)
+    val ix = ixAt(statePath)
     val decoded = readCodes(spark, statePath, ix)
       .select(col("vec_id").as("__aid"),
         transform(col("qc").cast("array<double>"),
@@ -374,7 +358,7 @@ object IndexLedger {
         col("qc").cast("array<double>").as("__qc"), col("d2").as("__d2"))
     val next = ix.version + 1
     build(spark, statePath, decoded, nlist, IxManifest(
-      next, Seq(DedupLedger.partName(next)), next, 0.0, ix.lastBatchId))
+      next, Seq(partName(next)), next, 0.0, ix.lastBatchId))
   }
 
   /** Erasure for the per-vector index state (the [[DedupLedger
@@ -390,7 +374,7 @@ object IndexLedger {
   def purge(
       spark: SparkSession, statePath: String,
       vecIds: DataFrame): Long = {
-    val ix = readIx(statePath)
+    val ix = ixAt(statePath)
     val doomed = vecIds
       .select(col(vecIds.columns.head).cast("long").as("vec_id"))
       .distinct()
@@ -399,21 +383,18 @@ object IndexLedger {
       current.join(broadcast(doomed), Seq("vec_id"), "left_anti")
     val removed = current.count() - retained.count()
     if (removed == 0L) return 0L
-    val next = ix.version + 1
-    retained.write.mode("overwrite")
-      .parquet(codesDir(statePath, DedupLedger.partName(next)))
-    DedupLedger.writeManifest(statePath, manifestOf(ix.copy(
-      version = next,
-      codeParts = Seq(DedupLedger.partName(next)))))
-    DedupLedger.truncateSnapshots(statePath, next)
+    Ledger.maintain(statePath, manifestOf(ix), erase = true) { next =>
+      retained.write.mode("overwrite")
+        .parquet(codesDir(statePath, partName(next)))
+    }
     removed
   }
 
   /** Age-based retention for code parts + centroid versions — see
-    * [[DedupLedger.vacuumState]]. A centroid version survives while
+    * [[Ledger.vacuumState]]. A centroid version survives while
     * ANY surviving manifest points at it. */
   def vacuum(statePath: String, keepVersions: Int): Long =
-    DedupLedger.vacuumState(statePath, keepVersions,
+    Ledger.vacuumState(statePath, keepVersions,
       m => {
         val ix = parse(m)
         ix.codeParts.map("codes/" + _) :+
@@ -422,19 +403,17 @@ object IndexLedger {
       Seq("codes", "centroids"))
 
   /** Fold the code parts into one (absorb appends a part per
-    * increment); centroids and version semantics follow the
-    * [[DedupLedger.compact]] discipline — superseded parts stay on
-    * disk for as-of reads. Returns true if compaction ran. */
+    * increment) through the [[Ledger.maintain]] commit — centroids and
+    * the stream marker carry forward, superseded parts stay on disk
+    * for as-of reads. Returns true if compaction ran. */
   def compact(spark: SparkSession, statePath: String): Boolean = {
-    val ix = readIx(statePath)
+    val ix = ixAt(statePath)
     if (ix.codeParts.lengthCompare(1) <= 0) false
     else {
-      val next = ix.version + 1
-      readCodes(spark, statePath, ix).write.mode("overwrite")
-        .parquet(codesDir(statePath, DedupLedger.partName(next)))
-      DedupLedger.writeManifest(statePath, manifestOf(ix.copy(
-        version = next,
-        codeParts = Seq(DedupLedger.partName(next)))))
+      Ledger.maintain(statePath, manifestOf(ix), erase = false) { next =>
+        readCodes(spark, statePath, ix).write.mode("overwrite")
+          .parquet(codesDir(statePath, partName(next)))
+      }
       true
     }
   }

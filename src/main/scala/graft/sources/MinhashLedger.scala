@@ -22,16 +22,14 @@ import org.apache.spark.sql.functions._
   * proven in MinhashLedgerSpec. Callers drop flagged docs (or route
   * them to review) as policy.
   *
-  * State layout and crash safety are [[DedupLedger]]'s verbatim
-  * (shared manifest format + tmp/rename commit): `sigs/part_<v>/`
-  * append-only signature parts, `CURRENT` manifest listing committed
-  * parts; orphan parts from a crash before the rename are ignored and
-  * reclaimed by the idempotent replay.
+  * State layout and crash safety are the [[Ledger]] commit protocol:
+  * `sigs/part_<v>/` append-only signature parts behind the shared
+  * manifest listing committed parts; orphan parts from a crash before
+  * the commit are ignored and reclaimed by the idempotent replay.
   */
 object MinhashLedger {
 
-  import DedupLedger.{Manifest, partName, readManifest, readManifestAt,
-    truncateSnapshots, writeManifest}
+  import Ledger.{Manifest, partName, writeManifest}
 
   private def sigsDir(statePath: String, part: String) =
     s"$statePath/sigs/$part"
@@ -41,8 +39,7 @@ object MinhashLedger {
   def init(
       spark: SparkSession, statePath: String, corpus: DataFrame,
       k: Int = 16): Unit = {
-    require(readManifest(statePath).isEmpty,
-      s"ledger already initialized at $statePath")
+    Ledger.requireFresh(statePath)
     Dedup.minhashSignatures(corpus, k)
       .write.mode("overwrite")
       .parquet(sigsDir(statePath, partName(1)))
@@ -50,26 +47,22 @@ object MinhashLedger {
   }
 
   /** All committed signatures: the lazy union of the manifest's parts
-    * — fingerprints, never text. */
-  def signatures(spark: SparkSession, statePath: String): DataFrame = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
-    spark.read.parquet(m.keyParts.map(sigsDir(statePath, _)): _*)
-  }
-
-  /** Time-travel read: the signature set exactly as committed at
-    * `asOfVersion` ([[DedupLedger.keys]]'s as-of twin — "what did
-    * increment 7's near-dup probe actually see?"). Superseded parts
-    * are deleted only by an explicit [[vacuum]], so pre-purge versions stay
-    * readable; versions older than the latest [[purge]] are refused
-    * (purge truncates their snapshots — erased signatures must not
-    * resurface via time travel). */
+    * — fingerprints, never text. With `asOfVersion`, the time-travel
+    * read: the signature set exactly as committed then
+    * ([[DedupLedger.keys]]'s as-of twin — "what did increment 7's
+    * near-dup probe actually see?"). Superseded parts are deleted only
+    * by an explicit [[vacuum]], so pre-purge versions stay readable;
+    * versions older than the latest [[purge]] are refused (purge
+    * truncates their snapshots — erased signatures must not resurface
+    * via time travel). */
   def signatures(
       spark: SparkSession, statePath: String,
-      asOfVersion: Long): DataFrame = {
-    val m = readManifestAt(statePath, asOfVersion)
+      asOfVersion: Long = -1L): DataFrame =
+    sigsOf(spark, statePath, Ledger.at(statePath, asOfVersion))
+
+  private def sigsOf(
+      spark: SparkSession, statePath: String, m: Manifest): DataFrame =
     spark.read.parquet(m.keyParts.map(sigsDir(statePath, _)): _*)
-  }
 
   /** Flag `batch`'s near-duplicates against everything seen (ledger ∪
     * own batch), absorb the batch's signatures, and return the flag
@@ -81,9 +74,7 @@ object MinhashLedger {
       spark: SparkSession, statePath: String, batch: DataFrame,
       k: Int = 16, bands: Int = 4,
       minEstJaccard: Double = 0.5): DataFrame = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(
-        s"no ledger at $statePath — call init(corpus) first"))
+    val m = Ledger.current(statePath)
     val (flags, next) =
       deriveFlags(spark, statePath, m, batch, k, bands, minEstJaccard)
     writeManifest(statePath,
@@ -111,8 +102,7 @@ object MinhashLedger {
       .write.mode("overwrite")
       .parquet(sigsDir(statePath, partName(next)))
     val batchSig = spark.read.parquet(sigsDir(statePath, partName(next)))
-    val ledgerSig =
-      spark.read.parquet(m.keyParts.map(sigsDir(statePath, _)): _*)
+    val ledgerSig = sigsOf(spark, statePath, m)
     val flags = Dedup.nearDupFlags(
       batchSig, ledgerSig.unionByName(batchSig), k, bands,
       minEstJaccard)
@@ -120,64 +110,41 @@ object MinhashLedger {
   }
 
   /** Streaming ingest — [[DedupLedger.absorbSink]]'s discipline for
-    * the signature ledger, completing the ledger trio's surface
-    * parity: a `foreachBatch` function that flags each micro-batch's
-    * near-duplicates against everything seen, writes the flag frame
-    * under `outDir/batch_<id>`, and absorbs the batch's signatures —
-    * EXACTLY-ONCE despite foreachBatch's at-least-once replay:
-    *
-    *  1. the signature part and the flag output land FIRST, both
-    *     mode=overwrite: a replay of an uncommitted batch (manifest
-    *     never advanced) re-derives the identical signatures and flags
-    *     and redoes the same deterministic dirs;
-    *  2. the manifest records the batchId LAST — a replay of a
-    *     committed batch sees its own id and no-ops instead of
-    *     re-absorbing against the advanced ledger (which would flag
-    *     the whole batch as duplicate-of-itself and clobber the real
-    *     flag output).
-    *
-    * Same checkpoint/state drift guard as the other two sinks: ids may
-    * only be last (replay → no-op) or last+1 (progress). One stream
-    * per ledger (single-writer, as everywhere here). Usage:
+    * the signature ledger: a `foreachBatch` function that flags each
+    * micro-batch's near-duplicates against everything seen, writes the
+    * flag frame under `outDir/batch_<id>`, and absorbs the batch's
+    * signatures — EXACTLY-ONCE despite foreachBatch's at-least-once
+    * replay ([[Ledger.admit]]). The signature part and the flag output
+    * land first, the batchId-marked manifest last; a replay of a
+    * committed batch no-ops instead of re-absorbing against the
+    * advanced ledger (which would flag the whole batch as
+    * duplicate-of-itself and clobber the real flag output). Usage:
     * `docs.writeStream.foreachBatch(
     *   MinhashLedger.absorbSink(spark, state, out)).start()`. */
   def absorbSink(
       spark: SparkSession, statePath: String, outDir: String,
       k: Int = 16, bands: Int = 4,
       minEstJaccard: Double = 0.5): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val m = readManifest(statePath).getOrElse(
-        throw new IllegalStateException(
-          s"no ledger at $statePath — call init(corpus) first"))
-      m.lastBatchId.foreach { last =>
-        require(batchId == last || batchId == last + 1,
-          s"stream/ledger mismatch at $statePath: ledger committed " +
-            s"micro-batch $last but foreachBatch delivered $batchId; " +
-            "the checkpoint, the ledger state, and the output dir " +
-            "form one unit — restarting a stream with a fresh " +
-            "checkpoint over existing state is not recoverable here")
-      }
-      if (!m.lastBatchId.contains(batchId)) {
+    (batch, batchId) =>
+      Ledger.admit(statePath, batchId).foreach { m =>
         val (flags, next) =
           deriveFlags(spark, statePath, m, batch, k, bands, minEstJaccard)
         flags.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
         writeManifest(statePath,
           Manifest(next, m.keyParts :+ partName(next), Some(batchId)))
       }
-    }
 
   /** Compact signature parts into one (the [[DedupLedger.compact]]
-    * maintenance step — identical rationale and commit shape). */
+    * rationale, the [[Ledger.maintain]] commit). */
   def compact(spark: SparkSession, statePath: String): Boolean = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
+    val m = Ledger.current(statePath)
     if (m.keyParts.lengthCompare(1) <= 0) false
     else {
-      val next = m.version + 1
-      signatures(spark, statePath)
-        .write.mode("overwrite")
-        .parquet(sigsDir(statePath, partName(next)))
-      writeManifest(statePath, Manifest(next, Seq(partName(next))))
+      Ledger.maintain(statePath, m, erase = false) { next =>
+        sigsOf(spark, statePath, m)
+          .write.mode("overwrite")
+          .parquet(sigsDir(statePath, partName(next)))
+      }
       true
     }
   }
@@ -190,29 +157,27 @@ object MinhashLedger {
   def purge(
       spark: SparkSession, statePath: String,
       docIds: DataFrame): Long = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
+    val m = Ledger.current(statePath)
     val doomed = docIds
       .select(col(docIds.columns.head).as("doc_id")).distinct()
-    val current = signatures(spark, statePath)
+    val current = sigsOf(spark, statePath, m)
     val retained = current
       .join(broadcast(doomed), Seq("doc_id"), "left_anti")
     val removed = current.count() - retained.count()
     if (removed == 0L) return 0L
-    val next = m.version + 1
-    retained.write.mode("overwrite")
-      .parquet(sigsDir(statePath, partName(next)))
-    writeManifest(statePath, Manifest(next, Seq(partName(next))))
     // close the time-travel door on the purged signatures (the
     // DedupLedger.purge discipline)
-    truncateSnapshots(statePath, next)
+    Ledger.maintain(statePath, m, erase = true) { next =>
+      retained.write.mode("overwrite")
+        .parquet(sigsDir(statePath, partName(next)))
+    }
     removed
   }
 
   /** Age-based retention for the signature parts — see
-    * [[DedupLedger.vacuumState]] for the contract and crash-safety
+    * [[Ledger.vacuumState]] for the contract and crash-safety
     * argument. */
   def vacuum(statePath: String, keepVersions: Int): Long =
-    DedupLedger.vacuumState(statePath, keepVersions,
+    Ledger.vacuumState(statePath, keepVersions,
       m => m.keyParts.map("sigs/" + _), Seq("sigs"))
 }

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   * kilobyte addition. The q148/q171 alternative recomputes the
   * moment pass over the whole corpus per refresh.
   *
-  * Exactly-once and versioning follow [[SketchLedger]] verbatim
-  * (every version is the full one-row state; shared manifest rename
-  * with the batchId recorded; as-of reads off manifest snapshots).
+  * Exactly-once and versioning are the [[Ledger]] commit protocol,
+  * shaped like [[SketchLedger]] (every version is the full one-row
+  * state; manifest commit with the batchId recorded; as-of reads off
+  * manifest snapshots).
   * Float caveat, stated precisely: the accumulated sums are exact
   * associative math over doubles, so ledger state differs from a
   * one-shot corpus aggregate only by float ADDITION ORDER (the same
@@ -39,8 +40,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   */
 object MomentLedger {
 
-  import DedupLedger.{Manifest, partName, readManifest, readManifestAt,
-    writeManifest}
+  import Ledger.{Manifest, partName, writeManifest}
 
   private def tableDir(statePath: String, part: String) =
     s"$statePath/table/$part"
@@ -63,8 +63,7 @@ object MomentLedger {
     * from the first absorbed batch (dimension-agnostic, like the
     * aggregator's buffer). */
   def init(spark: SparkSession, statePath: String): Unit = {
-    require(readManifest(statePath).isEmpty,
-      s"ledger already initialized at $statePath")
+    Ledger.requireFresh(statePath)
     writeState(spark, statePath, partName(1),
       Moments(0L, Array.empty, Array.empty, Array.empty))
     writeManifest(statePath, Manifest(1, Seq(partName(1))))
@@ -89,24 +88,17 @@ object MomentLedger {
         (p.getInt(0), p.getInt(1), p.getDouble(2))).toArray)
   }
 
-  /** The committed running moments (current version). */
-  def moments(spark: SparkSession, statePath: String): Moments = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
-    readState(spark, statePath, m.keyParts.last)
-  }
-
-  /** Time-travel read: the moment state exactly as committed at
-    * `asOfVersion` — "what did the rotation look like before
-    * yesterday's crawl?" (same snapshot semantics as the other three
+  /** The committed running moments (current version). With
+    * `asOfVersion`, the time-travel read: the moment state exactly as
+    * committed then — "what did the rotation look like before
+    * yesterday's crawl?" (same snapshot semantics as the other
     * ledgers; every version is a full state, deleted only by an
     * explicit [[vacuum]]). */
   def moments(
       spark: SparkSession, statePath: String,
-      asOfVersion: Long): Moments = {
-    val m = readManifestAt(statePath, asOfVersion)
-    readState(spark, statePath, m.keyParts.last)
-  }
+      asOfVersion: Long = -1L): Moments =
+    readState(spark, statePath,
+      Ledger.at(statePath, asOfVersion).keyParts.last)
 
   private def batchMoments(
       batch: DataFrame, vecCol: String): Moments = {
@@ -141,20 +133,25 @@ object MomentLedger {
     * new version. Returns the new running state. */
   def absorb(
       spark: SparkSession, statePath: String, batch: DataFrame,
-      vecCol: String = "embedding"): Moments = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(
-        s"no ledger at $statePath — call init first"))
+      vecCol: String = "embedding"): Moments =
+    fold(spark, statePath, Ledger.current(statePath), batch, vecCol, None)
+
+  /** The state advance of [[absorb]] and [[absorbSink]]: fold the
+    * batch into the state of `m`, write it as the next version, commit
+    * with `batchId` as the marker. */
+  private def fold(
+      spark: SparkSession, statePath: String, m: Manifest,
+      batch: DataFrame, vecCol: String, batchId: Option[Long]): Moments = {
     val next = m.version + 1
     val merged = add(readState(spark, statePath, m.keyParts.last),
       batchMoments(batch, vecCol))
     writeState(spark, statePath, partName(next), merged)
-    writeManifest(statePath, Manifest(next, Seq(partName(next))))
+    writeManifest(statePath, Manifest(next, Seq(partName(next)), batchId))
     merged
   }
 
-  /** foreachBatch ingest with the [[SketchLedger.absorbSink]]
-    * exactly-once discipline: uncommitted replays re-derive from the
+  /** foreachBatch ingest with the [[Ledger.admit]] exactly-once
+    * discipline: uncommitted replays re-derive from the
     * unchanged prior version (bit-identical — the fold order is
     * fixed), committed replays no-op, checkpoint/state drift fails
     * loudly. Usage: `vectors.writeStream.foreachBatch(
@@ -162,24 +159,10 @@ object MomentLedger {
   def absorbSink(
       spark: SparkSession, statePath: String,
       vecCol: String = "embedding"): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val m = readManifest(statePath).getOrElse(
-        throw new IllegalStateException(
-          s"no ledger at $statePath — call init first"))
-      m.lastBatchId.foreach { last =>
-        require(batchId == last || batchId == last + 1,
-          s"stream/ledger mismatch at $statePath: ledger committed " +
-            s"micro-batch $last but foreachBatch delivered $batchId")
+    (batch, batchId) =>
+      Ledger.admit(statePath, batchId).foreach { m =>
+        fold(spark, statePath, m, batch, vecCol, Some(batchId))
       }
-      if (!m.lastBatchId.contains(batchId)) {
-        val next = m.version + 1
-        val merged = add(readState(spark, statePath, m.keyParts.last),
-          batchMoments(batch, vecCol))
-        writeState(spark, statePath, partName(next), merged)
-        writeManifest(statePath,
-          Manifest(next, Seq(partName(next)), Some(batchId)))
-      }
-    }
 
   /** Full-history PCA model off the current (or as-of) state — the
     * read that never rescans a vector. Same deterministic eigensolve
@@ -187,9 +170,7 @@ object MomentLedger {
   def model(
       spark: SparkSession, statePath: String, k: Int,
       asOfVersion: Long = -1L): Pca.Model = {
-    val s =
-      if (asOfVersion < 0) moments(spark, statePath)
-      else moments(spark, statePath, asOfVersion)
+    val s = moments(spark, statePath, asOfVersion)
     Pca.modelFromMoments(s.n, s.sums, s.diag, s.pairs.toSeq, k)
   }
 
@@ -235,8 +216,7 @@ object MomentLedger {
   def purge(
       spark: SparkSession, statePath: String, vectors: DataFrame,
       vecCol: String = "embedding"): Long = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
+    val m = Ledger.current(statePath)
     val cur = readState(spark, statePath, m.keyParts.last)
     val b = batchMoments(vectors, vecCol)
     if (b.n == 0L) return 0L
@@ -251,19 +231,15 @@ object MomentLedger {
       cur.pairs.zip(b.pairs).map { case ((i, j, x), (i2, j2, y)) =>
         require(i == i2 && j == j2); (i, j, x - y)
       })
-    val next = m.version + 1
-    writeState(spark, statePath, partName(next), merged)
-    // lastBatchId survives: erasure must not loosen the stream sink's
-    // replay guard
-    writeManifest(statePath,
-      Manifest(next, Seq(partName(next)), m.lastBatchId))
-    DedupLedger.truncateSnapshots(statePath, next)
+    Ledger.maintain(statePath, m, erase = true) { next =>
+      writeState(spark, statePath, partName(next), merged)
+    }
     b.n
   }
 
   /** Age-based retention for the per-version moment tables — see
-    * [[DedupLedger.vacuumState]]. */
+    * [[Ledger.vacuumState]]. */
   def vacuum(statePath: String, keepVersions: Int): Long =
-    DedupLedger.vacuumState(statePath, keepVersions,
+    Ledger.vacuumState(statePath, keepVersions,
       m => m.keyParts.map("table/" + _), Seq("table"))
 }

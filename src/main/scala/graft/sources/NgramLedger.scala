@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * rescanning corpus text. State is the corpus-wide shingle df table
   * as APPEND-ONLY delta parts (`df/part_N`, 8-byte xxhash64
   * fingerprint + long count) behind the shared
-  * [[DedupLedger.Manifest]] commit discipline; reads merge-on-read
+  * [[Ledger]] commit protocol; reads merge-on-read
   * (one hash aggregate over the manifest's parts — the LSM shape),
   * [[compact]] folds parts back to one.
   *
@@ -30,8 +30,7 @@ import org.apache.spark.sql.functions._
   * truncating snapshots; [[vacuum]] age-based part reclamation. */
 object NgramLedger {
 
-  import DedupLedger.{Manifest, partName, readManifest, readManifestAt,
-    truncateSnapshots, writeManifest}
+  import Ledger.{Manifest, partName, writeManifest}
 
   private def dfDir(statePath: String, part: String) =
     s"$statePath/df/$part"
@@ -82,8 +81,7 @@ object NgramLedger {
   def init(
       spark: SparkSession, statePath: String, corpus: DataFrame,
       n: Int = 3): Unit = {
-    require(readManifest(statePath).isEmpty,
-      s"ledger already initialized at $statePath")
+    Ledger.requireFresh(statePath)
     dfOf(index(corpus, n))
       .write.mode("overwrite").parquet(dfDir(statePath, partName(1)))
     // the doc registry (8 bytes/doc) is what makes purge IDEMPOTENT:
@@ -103,20 +101,13 @@ object NgramLedger {
 
   /** The committed corpus-wide df table: merge-on-read over the
     * manifest's delta parts. Fingerprints and counts only — never
-    * text. */
-  def dfTable(spark: SparkSession, statePath: String): DataFrame = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
-    mergedAt(spark, statePath, m)
-  }
-
-  /** Time-travel read: the df table exactly as committed at
-    * `asOfVersion` ("which dfs did increment 7 gate against?").
-    * Versions older than the latest purge are refused. */
+    * text. With `asOfVersion`, the time-travel read: the df table
+    * exactly as committed then ("which dfs did increment 7 gate
+    * against?"). Versions older than the latest purge are refused. */
   def dfTable(
       spark: SparkSession, statePath: String,
-      asOfVersion: Long): DataFrame =
-    mergedAt(spark, statePath, readManifestAt(statePath, asOfVersion))
+      asOfVersion: Long = -1L): DataFrame =
+    mergedAt(spark, statePath, Ledger.at(statePath, asOfVersion))
 
   private def mergedAt(
       spark: SparkSession, statePath: String, m: Manifest): DataFrame =
@@ -132,11 +123,8 @@ object NgramLedger {
       m: Manifest)
 
   private def riskBatch(
-      spark: SparkSession, statePath: String, batch: DataFrame,
-      n: Int, minDf: Int): Pending = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(
-        s"no ledger at $statePath — call init(corpus) first"))
+      spark: SparkSession, statePath: String, m: Manifest,
+      batch: DataFrame, n: Int, minDf: Int): Pending = {
     requireN(statePath, n)
     // additivity guard: a doc_id already in the registry must not
     // contribute df deltas AGAIN (docsTable dedups the registry, so a
@@ -194,51 +182,40 @@ object NgramLedger {
   def absorb(
       spark: SparkSession, statePath: String, batch: DataFrame,
       n: Int = 3, minDf: Int = 4): DataFrame = {
-    val p = riskBatch(spark, statePath, batch, n, minDf)
+    val p = riskBatch(
+      spark, statePath, Ledger.current(statePath), batch, n, minDf)
     commitState(statePath, p, batchId = None)
     p.risk
   }
 
   /** Streaming ingest: exactly-once risk output under
     * `outDir/batch_<id>` despite foreachBatch's at-least-once replay
-    * — output first (deterministic overwrite), manifest batchId last
-    * (committed replay no-ops). Single writer per ledger. */
+    * ([[Ledger.admit]]) — output first (deterministic overwrite),
+    * manifest batchId last (committed replay no-ops). */
   def absorbSink(
       spark: SparkSession, statePath: String, outDir: String,
       n: Int = 3, minDf: Int = 4): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val cur = readManifest(statePath).getOrElse(
-        throw new IllegalStateException(
-          s"no ledger at $statePath — call init(corpus) first"))
-      cur.lastBatchId.foreach { last =>
-        require(batchId == last || batchId == last + 1,
-          s"stream/ledger mismatch at $statePath: ledger committed " +
-            s"micro-batch $last but foreachBatch delivered $batchId")
-      }
-      if (!cur.lastBatchId.contains(batchId)) {
-        val p = riskBatch(spark, statePath, batch, n, minDf)
+    (batch, batchId) =>
+      Ledger.admit(statePath, batchId).foreach { m =>
+        val p = riskBatch(spark, statePath, m, batch, n, minDf)
         p.risk.write.mode("overwrite")
           .parquet(s"$outDir/batch_$batchId")
         commitState(statePath, p, Some(batchId))
-        ()
       }
-    }
 
   /** Fold the delta parts into one (the LSM maintenance step): the
     * merged table is rewritten as a single part and the manifest
     * re-pointed. Data first, rename last; superseded parts stay for
     * as-of until [[vacuum]]. Returns true if compaction ran. */
   def compact(spark: SparkSession, statePath: String): Boolean = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
+    val m = Ledger.current(statePath)
     if (m.keyParts.size <= 1) return false
-    val next = m.version + 1
-    mergedAt(spark, statePath, m)
-      .write.mode("overwrite").parquet(dfDir(statePath, partName(next)))
-    docsTable(spark, statePath, m)
-      .write.mode("overwrite").parquet(docsDir(statePath, partName(next)))
-    writeManifest(statePath,
-      Manifest(next, Seq(partName(next)), m.lastBatchId))
+    Ledger.maintain(statePath, m, erase = false) { next =>
+      mergedAt(spark, statePath, m)
+        .write.mode("overwrite").parquet(dfDir(statePath, partName(next)))
+      docsTable(spark, statePath, m)
+        .write.mode("overwrite").parquet(docsDir(statePath, partName(next)))
+    }
     true
   }
 
@@ -265,8 +242,7 @@ object NgramLedger {
   def purge(
       spark: SparkSession, statePath: String, docs: DataFrame,
       n: Int = 3): Long = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
+    val m = Ledger.current(statePath)
     requireN(statePath, n)
     val registry = docsTable(spark, statePath, m)
     // only docs STILL IN the registry may subtract — the idempotence
@@ -279,7 +255,6 @@ object NgramLedger {
     if (removed == 0L) return 0L
     val sub = dfOf(index(present, n))
       .select(col("g"), (-col("df")).as("df"))
-    val next = m.version + 1
     val merged = mergedAt(spark, statePath, m).unionByName(sub)
       .groupBy("g").agg(sum("df").as("df"))
       .localCheckpoint(true)
@@ -288,21 +263,20 @@ object NgramLedger {
       s"purge at $statePath drove $negatives dfs negative — the " +
         "purged docs' text differs from what was absorbed " +
         "(text-identity contract); state NOT rewritten")
-    merged.filter(col("df") > 0)
-      .write.mode("overwrite").parquet(dfDir(statePath, partName(next)))
-    registry.join(present.select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(docsDir(statePath, partName(next)))
-    writeManifest(statePath,
-      Manifest(next, Seq(partName(next)), m.lastBatchId))
-    truncateSnapshots(statePath, next)
+    Ledger.maintain(statePath, m, erase = true) { next =>
+      merged.filter(col("df") > 0)
+        .write.mode("overwrite").parquet(dfDir(statePath, partName(next)))
+      registry.join(present.select("doc_id").distinct(),
+          Seq("doc_id"), "left_anti")
+        .write.mode("overwrite").parquet(docsDir(statePath, partName(next)))
+    }
     removed
   }
 
   /** Age-based retention for superseded delta parts — see
-    * [[DedupLedger.vacuumState]]. */
+    * [[Ledger.vacuumState]]. */
   def vacuum(statePath: String, keepVersions: Int): Long =
-    DedupLedger.vacuumState(statePath, keepVersions,
+    Ledger.vacuumState(statePath, keepVersions,
       m => m.keyParts.flatMap(p => Seq(s"df/$p", s"docs/$p")),
       Seq("df", "docs"))
 }

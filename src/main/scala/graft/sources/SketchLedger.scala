@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{BinaryType, DateType, LongType,
   * at 100 TB" story end-to-end: q167 reads quantiles OFF a sketch
   * table; this ledger is what KEEPS that table current as events
   * stream in, with exactly-once semantics despite foreachBatch's
-  * at-least-once replay (the [[DedupLedger.absorbSink]] discipline on
-  * the same shared manifest format).
+  * at-least-once replay (the [[Ledger]] commit protocol and its
+  * [[Ledger.admit]] exactly-once guard).
   *
   * Each micro-batch: sketch the batch per (event_type, day), merge
   * with the current table (kilobytes — |types|·|days| rows regardless
@@ -24,8 +24,7 @@ import org.apache.spark.sql.types.{BinaryType, DateType, LongType,
   */
 object SketchLedger {
 
-  import DedupLedger.{Manifest, partName, readManifest, readManifestAt,
-    writeManifest}
+  import Ledger.{Manifest, partName, writeManifest}
 
   private def tableDir(statePath: String, part: String) =
     s"$statePath/table/$part"
@@ -38,8 +37,7 @@ object SketchLedger {
 
   /** Start from an empty sketch table (version 1). */
   def init(spark: SparkSession, statePath: String): Unit = {
-    require(readManifest(statePath).isEmpty,
-      s"ledger already initialized at $statePath")
+    Ledger.requireFresh(statePath)
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       schema)
@@ -49,27 +47,21 @@ object SketchLedger {
 
   /** The current committed sketch table. Unlike the append-only
     * ledgers, every version is a FULL table, so the manifest always
-    * lists exactly one part. */
-  def table(spark: SparkSession, statePath: String): DataFrame = {
-    val m = readManifest(statePath).getOrElse(
-      throw new IllegalStateException(s"no ledger at $statePath"))
-    spark.read.schema(schema)
-      .parquet(tableDir(statePath, m.keyParts.last))
-  }
-
-  /** Time-travel read: the sketch table exactly as committed at
-    * `asOfVersion` — every version is a FULL table and superseded
-    * versions survive until an explicit [[vacuum]], so "what did the p99 look like before
-    * yesterday's batch?" is a one-line audit read. Refuses versions
-    * beyond CURRENT or without a committed snapshot (see
-    * [[DedupLedger.readManifestAt]]). */
+    * lists exactly one part. With `asOfVersion`, the time-travel read:
+    * the sketch table exactly as committed then — superseded versions
+    * survive until an explicit [[vacuum]], so "what did the p99 look
+    * like before yesterday's batch?" is a one-line audit read. Refuses
+    * versions beyond CURRENT or without a committed snapshot (see
+    * [[Ledger.readManifestAt]]). */
   def table(
       spark: SparkSession, statePath: String,
-      asOfVersion: Long): DataFrame = {
-    val m = readManifestAt(statePath, asOfVersion)
+      asOfVersion: Long = -1L): DataFrame =
+    tableOf(spark, statePath, Ledger.at(statePath, asOfVersion))
+
+  private def tableOf(
+      spark: SparkSession, statePath: String, m: Manifest): DataFrame =
     spark.read.schema(schema)
       .parquet(tableDir(statePath, m.keyParts.last))
-  }
 
   /** Quantile read-off from the current table, rolled up per
     * event_type (the q167 shape, but against live streamed state). */
@@ -94,25 +86,15 @@ object SketchLedger {
   def absorbSink(
       spark: SparkSession, statePath: String,
       k: Int = 200): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val m = readManifest(statePath).getOrElse(
-        throw new IllegalStateException(
-          s"no ledger at $statePath — call init first"))
-      // same drift guard as DedupLedger.absorbSink: ids may only be
-      // last (replay → no-op) or last+1 (progress)
-      m.lastBatchId.foreach { last =>
-        require(batchId == last || batchId == last + 1,
-          s"stream/ledger mismatch at $statePath: ledger committed " +
-            s"micro-batch $last but foreachBatch delivered $batchId")
-      }
-      if (!m.lastBatchId.contains(batchId)) {
+    (batch, batchId) =>
+      Ledger.admit(statePath, batchId).foreach { m =>
         import graft.functions.QuantileSketch.{kll_agg, kll_merge_agg}
         val fresh = batch.filter(col("value").isNotNull)
           .groupBy(col("event_type"), to_date(col("ts")).as("day"))
           .agg(kll_agg(col("value").cast("double"), k).as("sketch"),
             count(lit(1)).as("n_values"))
         val next = m.version + 1
-        table(spark, statePath).unionByName(fresh)
+        tableOf(spark, statePath, m).unionByName(fresh)
           .groupBy("event_type", "day")
           .agg(kll_merge_agg(col("sketch"), k).as("sketch"),
             sum("n_values").as("n_values"))
@@ -122,11 +104,10 @@ object SketchLedger {
         writeManifest(statePath,
           Manifest(next, Seq(partName(next)), Some(batchId)))
       }
-    }
 
   /** Age-based retention for the per-version sketch tables — see
-    * [[DedupLedger.vacuumState]]. */
+    * [[Ledger.vacuumState]]. */
   def vacuum(statePath: String, keepVersions: Int): Long =
-    DedupLedger.vacuumState(statePath, keepVersions,
+    Ledger.vacuumState(statePath, keepVersions,
       m => m.keyParts.map("table/" + _), Seq("table"))
 }

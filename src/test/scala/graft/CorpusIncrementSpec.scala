@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{CorpusIncrement, DedupLedger}
+import graft.sources.{CorpusIncrement, DedupLedger, Ledger}
 import org.apache.spark.sql.functions._
 
 /** The composed end-to-end incremental corpus refresh: one
@@ -139,10 +139,10 @@ class CorpusIncrementSpec extends SparkSpec {
     assert(rowSet(CorpusIncrement.kept(spark, rootS)) ==
       rowSet(CorpusIncrement.kept(spark, rootB)))
     // committed replay short-circuits at the root manifest
-    val v = DedupLedger.readManifest(rootS).get.version
+    val v = Ledger.readManifest(rootS).get.version
     CorpusIncrement.absorbSink(spark, rootS)(
       spark.read.parquet(b2Dir), 1L)
-    assert(DedupLedger.readManifest(rootS).get.version == v)
+    assert(Ledger.readManifest(rootS).get.version == v)
   }
 
   test("crash replay: rolling the root manifest back re-derives the " +
@@ -156,7 +156,7 @@ class CorpusIncrementSpec extends SparkSpec {
     val first = rowSet(CorpusIncrement.increment(
       spark, root, spark.read.parquet(b1Dir), 0L))
     val dedupV =
-      DedupLedger.readManifest(CorpusIncrement.dedupState(root)).get
+      Ledger.readManifest(CorpusIncrement.dedupState(root)).get
     // crash after stage 3 (both inner ledgers + kept part committed)
     // but before the root manifest rename
     java.nio.file.Files.write(
@@ -165,13 +165,13 @@ class CorpusIncrementSpec extends SparkSpec {
       spark, root, spark.read.parquet(b1Dir), 0L))
     assert(replay == first)
     // the inner ledgers no-opped (their markers matched), versions flat
-    assert(DedupLedger.readManifest(CorpusIncrement.dedupState(root))
+    assert(Ledger.readManifest(CorpusIncrement.dedupState(root))
       .get.version == dedupV.version)
     // fully committed replay short-circuits
-    val mAfter = DedupLedger.readManifest(root).get
+    val mAfter = Ledger.readManifest(root).get
     assert(rowSet(CorpusIncrement.increment(
       spark, root, spark.read.parquet(b1Dir), 0L)) == first)
-    assert(DedupLedger.readManifest(root).get.version == mAfter.version)
+    assert(Ledger.readManifest(root).get.version == mAfter.version)
     // drift guard
     val e = intercept[IllegalArgumentException] {
       CorpusIncrement.increment(
@@ -278,7 +278,7 @@ class CorpusIncrementSpec extends SparkSpec {
     def monRow = spark.read.parquet(s"$root/monitor/batch_0")
       .collect().head.toString
     val first = monRow
-    val sketchV = DedupLedger.readManifest(
+    val sketchV = Ledger.readManifest(
       CorpusIncrement.sketchState(root)).get.version
     // crash before the root manifest rename; replay the increment
     java.nio.file.Files.write(
@@ -287,7 +287,7 @@ class CorpusIncrementSpec extends SparkSpec {
       spark, root, spark.read.parquet(b1Dir), 0L)
     assert(monRow == first)
     // the sketch sink saw its own marker and no-opped
-    assert(DedupLedger.readManifest(
+    assert(Ledger.readManifest(
       CorpusIncrement.sketchState(root)).get.version == sketchV)
   }
 
@@ -333,7 +333,7 @@ class CorpusIncrementSpec extends SparkSpec {
 
     // as-of read of the producing version; an uncommitted version
     // refuses loudly
-    val v = DedupLedger.readManifest(rootA).get.version
+    val v = Ledger.readManifest(rootA).get.version
     assert(rowSet(CorpusIncrement.trainingShards(spark, rootA, v))
       == rowSet(shA))
     intercept[IllegalArgumentException] {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import graft.sources.DedupLedger
+import graft.sources.{DedupLedger, Ledger}
 import org.apache.spark.sql.functions._
 
 /** The stateful production form of incremental dedup (q153b): a
@@ -89,7 +89,7 @@ class DedupLedgerSpec extends SparkSpec {
     val replay = DedupLedger.absorb(spark, state,
       spark.read.parquet(b1Dir)).collect().map(_.getLong(0)).toSet
     assert(replay == first)
-    assert(DedupLedger.readManifest(state).get.version == 2)
+    assert(Ledger.readManifest(state).get.version == 2)
   }
 
   test("orphan key parts not listed in the manifest are ignored") {
@@ -149,11 +149,11 @@ class DedupLedgerSpec extends SparkSpec {
     // (crash-after-commit-before-checkpoint) must not re-absorb — the
     // advanced ledger would derive an empty kept set and clobber the
     // batch's real output
-    val m = DedupLedger.readManifest(state).get
+    val m = Ledger.readManifest(state).get
     val lastId = m.lastBatchId.get
     DedupLedger.absorbSink(spark, state, outDir)(
       spark.read.parquet(b2Dir), lastId)
-    assert(DedupLedger.readManifest(state).get.version == m.version)
+    assert(Ledger.readManifest(state).get.version == m.version)
     assert(spark.read.option("recursiveFileLookup", "true")
       .parquet(outDir).collect().map(_.getLong(0)).toSet == expected)
 
@@ -181,7 +181,7 @@ class DedupLedgerSpec extends SparkSpec {
         assert(DedupLedger.compact(spark, state))
       val kept2 = DedupLedger.absorb(spark, state, b2)
         .collect().map(_.getLong(0)).toSet
-      val m = DedupLedger.readManifest(state).get
+      val m = Ledger.readManifest(state).get
       (kept2, DedupLedger.keys(spark, state).count(),
         m.keyParts.length)
     }
@@ -250,7 +250,7 @@ class DedupLedgerSpec extends SparkSpec {
     val (corpusDir, _, _, state) = fixture("purge")
     val corpus = spark.read.parquet(corpusDir)
     DedupLedger.init(spark, state, corpus)
-    val v1 = DedupLedger.readManifest(state).get.version
+    val v1 = Ledger.readManifest(state).get.version
     // pick one corpus doc; its exact text resent as a batch must DROP
     val victim = corpus.orderBy("doc_id").limit(1)
     val pre = DedupLedger.absorb(spark, state,
@@ -260,7 +260,7 @@ class DedupLedgerSpec extends SparkSpec {
     val vKey = victim.select(DedupLedger.keyOf($"text", 5).as("k"))
     val removed = DedupLedger.purge(spark, state, vKey)
     assert(removed == 1L)
-    val m = DedupLedger.readManifest(state).get
+    val m = Ledger.readManifest(state).get
     assert(m.version > v1 && m.keyParts.length == 1)
     // re-admittance: the same text is NEW again and is kept
     val post = DedupLedger.absorb(spark, state,
@@ -271,10 +271,10 @@ class DedupLedgerSpec extends SparkSpec {
     assert(DedupLedger.absorb(spark, state,
       other.withColumn("doc_id", $"doc_id" + 3000000L)).count() == 0L)
     // idempotent: purging an absent key is a no-op, version unchanged
-    val mBefore = DedupLedger.readManifest(state).get.version
+    val mBefore = Ledger.readManifest(state).get.version
     assert(DedupLedger.purge(spark, state,
       Seq("no_such_key").toDF("k")) == 0L)
-    assert(DedupLedger.readManifest(state).get.version == mBefore)
+    assert(Ledger.readManifest(state).get.version == mBefore)
   }
 
   test("as-of reads: keys(asOfVersion) equal the state committed " +

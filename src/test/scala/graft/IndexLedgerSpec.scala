@@ -1,13 +1,13 @@
 package graft
 
-import graft.sources.{DedupLedger, IndexLedger}
+import graft.sources.{IndexLedger, Ledger}
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The persisted incremental ANN index (q166's IVF+SQ8 layout with
-  * the DedupLedger manifest discipline): increments assign+code only
+  * the Ledger manifest discipline): increments assign+code only
   * new vectors against committed centroids, so any increment
   * composition commits the same state and serves identical
   * shortlists; queries read committed state only; refresh re-fits the
@@ -101,7 +101,7 @@ class IndexLedgerSpec extends SparkSpec {
       spark.read.parquet(b1Dir)).collect().map(r =>
         (r.getLong(0), r.getInt(1))).toSet
     assert(first == replay && first.nonEmpty)
-    assert(DedupLedger.readManifest(state).get.version == 2)
+    assert(Ledger.readManifest(state).get.version == 2)
   }
 
   test("as-of reads: codes/topK at version v serve the state committed " +
@@ -183,11 +183,11 @@ class IndexLedgerSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got(0) == exp1, "batch 0 assignments diverge")
     assert(got(1) == exp2, "batch 1 assignments diverge")
-    val m = DedupLedger.readManifest(state).get
+    val m = Ledger.readManifest(state).get
     // committed replay no-op
     IndexLedger.absorbSink(spark, state, outDir)(
       spark.read.parquet(b2Dir), m.lastBatchId.get)
-    assert(DedupLedger.readManifest(state).get.version == m.version)
+    assert(Ledger.readManifest(state).get.version == m.version)
     assert(got(1) == exp2)
     // fresh-checkpoint drift guard
     val e = intercept[IllegalArgumentException] {
@@ -216,7 +216,7 @@ class IndexLedgerSpec extends SparkSpec {
     // same membership, one compacted part, new centroid version
     assert(IndexLedger.codes(spark, state)
       .select("vec_id").as[Long].collect().toSet == preIds)
-    val m = DedupLedger.readManifest(state).get
+    val m = Ledger.readManifest(state).get
     assert(m.keyParts.count(_.startsWith("part_")) == 1)
     // post-refresh distortion on the drifted slice improves
     val post = IndexLedger.driftRatio(spark, state, drifted)
@@ -235,7 +235,7 @@ class IndexLedgerSpec extends SparkSpec {
     val b1 = spark.read.parquet(b1Dir)
     IndexLedger.init(spark, state, seed)
     IndexLedger.absorb(spark, state, b1).collect()
-    val vPre = DedupLedger.readManifest(state).get.version
+    val vPre = Ledger.readManifest(state).get.version
     val doomedIds = b1.select("vec_id").as[Long].collect().sorted
       .take(5).toSeq
     val doomed = doomedIds.toDF("vec_id")

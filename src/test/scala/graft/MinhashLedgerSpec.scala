@@ -106,7 +106,7 @@ class MinhashLedgerSpec extends SparkSpec {
     val replay = flagSet(MinhashLedger.absorb(spark, state,
       spark.read.parquet(b1Dir)).collect())
     assert(first == replay)
-    assert(graft.sources.DedupLedger.readManifest(state).get.version == 2)
+    assert(graft.sources.Ledger.readManifest(state).get.version == 2)
   }
 
   test("streaming ingest via absorbSink: two micro-batches over a file " +
@@ -155,10 +155,10 @@ class MinhashLedgerSpec extends SparkSpec {
     // exactly-once: replaying the last COMMITTED micro-batch must
     // no-op (re-absorbing would flag the batch as dup-of-itself and
     // clobber the real flag output)
-    val m = graft.sources.DedupLedger.readManifest(state).get
+    val m = graft.sources.Ledger.readManifest(state).get
     MinhashLedger.absorbSink(spark, state, outDir)(
       spark.read.parquet(b2Dir), m.lastBatchId.get)
-    assert(graft.sources.DedupLedger.readManifest(state).get.version ==
+    assert(graft.sources.Ledger.readManifest(state).get.version ==
       m.version)
     assert(flagSet(spark.read.parquet(s"$outDir/batch_1").collect())
       == exp2)

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.MomentMatrixAggregator
 import graft.operators.Pca
-import graft.sources.{DedupLedger, MomentLedger}
+import graft.sources.{Ledger, MomentLedger}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
@@ -97,10 +97,10 @@ class MomentLedgerSpec extends SparkSpec {
         1e-9 * math.max(1.0, math.abs(b)), s"$a vs $b") }
 
     // committed replay no-ops
-    val m = DedupLedger.readManifest(state).get
+    val m = Ledger.readManifest(state).get
     MomentLedger.absorbSink(spark, state)(
       spark.read.parquet(s"$root/h2"), m.lastBatchId.get)
-    assert(DedupLedger.readManifest(state).get.version == m.version)
+    assert(Ledger.readManifest(state).get.version == m.version)
     // drift guard
     val e = intercept[IllegalArgumentException] {
       MomentLedger.absorbSink(spark, state)(
@@ -157,7 +157,7 @@ class MomentLedgerSpec extends SparkSpec {
       .createTempDirectory("momentledger_purge").toString
     MomentLedger.init(spark, state)
     MomentLedger.absorb(spark, state, emb)
-    val vPre = DedupLedger.readManifest(state).get.version
+    val vPre = Ledger.readManifest(state).get.version
 
     val removed = MomentLedger.purge(spark, state, drop)
     assert(removed == drop.count())

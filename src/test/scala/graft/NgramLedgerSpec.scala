@@ -80,10 +80,10 @@ class NgramLedgerSpec extends SparkSpec {
     val batch = tables.documents.filter($"doc_id" >= 25 && $"doc_id" < 40)
     sink(batch, 0L)
     val first = spark.read.parquet(s"$out/batch_0").collect().toSet
-    val vAfter = graft.sources.DedupLedger
+    val vAfter = graft.sources.Ledger
       .readManifest(state).get.version
     sink(batch, 0L) // replay of the committed id: must no-op
-    assert(graft.sources.DedupLedger.readManifest(state).get.version
+    assert(graft.sources.Ledger.readManifest(state).get.version
       == vAfter, "replay must not advance the ledger")
     assert(spark.read.parquet(s"$out/batch_0").collect().toSet == first)
     intercept[IllegalArgumentException] { sink(batch, 5L) } // drift
@@ -100,13 +100,13 @@ class NgramLedgerSpec extends SparkSpec {
     val before = dfMap(NgramLedger.dfTable(spark, state))
     assert(NgramLedger.compact(spark, state))
     assert(dfMap(NgramLedger.dfTable(spark, state)) == before)
-    assert(graft.sources.DedupLedger.readManifest(state)
+    assert(graft.sources.Ledger.readManifest(state)
       .get.keyParts.size == 1)
     assert(!NgramLedger.compact(spark, state), "single part: no-op")
 
     // purge: state equals a from-scratch build without the purged docs
     val doomed = docs.filter($"doc_id" % 7 === 0)
-    val verPrePurge = graft.sources.DedupLedger
+    val verPrePurge = graft.sources.Ledger
       .readManifest(state).get.version
     assert(NgramLedger.purge(spark, state, doomed) > 0)
     val ref = tmp("maintref")

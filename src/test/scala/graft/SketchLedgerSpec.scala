@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{DedupLedger, SketchLedger}
+import graft.sources.{Ledger, SketchLedger}
 import org.apache.spark.sql.functions._
 
 /** Stream-maintained KLL sketch table: two real micro-batches over a
@@ -61,10 +61,10 @@ class SketchLedgerSpec extends SparkSpec {
     }
 
     // committed replay: same batchId again → version unchanged
-    val m = DedupLedger.readManifest(state).get
+    val m = Ledger.readManifest(state).get
     SketchLedger.absorbSink(spark, state)(
       spark.read.parquet(s"$root/h2"), m.lastBatchId.get)
-    assert(DedupLedger.readManifest(state).get.version == m.version)
+    assert(Ledger.readManifest(state).get.version == m.version)
 
     // drift guard: a fresh checkpoint restarting at batch 0 over this
     // advanced ledger must fail loudly

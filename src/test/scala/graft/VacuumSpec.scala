@@ -1,11 +1,11 @@
 package graft
 
-import graft.sources.{DedupLedger, IndexLedger, MinhashLedger,
+import graft.sources.{DedupLedger, IndexLedger, Ledger, MinhashLedger,
   MomentLedger, SketchLedger}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Age-based ledger retention ([[DedupLedger.vacuumState]]): vacuum
+/** Age-based ledger retention ([[Ledger.vacuumState]]): vacuum
   * reclaims state referenced only by manifests older than
   * CURRENT − keepVersions and truncates those snapshots, so reclaimed
   * versions are REFUSED (never half-served), CURRENT and surviving
@@ -117,7 +117,7 @@ class VacuumSpec extends SparkSpec {
     // exactly-once replay of the committed batch still no-ops
     SketchLedger.absorbSink(spark, state)(
       ev.filter($"event_id" % 2 === 1), 1L)
-    assert(DedupLedger.readManifest(state).get.version == 3)
+    assert(Ledger.readManifest(state).get.version == 3)
   }
 
   test("MomentLedger.vacuum: superseded moment states reclaimed, " +
