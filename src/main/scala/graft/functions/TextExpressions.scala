@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
@@ -68,67 +68,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(
       newChild: Expression): NfcNormalize = copy(child = newChild)
-}
-
-/** Loop body of [[RollingTokenHash]], shared verbatim by eval and the
-  * generated code (a plain object with no companion class, so the
-  * static forwarder is guaranteed and Janino can call it as
-  * `graft.functions.RollingHashImpl.compute`). Value-compatible with
-  * the original HOF formulation
-  * `aggregate(transform(toks, t -> pmod(xxhash64(t), P)), 0L,
-  *            (acc, h) -> pmod(acc*31 + h, P))`:
-  * XXH64.hashUTF8String(s, 42) IS Spark's `xxhash64(s)` (default seed
-  * 42), and `Math.floorMod` IS `pmod` for positive modulus. P = 1e9+7
-  * keeps acc*31 + h < 2^35 — no overflow. A null element hashes to
-  * the untouched seed (42), matching xxhash64's skip-null semantics. */
-object RollingHashImpl {
-  final val P = 1000000007L
-  def compute(arr: ArrayData): Long = {
-    var acc = 0L
-    var j = 0
-    val n = arr.numElements()
-    while (j < n) {
-      val h =
-        if (arr.isNullAt(j)) 42L
-        else Math.floorMod(XXH64.hashUTF8String(arr.getUTF8String(j), 42L), P)
-      acc = Math.floorMod(acc * 31L + h, P)
-      j += 1
-    }
-    acc
-  }
-}
-
-/** Polynomial rolling hash (base 31, mod 1e9+7) over a token array —
-  * the whole-document fingerprint [[graft.operators.TextAnalysis
-  * .rollingFingerprint]] exposes. Replaces the aggregate+transform
-  * HOF form: Spark evaluates HOF lambdas INTERPRETED (xxhash64 inside
-  * a lambda was the measured-worst shape of the round-14 profile), so
-  * the per-token fold is a native expression whose generated code is
-  * one static call into [[RollingHashImpl]] — the row stays inside
-  * the WholeStageCodegen span and the loop JITs. */
-case class RollingTokenHash(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<STRING> input, got ${dt.simpleString}")
-    }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "rolling_token_hash"
-
-  override def nullSafeEval(arr: Any): Any =
-    RollingHashImpl.compute(arr.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHashImpl.compute($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): RollingTokenHash = copy(child = newChild)
 }
 
 /** Loop body of [[GramRepetitionStats]] (plain object — static
@@ -444,10 +383,6 @@ object TextFunctions {
   /** Column API for [[GramLoopStats]]. */
   def gram_loop_stats(c: Column, n: Int): Column =
     GraftBridge.column(GramLoopStats(GraftBridge.expression(c), n))
-
-  /** Column API for [[RollingTokenHash]]. */
-  def rolling_token_hash(c: Column): Column =
-    GraftBridge.column(RollingTokenHash(GraftBridge.expression(c)))
 
   /** Column API for [[GramRepetitionStats]]. */
   def gram_repetition_stats(c: Column): Column =

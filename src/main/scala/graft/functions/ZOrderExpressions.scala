@@ -24,8 +24,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * and the expression can never drift.
   *
   * Inputs are masked to their low `bits` bits (callers scale real
-  * columns into range first — [[graft.operators.ZOrder.scaleTo16]]
-  * for continuous dimensions, dictionary/surrogate keys are already
+  * columns into range first; dictionary/surrogate keys are already
   * dense). Null if either input is null (BinaryExpression default).
   */
 case class InterleaveBits(left: Expression, right: Expression, bits: Int)

@@ -67,59 +67,6 @@ object Features {
       row_number().over(w).cast("double") / count(lit(1)).over(part))
   }
 
-  /** Scale-path rank, identical output to [[ranked]]: a plain window
-    * partitioned by `site` sends EVERY row of a site through one task —
-    * the 100 TB skew hazard (a hot site = one straggler). This
-    * formulation splits each site into `buckets` pageview ranges and
-    * never materializes a per-site partition:
-    *
-    *  1. per-site min/max (one small aggregate, broadcast back);
-    *  2. `width_bucket` assigns each row a range bucket — equal
-    *     pageviews always share a bucket, so the global (pageviews, id)
-    *     order is the bucket order + in-bucket order;
-    *  3. row_number within (site, bucket) — parallelism = sites×buckets;
-    *  4. bucket offsets via a running count over the (tiny) per-site
-    *     bucket histogram;
-    *  5. rank = (offset + local row_number) / site count.
-    *
-    * All Catalyst (two aggregates + two windows over bounded
-    * partitions), deterministic, asserted equal to [[ranked]] in
-    * FeaturesPropSpec.
-    */
-  def rankedScalable(parsed: DataFrame, buckets: Int = 32): DataFrame = {
-    // the SAME stabilized sort key as [[ranked]] (rounded pageviews),
-    // and the bucket must be a function of that key — bucketing on the
-    // raw value would let two equal-rounded rows land in different
-    // buckets and order by bucket instead of the id tiebreak
-    val pvr = round(col("pageviews"), 2)
-    val withKey = parsed.withColumn("__pvr", pvr)
-    val stats = withKey.groupBy("site").agg(
-      min("__pvr").as("pv_min"), max("__pvr").as("pv_max"),
-      count(lit(1)).as("site_n"))
-    val bucketed = withKey
-      .join(broadcast(stats), "site")
-      .withColumn("bucket",
-        when(col("pv_max") === col("pv_min"), lit(1)).otherwise(
-          width_bucket(col("__pvr"), col("pv_min"), col("pv_max"),
-            lit(buckets))))
-    val localW = Window.partitionBy("site", "bucket")
-      .orderBy("__pvr", "id")
-    val withLocal = bucketed.withColumn("local_rn",
-      row_number().over(localW))
-    val histW = Window.partitionBy("site").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withLocal.groupBy("site", "bucket")
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("offset",
-        coalesce(sum("bn").over(histW), lit(0L)))
-      .select("site", "bucket", "offset")
-    withLocal
-      .join(broadcast(offsets), Seq("site", "bucket"))
-      .withColumn("rank",
-        (col("offset") + col("local_rn")).cast("double") / col("site_n"))
-      .select(parsed.columns.toIndexedSeq.map(col) :+ col("rank"): _*)
-  }
-
   /** Long→wide feature matrix: one row per id, per sorted site the
     * triple `(pageviews_s, rank_s, exists_s)`, absent cells 0.0
     * (reference fill semantics, FeatureExtractor.scala:96-99). */

@@ -756,16 +756,6 @@ object Dedup {
       .orderBy("split")
   }
 
-  /** Deduplicated corpus: one keeper (min doc_id) per near-dup
-    * component plus every unpaired document. */
-  def dedupedCorpus(documents: DataFrame): DataFrame = {
-    val comp = connectedComponents(minhashNearDups(documents))
-    documents
-      .join(comp, Seq("doc_id"), "left_outer")
-      .filter(col("component").isNull || col("component") === col("doc_id"))
-      .drop("component")
-  }
-
   /** Blocked edit-distance near-dup pairs: within each block (an
     * equi-join on `blockCols` — brand/type/size style metadata, or a
     * length band + first-token key for raw text), emit id pairs whose
@@ -794,33 +784,6 @@ object Dedup {
         levenshtein(col("a.t"), col("b.t"), maxDist).as("dist"))
       .filter(col("dist") >= 0)
       .orderBy("id_i", "id_j")
-  }
-
-  /** SimHash near-dup candidates: docs whose fingerprints agree on at
-    * least one of four 8-bit bands (bucket equi-join — the standard
-    * Hamming-ball index), verified by true Hamming distance ≤ maxDist.
-    * Spark-side only (bit_count is engine-specific). */
-  def simhashNearDups(documents: DataFrame, maxDist: Int = 6): DataFrame = {
-    val fp = simhash(documents)
-    val bandsOf = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("simhash"), b * 8).bitwiseAND(lit(0xffL)).as("bkey"))
-    }
-    val banded = fp.select(col("doc_id"), col("simhash"),
-      explode(array(bandsOf: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-      .orderBy("doc_i", "doc_j")
   }
 
   /** q95 — benchmark decontamination: for every corpus document, count

@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * `Window.orderBy(...)` with no partition key plans a single-task
   * WindowExec — one executor sorts every row. Fine on a 10⁴-row
-  * aggregate, fatal on 10⁹ users at 100 TB. This helper is the
-  * generalization of the two-level pattern already proven per-site in
-  * [[graft.ml.Features.rankedScalable]] (Features.scala:72) and
-  * per-bucket in q105 (TextAnalysis.scala), lifted to a GLOBAL order:
+  * aggregate, fatal on 10⁹ users at 100 TB. This helper lifts the
+  * two-level pattern of q105 (TextAnalysis.scala, per bucket) to a
+  * GLOBAL order:
   *
   *  1. one tiny aggregate computes global [min,max] fences of the sort
   *     key and is broadcast onto the frame;

@@ -232,7 +232,7 @@ object Multimodal {
       documents: DataFrame, maxHamming: Int = 1): DataFrame = {
     // single-bit probing finds every pair with Hamming ≤ 2 and NOTHING
     // beyond — refuse thresholds the index cannot honor (band the hash
-    // like simhashNearDups if a looser radius is ever needed)
+    // into bit-range buckets if a looser radius is ever needed)
     require(maxHamming <= 2,
       s"maxHamming=$maxHamming exceeds the probe index's radius (2)")
     val nBits = 8 // = |decode grid cells|; 64 for a full 8×8 aHash

@@ -322,21 +322,6 @@ object Relational {
         col("cnt"), col("total"))
       .orderBy("status", "priority")
 
-  /** Sketch aggregates (BENCH-family, no oracle: HLL/KLL internals are
-    * engine-specific): approx distinct + approx percentiles per group.
-    * The 100 TB answer to COUNT(DISTINCT) — fixed-size state, no
-    * Expand explosion. Accuracy tested against exact in RelationalSpec. */
-  def sketchStats(t: Tables): DataFrame =
-    t.lineitem
-      .groupBy("l_returnflag")
-      .agg(
-        approx_count_distinct("l_orderkey", 0.02).as("approx_orders"),
-        percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000))
-          .as("p50_price"),
-        percentile_approx(col("l_extendedprice"), lit(0.99), lit(1000))
-          .as("p99_price"))
-      .orderBy("l_returnflag")
-
   /** Exact linear-interpolated quantiles (DuckDB `quantile_cont`
     * semantics: 0-indexed rank rp = (n−1)·p, interpolate between the
     * bracketing order statistics) computed scale-safely. Spark's
@@ -655,15 +640,6 @@ object Relational {
         (col("rk0") + 1).cast("long").as("rk"),
         round(col("p"), 2).as("price"))
       .orderBy("l_returnflag", "rk")
-
-  /** O1 — standalone secondary sort (reference
-    * repartitionAndSortWithinPartitions, FeatureExtractor.scala:55-57):
-    * co-locate by key, order within partitions — the Catalyst form is
-    * repartition + sortWithinPartitions (no custom partitioner). */
-  def secondarySorted(t: Tables): DataFrame =
-    t.events
-      .repartition(col("event_type"))
-      .sortWithinPartitions("event_type", "value", "event_id")
 
   /** Exact DISCRETE quantiles (DuckDB `quantile_disc` semantics: the
     * value at 1-indexed position max(1, ⌈n·p⌉) of the sorted non-null

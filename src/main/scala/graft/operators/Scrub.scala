@@ -95,15 +95,16 @@ object Scrub {
   /** Blocklist tagging (the C4 "bad words" filter): mark each document
     * with the alphabetically-smallest blocklist term it contains (a
     * deterministic representative — the engines must agree on WHICH
-    * term gets reported) and a `blocked` flag; `blocklistDrop` keeps
-    * the clean docs. Token-exact matching, not substring — "class"
-    * must not trip a blocklist entry "ass" (the documented C4 flaw).
+    * term gets reported) and a `blocked` flag; filtering on
+    * `!blocked` keeps the clean docs. Token-exact matching, not
+    * substring — "class" must not trip a blocklist entry "ass" (the
+    * documented C4 flaw).
     *
     * Scale: for typical blocklists (10²–10⁴ terms) the list rides the
     * expression as a literal array — evaluated per row inside codegen,
-    * no shuffle, no join. For 10⁶+ terms switch to explode(tokens) +
-    * broadcast semi-join on a hashed term set (the q153 bloom pattern
-    * applies); the tag column contract stays identical. */
+    * no shuffle, no join. A 10⁶+-term list no longer fits a literal
+    * array; it would need explode(tokens) + a join on the term set
+    * (the q153 bloom pattern applies), which no query here uses. */
   /** Tokenizer shared by text and terms: lowercase + split on runs of
     * anything that is not a Unicode letter or digit. `\p{L}`/`\p{N}`
     * have identical semantics in Java regex (Spark) and RE2 (DuckDB),
@@ -136,46 +137,6 @@ object Scrub {
       lit(lowered.toArray)))
     df.withColumn("block_term", hit)
       .withColumn("blocked", hit.isNotNull)
-  }
-
-  def blocklistDrop(
-      df: DataFrame, terms: Seq[String],
-      textCol: String = "text"): DataFrame =
-    blocklistTag(df, terms, textCol)
-      .filter(!col("blocked")).drop("block_term", "blocked")
-
-  /** The 10⁶+-term path `blocklistTag`'s scaladoc promises: the term
-    * list arrives as a DATAFRAME (loaded from wherever the list
-    * lives — it no longer fits a codegen literal array), documents
-    * explode to DISTINCT tokens, and one semi-shaped join + min-agg
-    * finds each doc's representative term. Even a 10⁷-term list is a
-    * few hundred MB — Spark broadcasts it when it fits
-    * (autoBroadcastJoinThreshold) and falls back to a shuffle join
-    * beyond that, either way never materializing doc×term. Terms that
-    * can never match (multi-token under the shared tokenizer) are
-    * dropped IN-PLAN — the DataFrame-scale equivalent of the Seq
-    * form's loud require (a driver-side validation can't see a
-    * distributed list).
-    *
-    * Contract identical to [[blocklistTag]]: `block_term` = the
-    * alphabetically-smallest matching term (lowercased), `blocked`
-    * flag; ScrubSpec asserts row-for-row equivalence between the two
-    * forms on the same list. `idCol` must be a unique row key (the
-    * explode round-trips through it). */
-  def blocklistTagJoin(
-      df: DataFrame, terms: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      termCol: String = "term"): DataFrame = {
-    val cleanTerms = terms
-      .select(lower(col(termCol)).as("__term")).distinct()
-      .filter(col("__term").rlike("^[\\p{L}\\p{N}]+$"))
-    val tokens = df.select(col(idCol),
-      explode(array_distinct(
-        split(lower(col(textCol)), TokenSplitRe))).as("__term"))
-    val hits = tokens.join(cleanTerms, "__term")
-      .groupBy(idCol).agg(min("__term").as("block_term"))
-    df.join(hits, Seq(idCol), "left")
-      .withColumn("blocked", col("block_term").isNotNull)
   }
 
   // ---- q150 / q151: the declared oracle queries --------------------
@@ -299,7 +260,7 @@ object Scrub {
     * prose does not). This is a cleaning TRANSFORM, not a detector:
     * the output carries the rebuilt text. Documents whose every line
     * is boilerplate survive with empty text (dropping them is the
-    * caller's policy decision, cf. [[blocklistDrop]]).
+    * caller's policy decision, as with [[blocklistTag]]'s flag).
     *
     * Line identity is `trim(line)`; run [[normalizeText]] first on
     * corpora where unicode/whitespace variants should fold together.

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (SURVEY §2.10 X2):
-  * brute-force cosine top-k as the exact baseline and a random-
-  * hyperplane LSH bucketed variant as the 100 TB scale path.
+  * brute-force cosine top-k as the exact baseline, and IVF / SQ8
+  * variants as the 100 TB scale path.
   *
   * Vector math is pure Catalyst (`zip_with` + `aggregate` on
   * ARRAY<DOUBLE>): codegen'd, no UDFs, no MLlib Vector boxing. Sums run
@@ -172,62 +172,6 @@ object Similarity {
       .orderBy("qid", "rk")
   }
 
-  /** Random-hyperplane signature: bit i = sign(v · h_i) where h_i is a
-    * deterministic ±1 hyperplane derived from xxhash64(i, dim) — no
-    * stored projection matrix, any executor can recompute it. */
-  def hyperplaneSig(v: Column, dim: Int, bits: Int): Column = {
-    val planes = (0 until bits).map { i =>
-      val d = aggregate(
-        zip_with(v, sequence(lit(0), lit(dim - 1)),
-          (x, j) => x * when(pmod(xxhash64(lit(i), j), lit(2)) === 0, 1.0)
-            .otherwise(-1.0)),
-        lit(0.0), (acc, x) => acc + x)
-      when(d > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    planes.reduce(_ + _)
-  }
-
-  /** Approximate NN via LSH bucketing: vectors sharing a signature
-    * band become candidates; exact cosine re-ranks candidates only.
-    * The scale path — candidate count is collision-driven, the corpus
-    * is never crossed with itself. Recall is tested against
-    * [[cosineTopK]] in SimilaritySpec. */
-  def lshCosineTopK(
-      embeddings: DataFrame, dim: Int = 64, queryMaxId: Long = 10,
-      k: Int = 5, bits: Int = 16, bands: Int = 4): DataFrame = {
-    val rows = bits / bands
-    val mask = (1L << rows) - 1
-    val sig = embeddings.select(
-      col("vec_id"), asDouble(col("embedding")).as("v"),
-      hyperplaneSig(asDouble(col("embedding")), dim, bits).as("sig"))
-      .withColumn("n", norm(col("v")))
-    val banded = sig.select(
-      col("vec_id"), col("v"), col("n"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * rows).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "bkey")))
-    val q = banded.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n").as("qn"),
-        col("band"), col("bkey"))
-    val cand = banded.as("c")
-      .join(broadcast(q),
-        col("c.band") === q("band") && col("c.bkey") === q("bkey")
-          && col("c.vec_id") =!= col("qid"))
-      .select(col("qid"), col("qv"), col("qn"), col("c.vec_id").as("cid"),
-        col("c.v").as("cv"), col("c.n").as("cn"))
-      .distinct()
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos").desc, col("cid").asc)
-    cand
-      .select(col("qid"), col("cid"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-          .as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("qid", "cid", "cos", "rk")
-      .orderBy("qid", "rk")
-  }
-
   /** Engine-portable hyperplane signs: sign(i,j) = high bit of the
     * first hex digit of md5("i:j") — pure constants, computed once at
     * plan build; any md5-capable engine derives the identical matrix
@@ -381,9 +325,9 @@ object Similarity {
     * (`xxhash64(id)`, id) order — ONE collect job whose result does
     * not depend on partitioning, so the centroids are deterministic
     * and independent of corpus size beyond the sample. k clamps to the
-    * sample size (the [[pqCodebooks]] rule), so every centroid seeds
-    * from a distinct sample point. Returns the centroid frame
-    * (cell, cv, c2) with c2 = ||cv||², the form [[ivfAssign]] reads. */
+    * sample size, so every centroid seeds from a distinct sample
+    * point. Returns the centroid frame (cell, cv, c2) with
+    * c2 = ||cv||², the form [[ivfAssign]] reads. */
   def ivfCentroids(
       frame: DataFrame, idCol: String, vecCol: String,
       nlist: Int): DataFrame = {
@@ -419,13 +363,13 @@ object Similarity {
       .drop("__ad", "__ar", "c2")
   }
 
-  /** Deterministic local Lloyd's k-means for PQ codebooks and the IVF
-    * coarse quantizer: centroids initialized at evenly spaced sample
-    * points (no RNG — reruns are bit-identical), empty clusters keep
-    * their previous centroid. Runs on a BOUNDED driver-side sample by
-    * design — the FAISS convention: quantizers train on ~10⁴–10⁵
-    * sampled vectors regardless of corpus size, while encoding/scoring
-    * stay fully distributed. */
+  /** Deterministic local Lloyd's k-means for the IVF coarse quantizer:
+    * centroids initialized at evenly spaced sample points (no RNG —
+    * reruns are bit-identical), empty clusters keep their previous
+    * centroid. Runs on a BOUNDED driver-side sample by design — the
+    * FAISS convention: quantizers train on ~10⁴–10⁵ sampled vectors
+    * regardless of corpus size, while encoding/scoring stay fully
+    * distributed. */
   private def kmeansLocal(
       pts: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
     val d = pts.head.length
@@ -453,266 +397,25 @@ object Similarity {
     cents
   }
 
-  /** Train PQ codebooks: split dim into `m` subspaces, k-means each on
-    * a deterministic bounded sample. Returns m × codes × (dim/m). */
-  def pqCodebooks(
-      embeddings: DataFrame, dim: Int, m: Int, codes: Int,
-      sampleN: Int = 4096, iters: Int = 10): Array[Array[Array[Double]]] = {
-    val sub = dim / m
-    val sample = embeddings.orderBy("vec_id").limit(sampleN)
-      .select(asDouble(col("embedding")).as("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty,
-      "pqCodebooks: embeddings input is empty — cannot train codebooks")
-    // fewer sample points than requested codes would seed duplicate
-    // centroids (pts(i*n/k) repeats indices) and silently degrade the
-    // codebook; clamp so every centroid seeds from a distinct point
-    val k = math.min(codes, sample.length)
-    Array.tabulate(m)(s =>
-      kmeansLocal(sample.map(_.slice(s * sub, (s + 1) * sub)), k, iters))
-  }
-
-  /** Product-quantization ANN with asymmetric distance computation —
-    * the compressed-domain scale path beyond [[ivfCosineTopK]]:
-    *
-    *  - every corpus vector is ENCODED as m sub-codes (argmin L2 to its
-    *    subspace codebook): m·log₂(codes) bits — here 8×4 = 32 bits of
-    *    state per vector instead of 64 doubles, the representation that
-    *    lets a 100 TB embedding corpus live in executor memory;
-    *  - each query precomputes an m × codes lookup table of exact
-    *    subspace dot products (ADC), so scoring a corpus vector is m
-    *    table lookups + adds — no vector arithmetic in the hot loop;
-    *  - the ADC top `refine·k` candidates are re-ranked with EXACT
-    *    cosine (standard PQ refinement), so returned scores are true
-    *    cosines and only the candidate set is approximate.
-    *
-    * Everything after codebook training is pure Column expressions over
-    * a broadcast query side — same plan shape as [[cosineTopK]], with
-    * the corpus side carrying 8 ints instead of the full vector.
-    * Recall vs exact is asserted in SimilaritySpec. */
-  def pqCosineTopK(
-      embeddings: DataFrame, dim: Int = 64, queryMaxId: Long = 10,
-      k: Int = 5, m: Int = 16, codes: Int = 16, refine: Int = 8): DataFrame = {
-    val sub = dim / m
-    val books = pqCodebooks(embeddings, dim, m, codes)
-    def centLit(s: Int, c: Int): Column =
-      array(books(s)(c).toIndexedSeq.map(lit): _*)
-    def l2sq(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x)
-
-    val base = embeddings.select(
-      col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("n", norm(col("v")))
-    // encode: per subspace, index of the nearest codeword (ties → first)
-    val encoded = base.withColumn("pq", array((0 until m).map { s =>
-      val sv = slice(col("v"), s * sub + 1, sub)
-      val dists = array((0 until codes).map(c => l2sq(sv, centLit(s, c))): _*)
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }: _*))
-    // query side: exact subspace-dot lookup tables (m × codes doubles)
-    val q = base.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n").as("qn"))
-      .withColumn("lut", array((0 until m).map { s =>
-        val qs = slice(col("qv"), s * sub + 1, sub)
-        array((0 until codes).map(c => dot(qs, centLit(s, c))): _*)
-      }: _*))
-      .select("qid", "qn", "lut")
-    val adc = encoded.select(col("vec_id").as("cid"), col("n").as("cn"),
-        col("pq"))
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("qn"), col("cid"), col("cn"),
-        aggregate(
-          zip_with(col("pq"), col("lut"), (c, l) => element_at(l, c + 1)),
-          lit(0.0), (acc, x) => acc + x).as("adc_dot"))
-      .select(col("qid"), col("cid"),
-        (col("adc_dot") / (col("qn") * col("cn"))).as("approx_cos"))
-    val wAdc = Window.partitionBy("qid")
-      .orderBy(col("approx_cos").desc, col("cid").asc)
-    val cand = adc.withColumn("ark", row_number().over(wAdc))
-      .filter(col("ark") <= refine * k)
-      .select("qid", "cid")
-    // exact re-rank of the small candidate set
-    val wX = Window.partitionBy("qid")
-      .orderBy(col("cos").desc, col("cid").asc)
-    cand
-      .join(base.select(col("vec_id").as("cid"), col("v").as("cv"),
-        col("n").as("cn2")), "cid")
-      .join(broadcast(base.filter(col("vec_id") < queryMaxId)
-        .select(col("vec_id").as("qid"), col("v").as("qv2"),
-          col("n").as("qn2"))), "qid")
-      .select(col("qid"), col("cid"),
-        round(dot(col("qv2"), col("cv")) / (col("qn2") * col("cn2")), 6)
-          .as("cos"))
-      .withColumn("rk", row_number().over(wX))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"),
-        col("rk").cast("long").as("rk"))
-      .orderBy("qid", "rk")
-  }
-
-  /** Embedding-cosine near-duplicate pairs (X1's embedding flavor):
-    * all pairs with cosine ≥ minCos among LSH band collisions —
-    * near-dup detection without the |corpus|² cross join. */
-  def embeddingNearDups(
-      embeddings: DataFrame, dim: Int = 64, minCos: Double = 0.95,
-      bits: Int = 16, bands: Int = 4): DataFrame = {
-    val rows = bits / bands
-    val mask = (1L << rows) - 1
-    val sig = embeddings.select(
-      col("vec_id"), asDouble(col("embedding")).as("v"),
-      hyperplaneSig(asDouble(col("embedding")), dim, bits).as("sig"))
-      .withColumn("n", norm(col("v")))
-    val banded = sig.select(
-      col("vec_id"), col("v"), col("n"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * rows).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "bkey")))
-    // cos is a pure function of the pair, so computing it BEFORE the
-    // multi-band dedup means the distinct exchange carries (id, id,
-    // cos) — 24 bytes — instead of the two 64-double vectors (~1 KB)
-    // per candidate row (guide-§2.3 "project before the exchange";
-    // duplicate band collisions recompute one dot product each, far
-    // cheaper than shuffling their payloads)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_i"), col("b.vec_id").as("vec_j"),
-        round(dot(col("a.v"), col("b.v")) / (col("a.n") * col("b.n")), 6)
-          .as("cos"))
-      .distinct()
-      .filter(col("cos") >= minCos)
-      .orderBy("vec_i", "vec_j")
-  }
-
-  /** One band's bucket key (rows bits) from the deterministic xxhash64
-    * hyperplanes — per-band columns instead of one packed long, so the
-    * total bit budget is NOT capped at 64 (the adaptive path can need
-    * rows × bands > 64). */
-  private def bandKey(v: Column, dim: Int, band: Int, rows: Int): Column =
-    (0 until rows).map { i =>
-      val plane = band * rows + i
-      val d = aggregate(
-        zip_with(v, sequence(lit(0), lit(dim - 1)),
-          (x, j) => x * when(pmod(xxhash64(lit(plane), j), lit(2)) === 0,
-            1.0).otherwise(-1.0)),
-        lit(0.0), (acc, x) => acc + x)
-      when(d > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** Density-adaptive LSH granularity: rows-per-band keeps EXPECTED
-    * bucket occupancy ≤ `targetOccupancy` (candidate pairs ~linear in
-    * corpus size instead of quadratic-in-occupancy), bands deliver
-    * `targetRecall` for pairs at cosine ≥ `minCos` under the
-    * random-hyperplane collision model p = 1 − acos(cos)/π. Pure
-    * arithmetic — unit-tested directly in SimilaritySpec. */
-  def adaptiveLshParams(
-      n: Long, minCos: Double, targetOccupancy: Long = 128,
-      targetRecall: Double = 0.9): (Int, Int) = {
-    val rows = math.max(1, math.min(24, math.ceil(
-      math.log(math.max(n, 1L).toDouble / targetOccupancy) /
-        math.log(2.0)).toInt))
-    val p = 1.0 - math.acos(math.max(-1.0, math.min(minCos, 1.0))) / math.Pi
-    val missPerBand = 1.0 - math.pow(p, rows)
-    val bands =
-      if (missPerBand <= 0.0) 1 // p = 1: every band collides, one is enough
-      else if (missPerBand >= 1.0) 16 // p = 0: no band count reaches the
-      // recall target — saturate at the cap instead of Int.MinValue→1
-      else math.max(1, math.min(16, math.ceil(
-        math.log(1.0 - targetRecall) / math.log(missPerBand)).toInt))
-    (rows, bands)
-  }
-
-  /** Embedding near-dup pairs with DENSITY-ADAPTIVE LSH — the 100 TB
-    * default. The fixed-granularity operators above ([[embeddingNearDups]],
-    * [[embeddingNearDupsPortable]]) keep 2⁴ buckets per band for oracle
-    * portability, so bucket occupancy grows with the corpus and the
-    * candidate-pair volume quadratically (measured 25× wall-clock for
-    * 10× vectors in the sf1 rehearsal, BASELINE.md). This variant
-    * spends one `count()` to size the bucket space: occupancy stays
-    * ≤ targetOccupancy regardless of corpus size, so candidates grow
-    * linearly; band count is derived from the recall target at the
-    * cosine threshold. Everything downstream is the same bucketed
-    * equi-join + exact-cosine verify. */
-  def embeddingNearDupsAdaptive(
-      embeddings: DataFrame, dim: Int = 64, minCos: Double = 0.95,
-      targetOccupancy: Long = 128, targetRecall: Double = 0.9): DataFrame = {
-    val n = embeddings.count()
-    val (rows, bands) = adaptiveLshParams(
-      n, minCos, targetOccupancy, targetRecall)
-    val sig = embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("n", norm(col("v")))
-    // checkpoint: the banded frame feeds BOTH sides of the self-join,
-    // and the bands × rows × dim hyperplane aggregates are the
-    // expensive part — evaluate them once (the GlobalRank multi-
-    // consumer discipline; blocks reclaimed by the ContextCleaner)
-    val banded = sig.select(
-      col("vec_id"), col("v"), col("n"),
-      posexplode(array((0 until bands).map(b =>
-        bandKey(col("v"), dim, b, rows)): _*))
-        .as(Seq("band", "bkey")))
-      .localCheckpoint(true)
-    // cos is a pure function of the pair, so computing it BEFORE the
-    // multi-band dedup means the distinct exchange carries (id, id,
-    // cos) — 24 bytes — instead of the two 64-double vectors (~1 KB)
-    // per candidate row (guide-§2.3 "project before the exchange";
-    // duplicate band collisions recompute one dot product each, far
-    // cheaper than shuffling their payloads)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_i"), col("b.vec_id").as("vec_j"),
-        round(dot(col("a.v"), col("b.v")) / (col("a.n") * col("b.n")), 6)
-          .as("cos"))
-      .distinct()
-      .filter(col("cos") >= minCos)
-      .orderBy("vec_i", "vec_j")
-  }
-
-  /** SemDeDup (Abbas et al. 2023) semantic deduplication — the
-    * ENGINE-RECOMMENDED entry point, routed through the density-
-    * adaptive LSH ([[embeddingNearDupsAdaptive]]): bucket occupancy is
-    * held ≤ targetOccupancy regardless of corpus size, so candidate
-    * pairs — and therefore the whole pass — grow ~linearly where the
-    * fixed-granularity form measured 25× wall-clock for 10× vectors
-    * (BASELINE.md sf1 table). Pairs are closed transitively with the
-    * diameter-independent star components; each cluster keeps its min
-    * vec_id. Output is the DROP LIST — (vec_id, kept_id) for every
-    * vector a semantic-dedup pass removes. Every stage is a bucketed
-    * equi-join; the corpus is never compared all-pairs. */
-  def semanticDedup(
-      embeddings: DataFrame, minCos: Double = 0.4, dim: Int = 64,
-      targetOccupancy: Long = 128, targetRecall: Double = 0.9): DataFrame = {
-    val pairs = embeddingNearDupsAdaptive(
-      embeddings, dim, minCos, targetOccupancy, targetRecall)
-      .select(col("vec_i").as("doc_i"), col("vec_j").as("doc_j"))
-    semanticDropList(pairs)
-  }
-
-  /** q100 — the ORACLE TWIN of [[semanticDedup]]: identical cluster/
-    * drop-list semantics, but pairs come from the fixed-granularity
-    * engine-portable LSH ([[embeddingNearDupsPortable]], q35 contract)
-    * so the DuckDB oracle can replay the exact candidate set. Kept
-    * SOLELY for that contract — fixed 4-band/4-bit granularity goes
-    * super-linear as corpus density rises; new callers should use
-    * [[semanticDedup]] (density-adaptive, ~linear candidates). */
+  /** q100 — SemDeDup (Abbas et al. 2023) semantic deduplication.
+    * Candidate pairs come from the engine-portable LSH
+    * ([[embeddingNearDupsPortable]], the q35 contract), so the DuckDB
+    * oracle replays the exact candidate set. Pairs are closed
+    * transitively with the diameter-independent star components; each
+    * cluster keeps its min vec_id. Output is the DROP LIST — (vec_id,
+    * kept_id) for every vector the pass removes. The fixed 4-band/4-bit
+    * granularity keeps 2⁴ buckets per band, so candidate pairs grow
+    * super-linearly as corpus density rises (25× wall clock for 10×
+    * vectors in the sf1 rehearsal, BASELINE.md). */
   def semanticDedupPortable(
       embeddings: DataFrame, minCos: Double = 0.4): DataFrame = {
     val pairs = embeddingNearDupsPortable(embeddings, minCos = minCos)
       .select(col("vec_i").as("doc_i"), col("vec_j").as("doc_j"))
-    semanticDropList(pairs)
-  }
-
-  /** Shared SemDeDup tail: transitive closure via star components,
-    * min-id canonical per cluster, (vec_id, kept_id) drop list. */
-  private def semanticDropList(pairs: DataFrame): DataFrame =
     Dedup.connectedComponentsStar(pairs)
       .filter(col("doc_id") =!= col("component"))
       .select(col("doc_id").as("vec_id"), col("component").as("kept_id"))
       .orderBy("vec_id")
+  }
 
   /** q148 — embedding dimension correlation matrix: Pearson corr for
     * every dimension pair (i < j) of the embedding space — the

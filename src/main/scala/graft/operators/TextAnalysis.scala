@@ -103,9 +103,7 @@ object TextAnalysis {
   }
 
   /** q25 — document fingerprint: md5 of the whitespace-normalized,
-    * lower-cased text. The rolling-hash shingle fingerprint (content-
-    * defined chunking flavor) is [[rollingFingerprint]], Spark-side only.
-    */
+    * lower-cased text. */
   def fingerprint(documents: DataFrame): DataFrame =
     documents
       .select(
@@ -268,15 +266,6 @@ object TextAnalysis {
         splitOf(col("text"), trainNibbles).as("split"))
       .orderBy("doc_id")
 
-  /** Stratified sampling by a stratum column (seeded Bernoulli per
-    * stratum) — corpus subsampling with per-language quotas. Seeded →
-    * reproducible within Spark; engine-specific RNG → statistical spec
-    * rather than oracle. */
-  def stratifiedSample(
-      documents: DataFrame, fractions: Map[String, Double],
-      seed: Long = 42L): DataFrame =
-    documents.stat.sampleBy("lang", fractions, seed)
-
   /** q53 — TF-IDF top terms per document: tf(d,t)·ln(N/df(t)), top-k
     * by weight. The distributed shape is three hash aggregates + one
     * equi-join + a broadcast of the single-row corpus count — df(t) is
@@ -302,18 +291,6 @@ object TextAnalysis {
       .filter(col("rk") <= k)
       .orderBy("doc_id", "rk")
   }
-
-  /** Polynomial rolling hash over the token stream (base 31, mod 1e9+7
-    * — keeps every intermediate < 2^35) — a locality-insensitive
-    * whole-document fingerprint. Runs as the native codegen expression
-    * [[graft.functions.RollingTokenHash]]: the original
-    * aggregate+transform HOF form evaluated its lambdas INTERPRETED
-    * (xxhash64 inside a lambda — the round-14 measured-worst shape);
-    * the native fold is value-identical and stays in the codegen span.
-    * Unit-tested; not oracle-declared (xxhash64 is Spark-specific).
-    */
-  def rollingFingerprint(text: Column): Column =
-    graft.functions.TextFunctions.rolling_token_hash(tokens(text))
 
   /** q61 — bigram collocations by pointwise mutual information:
     * pmi(x,y) = ln(P(xy) / (P(x)·P(y))), bigram probabilities over the

@@ -15,43 +15,16 @@ import org.apache.spark.sql.functions._
   * Lake OPTIMIZE ZORDER design).
   *
   * The interleave itself is a native codegen'd expression
-  * ([[graft.functions.InterleaveBits16]]); writing is one
-  * `repartitionByRange(zvalue)` + in-partition sort — exactly the
-  * shuffle a plain sorted write already pays, so Z-ordering is
-  * cost-neutral at write time.
+  * ([[graft.functions.InterleaveBits16]]). The z-ordered write is
+  * [[graft.sources.Writers.zOrdered]]: one `repartitionByRange(zvalue)`
+  * + in-partition sort — exactly the shuffle a plain sorted write
+  * already pays, so Z-ordering is cost-neutral at write time.
   */
 object ZOrder {
-
-  /** Scale `c` from [lo, hi] into the 16-bit grid [0, 65535], clamped
-    * at both ends (out-of-range values land on the edge cells — they
-    * degrade pruning for their row group, never correctness; parquet
-    * stats are derived from the DATA, the z-key is only a sort key).
-    * `lo`/`hi` come from table stats or domain knowledge; they need
-    * to be roughly right, not exact. */
-  def scaleTo16(c: Column, lo: Double, hi: Double): Column = {
-    require(hi > lo, s"need hi > lo, got [$lo, $hi]")
-    val scaled = ((c.cast("double") - lit(lo)) * 65535.0 /
-      (lit(hi) - lit(lo)))
-    greatest(lit(0L), least(lit(65535L),
-      floor(scaled).cast("long")))
-  }
 
   /** Morton code of two pre-scaled 16-bit columns. */
   def zValue(x16: Column, y16: Column): Column =
     interleave_bits16(x16.cast("long"), y16.cast("long"))
-
-  /** Cluster `df` along the Z-curve of two scaled dimensions into
-    * `numFiles` range partitions, each internally sorted — written to
-    * parquet, every output file covers a compact Z-range, so both
-    * dimensions' min/max stats are tight. */
-  def zorderBy(
-      df: DataFrame, x16: Column, y16: Column,
-      numFiles: Int): DataFrame = {
-    val keyed = df.withColumn("__z", zValue(x16, y16))
-    keyed.repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
 
   /** q160 — Z-order layout audit over lineitem on (l_partkey,
     * l_suppkey): bucket rows by the top bits of the Morton code and

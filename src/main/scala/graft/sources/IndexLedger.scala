@@ -162,14 +162,21 @@ object IndexLedger {
     (assigned.observe(obs, meanDistortion.as("base")), obs)
   }
 
-  /** Normalize an embeddings frame to (__aid, __v) with zero vectors
-    * dropped (unquantizable, as in q166). */
+  /** An embeddings frame as (__aid, __v, __qc, __d2): float vector,
+    * SQ8 codes (exact-integer doubles) and their squared norm. Zero
+    * vectors are unquantizable (d2 = 0, as in q166); [[quantizable]]
+    * drops them above the assign window, not here: Catalyst pushes a
+    * filter below the projections that compute its columns,
+    * substituting their expressions, so a `__d2` filter on this frame
+    * would run `sq8_codes` in the filter and again in the projection.
+    * A window passes down only filters on its partition key. */
   private def prep(batch: DataFrame): DataFrame =
     batch.select(col("vec_id").as("__aid"),
         asDouble(col("embedding")).as("__v"))
       .withColumn("__qc", sq8Codes(col("__v")).cast("array<double>"))
       .withColumn("__d2", vec_dot(col("__qc"), col("__qc")))
-      .filter(col("__d2") > 0.0)
+
+  private val quantizable = col("__d2") > 0.0
 
   private def writeCodes(
       spark: SparkSession, statePath: String, part: String,
@@ -200,10 +207,12 @@ object IndexLedger {
   private def build(
       spark: SparkSession, statePath: String, vecs: DataFrame, nlist: Int,
       ix: IxManifest): Unit = {
-    ivfCentroids(vecs, "__aid", "__v", nlist).write.mode("overwrite")
+    ivfCentroids(vecs.filter(quantizable), "__aid", "__v", nlist)
+      .write.mode("overwrite")
       .parquet(centroidsDir(statePath, ix.centroidVersion))
     val cent = readCentroids(spark, statePath, ix)
-    val (assigned, baseObs) = observedDistortion(assign(vecs, cent))
+    val (assigned, baseObs) =
+      observedDistortion(assign(vecs, cent).filter(quantizable))
     writeCodes(spark, statePath, ix.codeParts.head, assigned)
     val base = scala.concurrent.Await.result(baseObs.future,
       scala.concurrent.duration.Duration(300, "s")).getDouble(0)
@@ -221,7 +230,7 @@ object IndexLedger {
     val known = readCodes(spark, statePath, ix)
       .select(col("vec_id").as("__aid"))
     val fresh = prep(batch).join(known, Seq("__aid"), "left_anti")
-    Pending(assign(fresh, cent).persist(), ix)
+    Pending(assign(fresh, cent).filter(quantizable).persist(), ix)
   }
 
   private def commitState(
@@ -284,12 +293,13 @@ object IndexLedger {
         asDouble(col("embedding")).as("qv"))
       .withColumn("qqc", sq8Codes(col("qv")).cast("array<double>"))
       .withColumn("qd2", vec_dot(col("qqc"), col("qqc")))
-      .filter(col("qd2") > 0.0)
+    // the zero-query cut (qd2 > 0) sits above the probe window, so each
+    // query is encoded once (see [[prep]])
     val qCells = q.crossJoin(broadcast(cent))
       .withColumn("__sim", vec_dot(col("qv"), col("cv")))
       .withColumn("__pr", row_number().over(
         Window.partitionBy("qid").orderBy(col("__sim").desc, col("cell"))))
-      .filter(col("__pr") <= nprobe)
+      .filter(col("__pr") <= nprobe && col("qd2") > 0.0)
       .select("qid", "qqc", "qd2", "cell")
     val self = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
     val cand = cs.join(broadcast(qCells), Seq("cell"))
@@ -337,7 +347,7 @@ object IndexLedger {
       batch: DataFrame): Double = {
     val ix = ixAt(statePath)
     val cent = readCentroids(spark, statePath, ix)
-    val d = distortionOf(assign(prep(batch), cent))
+    val d = distortionOf(assign(prep(batch), cent).filter(quantizable))
     if (ix.baseDistortion <= 0.0) 1.0 else d / ix.baseDistortion
   }
 

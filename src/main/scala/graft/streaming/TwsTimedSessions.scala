@@ -9,9 +9,10 @@ import org.apache.spark.sql.streaming.{
 import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Event-time TIMERS on `transformWithState` — the append-mode session
-  * shape [[TwsSessions]] cannot express: instead of re-emitting a
-  * key's cumulative counts every micro-batch (update mode), a closed
+/** Event-time TIMERS on `transformWithState` — append-mode
+  * sessionization with arbitrary per-key state (SURVEY §2.9's "custom
+  * state" surface): instead of re-emitting a key's cumulative counts
+  * every micro-batch (update mode), a closed
   * session is emitted EXACTLY ONCE — either when the watermark proves
   * no merging event can still arrive, or when the registered timer
   * fires for an idle key. That timer is what lets a 10⁹-key store
@@ -45,13 +46,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TwsTimedSessions {
 
-  import StatefulSessions.Event
+  final case class Event(user_id: Long, ts: Timestamp)
+
+  val GapMicros: Long = 30L * 60 * 1000 * 1000
+
+  private def micros(t: Timestamp): Long =
+    t.getTime * 1000 + (t.getNanos / 1000) % 1000
 
   final case class SessionOut(
       user_id: Long, start: Timestamp, end: Timestamp, n_events: Long)
-  /** One open session, microsecond bounds (parity with the sibling
-    * sessionizers, which compare micros — ms flooring would split
-    * sub-ms-adjacent events differently). */
+  /** One open session, microsecond bounds (`session_window` and the
+    * batch sessionizer q15 also compare micros — ms flooring would
+    * split sub-ms-adjacent events differently). */
   final case class OpenSession(startUs: Long, lastUs: Long, n: Long)
 
   private def toTs(us: Long): Timestamp = {
@@ -138,7 +144,7 @@ object TwsTimedSessions {
         key: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[SessionOut] = {
       val sorted =
-        rows.toSeq.map(e => StatefulSessions.micros(e.ts)).sorted
+        rows.toSeq.map(e => micros(e.ts)).sorted
       val merged =
         sorted.foldLeft(open.get().toList)((acc, t) => insert(acc, t))
       drain(key, merged, timerValues.getCurrentWatermarkInMs())
@@ -166,7 +172,7 @@ object TwsTimedSessions {
     * watermark passes a key's close deadline. */
   def sessionize(
       spark: SparkSession, events: Dataset[_],
-      gapMs: Long = StatefulSessions.GapMicros / 1000L,
+      gapMs: Long = GapMicros / 1000L,
       delay: String = "0 seconds"): Dataset[SessionOut] = {
     import spark.implicits._
     events.toDF()

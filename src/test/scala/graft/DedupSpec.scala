@@ -232,14 +232,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("dedupedCorpus keeps one doc per near-dup cluster") {
-    val corpus = Dedup.dedupedCorpus(tables.documents)
-    // no surviving pair of near-dups within the cleaned corpus
-    val residual = Dedup.minhashNearDups(corpus)
-    assert(residual.count() == 0)
-    assert(corpus.count() <= tables.documents.count())
-  }
-
   test("q85 canonical doc is the longest member of its cluster") {
     val comp = Dedup.nearDupComponents(tables.documents)
       .join(tables.documents.select("doc_id", "n_chars"), "doc_id")
@@ -269,8 +261,6 @@ class DedupSpec extends SparkSpec {
     val fp = Dedup.simhash(docs).collect().map(r =>
       r.getLong(0) -> r.getLong(1)).toMap
     assert(fp(1L) == fp(2L))
-    val nd = Dedup.simhashNearDups(docs, 0).collect()
-    assert(nd.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
   }
 
   test("decontaminationPairs: shared k-grams with the benchmark slice") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import graft.plans.PlanAudit
 import graft.sources.IndexLedger
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -132,6 +133,18 @@ class IvfTrainerSpec extends SparkSpec {
       k = 10, nprobe = 8).collect())
     assert(jobs.length == 5, s"IndexLedger.topK ran: $jobs")
     assertNoFooterJobs(jobs)
+  }
+
+  test("one IndexLedger.topK call encodes each query once: one " +
+    "sq8_codes in the executed plan") {
+    val state = q180State("ivf_topk_encode")
+    val served = IndexLedger.topK(spark, state,
+      tables.embeddings.filter(col("vec_id") < 10), k = 10, nprobe = 8)
+    served.collect()
+    val plan = served.queryExecution.executedPlan
+    val encodes = PlanAudit.flatten(plan).flatMap(_.expressions
+      .flatMap(_.collect { case e: graft.functions.Sq8Codes => e }))
+    assert(encodes.length == 1, plan.toString)
   }
 
   test("no MLlib clustering left in the program sources") {

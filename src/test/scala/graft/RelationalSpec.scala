@@ -73,37 +73,6 @@ class RelationalSpec extends SparkSpec {
     assert(r.count() == expected)
   }
 
-  test("sketch stats: approx distinct within rtol, percentiles ordered") {
-    val s = Relational.sketchStats(tables).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      .toMap
-    val exact = tables.lineitem.groupBy("l_returnflag")
-      .agg(countDistinct("l_orderkey").as("d")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    exact.foreach { case (flag, d) =>
-      val (approx, p50, p99) = s(flag)
-      assert(math.abs(approx - d).toDouble / d < 0.1,
-        s"$flag approx=$approx exact=$d")
-      assert(p50 <= p99)
-    }
-  }
-
-  test("secondary sort: rows ordered within every partition") {
-    val sorted = Relational.secondarySorted(tables)
-    import org.apache.spark.sql.Row
-    val violations = sorted.select("event_type", "value", "event_id").rdd
-      .mapPartitions { it =>
-        val rows = it.toSeq
-        val bad = rows.zip(rows.drop(1)).count { case (a: Row, b: Row) =>
-          val ka = (a.getString(0), a.getDouble(1), a.getLong(2))
-          val kb = (b.getString(0), b.getDouble(1), b.getLong(2))
-          Ordering[(String, Double, Long)].gt(ka, kb)
-        }
-        Iterator.single(bad)
-      }.sum()
-    assert(violations == 0)
-  }
-
   test("q72 gap counts equal events minus first-events, quantiles ordered") {
     val r = Relational.q72(tables).collect()
       .map(x => x.getString(0) -> (x.getLong(1), x.getDouble(2), x.getDouble(3)))

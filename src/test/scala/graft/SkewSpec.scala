@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Skew}
+import graft.operators.Dedup
 import graft.plans.PlanAudit
 import org.apache.spark.sql.execution.PartialReducerPartitionSpec
 import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
@@ -83,31 +83,5 @@ class SkewSpec extends SparkSpec {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None)    => conf.unset(k)
     }
-  }
-
-  test("saltedJoin is row-identical to the plain join") {
-    val plain = tables.orders
-      .join(tables.customer, tables.orders("o_custkey") === tables.customer("c_custkey"))
-      .select("o_orderkey", "c_name")
-    val big = tables.orders.withColumnRenamed("o_custkey", "ckey")
-    val small = tables.customer.withColumnRenamed("c_custkey", "ckey")
-    val salted = Skew.saltedJoin(
-      big, small, "ckey", saltSource = col("o_orderkey"), factor = 8)
-      .select("o_orderkey", "c_name")
-    assert(salted.exceptAll(plain).count() == 0
-      && plain.exceptAll(salted).count() == 0)
-  }
-
-  test("saltedSum equals direct groupBy sum") {
-    val direct = tables.events.groupBy(col("event_type"))
-      .agg(sum("value").as("sum_value"), count(lit(1)).as("cnt"))
-    val salted = Skew.saltedSum(
-      tables.events, "event_type", "value",
-      saltSource = col("event_id"), factor = 8)
-    // doubles: compare rounded (salting changes float add order)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("event_type"), round(col("sum_value"), 6), col("cnt"))
-        .collect().map(_.toString).sorted.toSeq
-    assert(canon(direct) == canon(salted))
   }
 }

@@ -126,62 +126,6 @@ class StreamingSpec extends SparkSpec {
     assert(canon(lagForm) == canon(batch.orderBy("user_id")))
   }
 
-  test("flatMapGroupsWithState sessionization matches session_window") {
-    val batchDf = spark.read.parquet(eventsDir)
-    val viaState = graft.streaming.StatefulSessions
-      .sessionize(spark, batchDf).toDF()
-      .orderBy("user_id")
-    val viaWindow = EventsStreaming.sessionsPerUser(batchDf)
-    assert(canon(viaState) == canon(viaWindow))
-  }
-
-  test("transformWithState sessionization matches session_window (batch)") {
-    val batchDf = spark.read.parquet(eventsDir)
-    val viaTws = graft.streaming.TwsSessions
-      .sessionize(spark, batchDf).toDF()
-    val viaWindow = EventsStreaming.sessionsPerUser(batchDf)
-    assert(canon(viaTws) == canon(viaWindow))
-  }
-
-  test("transformWithState carries state across micro-batches (RocksDB)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import java.sql.Timestamp
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-
-    // time-ordered batches: sessions spanning a batch boundary are the
-    // case flatMapGroupsWithState's batch-mode test cannot reach
-    val rows = tables.events
-      .select(col("user_id").cast("long"), col("ts").cast("timestamp"))
-      .orderBy("ts").as[(Long, Timestamp)].collect()
-    val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[(Long, Timestamp)]
-      val q = graft.streaming.TwsSessions
-        .sessionize(spark, mem.toDF().toDF("user_id", "ts")).toDF()
-        .writeStream.format("memory").queryName("tws_sessions")
-        .outputMode(OutputMode.Update()).start()
-      try {
-        chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq)
-          q.processAllAvailable() // force one micro-batch per chunk
-        }
-      } finally q.stop()
-      // update mode re-emits a key's cumulative counts every batch it
-      // appears in; both counters are monotone, so max = final state
-      val fin = spark.table("tws_sessions").groupBy("user_id")
-        .agg(max("sessions").as("sessions"), max("events").as("events"))
-      val batch = EventsStreaming.sessionsPerUser(
-        spark.read.parquet(eventsDir))
-      assert(canon(fin) == canon(batch))
-    } finally spark.conf.unset(
-      "spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("transformWithState event-time timers close idle sessions " +
     "exactly once (append mode)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -109,29 +109,6 @@ class TextSpec extends SparkSpec {
     assert(math.abs(trainFrac - 0.75) < 0.15, s"train fraction $trainFrac")
   }
 
-  test("stratifiedSample approximates per-language fractions") {
-    val fractions = Map("en" -> 0.5, "de" -> 1.0, "es" -> 0.0,
-      "fr" -> 0.5, "zh" -> 0.5)
-    val s = TextAnalysis.stratifiedSample(tables.documents, fractions)
-    val byLang = s.groupBy("lang").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val totals = tables.documents.groupBy("lang").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(!byLang.contains("es"))
-    assert(byLang("de") == totals("de"))
-    val enFrac = byLang("en").toDouble / totals("en")
-    assert(enFrac > 0.2 && enFrac < 0.8, s"en fraction $enFrac")
-    // seeded → reproducible
-    val again = TextAnalysis.stratifiedSample(tables.documents, fractions)
-    assert(s.exceptAll(again).count() == 0)
-  }
-
-  test("rollingFingerprint distinguishes token order") {
-    val got = Seq("a b c", "c b a", "a b c").toDF("t")
-      .select(TextAnalysis.rollingFingerprint(col("t"))).as[Long].collect()
-    assert(got(0) != got(1) && got(0) == got(2))
-  }
-
   test("boilerplate: repeated leading k-grams surface per source") {
     val docs = Seq(
       (1L, "copyright acme corp page one", "web"),

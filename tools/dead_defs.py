@@ -3,8 +3,10 @@
 
 For every `def` in src/main/**/*.scala that is not `private`,
 `private[...]` or an `override`, count the word-boundary occurrences
-of its name across src/main and perfbench/src (comments included). A
-name that occurs exactly once is named only by its own definition: the
+of its name across src/main and perfbench/src, with `//` and `/* */`
+comments (scaladoc included) stripped first: a name that appears only
+in prose calls nothing. String literals are kept, because `s"${f(x)}"`
+interpolations call defs. A name that occurs exactly once is named only by its own definition: the
 def is reachable from the tests at most. Each such def prints as
 
     <file>:<line> <name> <test_refs>
@@ -29,6 +31,47 @@ DEF = re.compile(
     r"private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)"
     r"def\s+(?P<name>[A-Za-z_][A-Za-z0-9_]*)")
 WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+CHAR = re.compile(r"'(?:\\u[0-9A-Fa-f]{4}|\\.|[^\\'\n])'")
+
+
+def strip_comments(src):
+    """`src` with every `//` and (nested) `/* */` comment removed.
+
+    String and character literals are copied through untouched, so a
+    `//` inside a literal is not taken for a comment."""
+    out, i, n = [], 0, len(src)
+    while i < n:
+        if src.startswith("//", i):
+            j = src.find("\n", i)
+            i = n if j < 0 else j
+        elif src.startswith("/*", i):
+            depth, i = 1, i + 2
+            while i < n and depth:
+                if src.startswith("/*", i):
+                    depth, i = depth + 1, i + 2
+                elif src.startswith("*/", i):
+                    depth, i = depth - 1, i + 2
+                else:
+                    i += 1
+        elif src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and src[j] == '"':
+                j += 1
+            out.append(src[i:j])
+            i = j
+        elif src[i] == '"':
+            j = i + 1
+            while j < n and src[j] not in '"\n':
+                j += 2 if src[j] == "\\" else 1
+            out.append(src[i:j + 1])
+            i = j + 1
+        else:
+            m = CHAR.match(src, i) if src[i] == "'" else None
+            j = m.end() if m else i + 1
+            out.append(src[i:j])
+            i = j
+    return "".join(out)
 
 
 def scala_files(dirs):
@@ -43,7 +86,7 @@ def word_counts(dirs):
     counts = Counter()
     for path in scala_files(dirs):
         with open(path, encoding="utf-8") as fh:
-            counts.update(WORD.findall(fh.read()))
+            counts.update(WORD.findall(strip_comments(fh.read())))
     return counts
 
 
