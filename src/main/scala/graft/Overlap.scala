@@ -31,18 +31,39 @@ object Overlap {
     * failure — no thunk may still be running when the caller resumes),
     * then rethrow the first failure if any. */
   def all(thunks: (() => Unit)*): Unit = {
-    if (thunks.sizeIs <= 1) { thunks.foreach(_()); return }
+    map(thunks, thunks.size)(_())
+    ()
+  }
+
+  /** `xs.map(f)` on at most `width` driver threads, results in `xs`
+    * order. Same contract as [[all]]: every element runs, even after a
+    * failure, and no thread is still running when this returns; then
+    * the first failure, if any, is rethrown. */
+  def map[A, B](xs: Seq[A], width: Int)(f: A => B): Seq[B] = {
+    val in = xs.toIndexedSeq
+    val out = new Array[Any](in.size)
+    val next = new java.util.concurrent.atomic.AtomicInteger
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = thunks.zipWithIndex.map { case (t, i) =>
-      val th = new Thread(
-        () => try t() catch { case e: Throwable => errs.add(e); () },
-        s"graft-overlap-$i")
-      th.setDaemon(true)
-      th.start()
-      th
+    val worker: Runnable = () => {
+      var i = next.getAndIncrement()
+      while (i < in.size) {
+        try out(i) = f(in(i)) catch { case e: Throwable => errs.add(e); () }
+        i = next.getAndIncrement()
+      }
     }
-    threads.foreach(_.join())
+    val n = math.min(width, in.size)
+    if (n <= 1) worker.run()
+    else {
+      val threads = (0 until n).map { i =>
+        val th = new Thread(worker, s"graft-overlap-$i")
+        th.setDaemon(true)
+        th.start()
+        th
+      }
+      threads.foreach(_.join())
+    }
     val e = errs.poll()
     if (e != null) throw e
+    out.toSeq.asInstanceOf[Seq[B]]
   }
 }

@@ -132,10 +132,9 @@ object Main {
           Ranker.loadModels(p.modelsDir.get,
             if (p.targetSites.nonEmpty) sites.filter(p.targetSites.contains)
             else sites)
-        else Ranker.train(cached, sites, targets = p.targetSites)
-      if (p.build)
-        models.foreach(sm =>
-          sm.model.write.save(s"${layout.models}/${sm.site}"))
+        else Ranker.train(cached, sites,
+          modelsDir = Option.when(p.build)(layout.models),
+          targets = p.targetSites)
       if (p.score) {
         val matrix = Ranker
           .scoreMatrix(Ranker.scoreLong(cached, sites, models),

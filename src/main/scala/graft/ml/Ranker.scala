@@ -1,14 +1,11 @@
 package graft.ml
 
-import java.util.concurrent.Executors
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{RandomForestRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
 /** Train/score stage: per-site RandomForest regression predicting a
   * site's popularity rank from every *other* site's features —
@@ -26,6 +23,10 @@ import scala.concurrent.duration.Duration
   *    target triple (Utils.scala:39-43);
   *  - per-site failure isolation with an empty typed frame fallback
   *    (ScorePredictor.scala:37-44) is kept;
+  *  - model saves and loads run on the fits' bounded 8-way fan-out
+  *    (JobRunner.scala:15,51-54) instead of one site at a time
+  *    (ScorePredictor.scala:26-34): each site's model is written by
+  *    the thread that fit it;
   *  - the N-way outer-join score-matrix reduce (ScorePredictor.scala:47)
   *    is replaced by union-then-pivot — one shuffle instead of N−1,
   *    and the plan depth no longer grows with the site count. The
@@ -68,60 +69,64 @@ object Ranker {
   final case class SiteModel(
       site: String, model: RandomForestRegressionModel, rmse: Double)
 
-  /** Train one model per site concurrently (bounded pool — the
-    * reference's 8-way ForkJoin `.par`, JobRunner.scala:15,51-54; Spark's
-    * scheduler multiplexes the concurrent jobs), with per-site failure
-    * isolation. Returns only the sites that trained successfully. */
+  /** Width of the per-site fan-out: the reference's 8-way ForkJoin
+    * `.par` (JobRunner.scala:15,51-54), one thread per site below it.
+    * FAIR scheduling (Sessions) shares executors between the sites'
+    * concurrent jobs. */
+  private val FanOut = 8
+
+  /** Train one model per site concurrently with per-site failure
+    * isolation; returns only the sites that trained successfully. With
+    * `modelsDir`, each site's thread writes its model to
+    * `<modelsDir>/<site>` (the reference's fail-if-exists MLlib save)
+    * right after its fit, while other sites still fit. A failed fit
+    * drops its site; a failed write fails the call, once every other
+    * site has finished. */
   def train(
       features: DataFrame, sites: Seq[String],
-      parallelism: Int = 0,
+      modelsDir: Option[String] = None,
       targets: Seq[String] = Seq()): Seq[SiteModel] = {
     // targets restricts which sites get a model (reference
     // --target-wikis); `sites` stays the full feature-column universe
     val toTrain = if (targets.nonEmpty) sites.filter(targets.contains)
       else sites
-    // default: one slot per site up to the reference's 8-way fan-out
-    // (JobRunner.scala:15); FAIR scheduling (Sessions) shares executors
-    val slots =
-      if (parallelism > 0) parallelism else math.min(toTrain.size, 8)
-    val pool = Executors.newFixedThreadPool(math.max(slots, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = toTrain.map { site =>
-        Future {
-          try {
-            val work = workData(features, sites, site, exists = true)
-            val Array(trainDf, testDf) =
-              work.randomSplit(Array(0.7, 0.3), Seed)
-            val model = regressor(site).fit(trainDf)
-            val predictions = model.transform(
-              if (testDf.isEmpty) trainDf else testDf)
-            // evaluator is per-task: Params are mutable, sharing one
-            // across concurrent site fits races on predictionCol
-            val rmse = new RegressionEvaluator()
-              .setLabelCol("label").setMetricName("rmse")
-              .setPredictionCol(site).evaluate(predictions)
-            Some(SiteModel(site, model, rmse))
-          } catch {
-            case e: Exception =>
-              System.err.println(s"[ranker] train $site failed: ${e.getMessage}")
-              None
-          }
+    graft.Overlap.map(toTrain, FanOut) { site =>
+      val fitted =
+        try {
+          val work = workData(features, sites, site, exists = true)
+          val Array(trainDf, testDf) =
+            work.randomSplit(Array(0.7, 0.3), Seed)
+          val model = regressor(site).fit(trainDf)
+          val predictions = model.transform(
+            if (testDf.isEmpty) trainDf else testDf)
+          // evaluator is per-task: Params are mutable, sharing one
+          // across concurrent site fits races on predictionCol
+          val rmse = new RegressionEvaluator()
+            .setLabelCol("label").setMetricName("rmse")
+            .setPredictionCol(site).evaluate(predictions)
+          Some(SiteModel(site, model, rmse))
+        } catch {
+          case e: Exception =>
+            System.err.println(s"[ranker] train $site failed: ${e.getMessage}")
+            None
         }
-      }
-      Await.result(Future.sequence(futures), Duration.Inf).flatten
-    } finally pool.shutdown()
+      // outside the isolation: a model that fit but cannot be persisted
+      // fails the run, as a sequential save after the fan-out would
+      for (sm <- fitted; dir <- modelsDir) sm.model.write.save(s"$dir/$site")
+      fitted
+    }.flatten
   }
 
   /** Load persisted per-site models for score-only runs (reference
     * ScorePredictor.scala:26-34: `RandomForestRegressionModel.load(new
-    * File(modelsInputDir, target))`), with the same per-site failure
-    * isolation — a missing or corrupt model dir skips that site instead
-    * of failing the run. The prediction column is re-pinned to the site
-    * name exactly as the reference re-sets it after load. RMSE is not
+    * File(modelsInputDir, target))`) on the same fan-out as [[train]],
+    * in `targets` order, with the same per-site failure isolation — a
+    * missing or corrupt model dir skips that site instead of failing
+    * the run. The prediction column is re-pinned to the site name
+    * exactly as the reference re-sets it after load. RMSE is not
     * persisted alongside models; loaded entries carry NaN. */
   def loadModels(modelsDir: String, targets: Seq[String]): Seq[SiteModel] =
-    targets.flatMap { site =>
+    graft.Overlap.map(targets, FanOut) { site =>
       try {
         val m = RandomForestRegressionModel.load(s"$modelsDir/$site")
         Some(SiteModel(site, m.setPredictionCol(site), Double.NaN))
@@ -130,7 +135,7 @@ object Ranker {
           System.err.println(s"[ranker] load $site failed: ${e.getMessage}")
           None
       }
-    }
+    }.flatten
 
   /** Score the missing (exists=0) rows of every modeled site; long form
     * `(id, site, score)`. Sites with no missing rows contribute no rows;

@@ -3,10 +3,7 @@ package graft
 import graft.operators.Similarity
 import graft.plans.PlanAudit
 import graft.sources.IndexLedger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The one IVF coarse-quantizer trainer ([[Similarity.ivfCentroids]]):
@@ -58,29 +55,6 @@ class IvfTrainerSpec extends SparkSpec {
     }
   }
 
-  /** A job `body` ran: its name (its result stage's call site, as in
-    * the web UI) and whether it ran inside a SQL execution. */
-  private final case class Job(name: String, inQuery: Boolean)
-
-  /** The jobs `body` runs, counted exactly: the listener bus is drained
-    * on both sides of `body`. */
-  private def jobsOf(body: => Unit): Seq[Job] = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.add(Job(js.stageInfos.maxBy(_.stageId).name,
-          Option(js.properties).exists(
-            _.getProperty(SQLExecution.EXECUTION_ID_KEY) != null)))
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.toArray(new Array[Job](0)).toSeq
-  }
-
   private def freshState(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString + "/state"
 
@@ -88,7 +62,7 @@ class IvfTrainerSpec extends SparkSpec {
     * frames, so every read declares their schema. A footer-inference
     * job runs while the read is analyzed, outside any SQL execution;
     * the ledger's parquet WRITES carry the same name inside one. */
-  private def assertNoFooterJobs(jobs: Seq[Job]): Unit = {
+  private def assertNoFooterJobs(jobs: Seq[SparkSpec.Job]): Unit = {
     val footer = jobs.filter(j =>
       !j.inQuery && j.name.startsWith("parquet at IndexLedger.scala"))
     assert(footer.isEmpty, footer.mkString(", "))

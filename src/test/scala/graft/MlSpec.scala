@@ -86,6 +86,35 @@ class MlSpec extends SparkSpec {
     assert(orig.exceptAll(rt).count() == 0)
   }
 
+  test("train writes each site's model from its own fan-out thread: a " +
+    "failed write fails the call only after every other site is " +
+    "written; loadModels skips missing sites and keeps targets order") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-models").toString
+    // a non-empty <dir>/<site> makes that site's fail-if-exists save throw
+    val blocked = sites.sorted.head
+    val clash = java.nio.file.Paths.get(dir, blocked)
+    java.nio.file.Files.createDirectories(clash)
+    java.nio.file.Files.writeString(clash.resolve("occupied"), "x")
+    val err = intercept[java.io.IOException](Ranker.train(fm, sites, Some(dir)))
+    assert(err.getMessage.contains(blocked), err.getMessage)
+    // when train returned, no fan-out thread was still writing
+    val alive = Thread.getAllStackTraces.keySet.toArray(new Array[Thread](0))
+      .filter(t => t.isAlive && t.getName.startsWith("graft-overlap-"))
+    assert(alive.isEmpty, alive.map(_.getName).mkString(", "))
+    val written = sites.filterNot(_ == blocked)
+    assert(written.nonEmpty)
+    written.foreach(s =>
+      org.apache.spark.ml.regression.RandomForestRegressionModel
+        .load(s"$dir/$s"))
+    // loads come back in targets order; the blocked dir (no model in
+    // it) and a site with no dir at all are skipped
+    val targets = ("nosuchwiki" +: sites.sorted.reverse)
+    val loaded = Ranker.loadModels(dir, targets)
+    assert(loaded.map(_.site) == targets.filter(written.contains))
+    loaded.foreach(sm =>
+      assert(sm.model.getPredictionCol == sm.site && sm.rmse.isNaN))
+  }
+
   test("ALS recommender: k recs per customer, seeded-reproducible") {
     val recs = Recommender.recommend(tables.lineitem, tables.orders, k = 5)
     val perUser = recs.groupBy("o_custkey").count()

@@ -95,6 +95,29 @@ class PipelineSpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
+  test("a build-only run and a score-only run each run an exact job " +
+    "count") {
+    Main.run(spark, Main.Params(
+      parse = true, extract = true,
+      sitelinks = Some(slPath), pagecounts = Some(pcPath),
+      outputDir = s"$dir/out_jobs_x"))
+    def only(out: String, suffix: String): String =
+      new java.io.File(out).listFiles()
+        .find(_.getName.endsWith(suffix)).get.getPath
+    val fmPath = only(s"$dir/out_jobs_x", "_featureData")
+    val build = jobsOf(Main.run(spark, Main.Params(
+      build = true, featureData = Some(fmPath),
+      outputDir = s"$dir/out_jobs_b")))
+    val score = jobsOf(Main.run(spark, Main.Params(
+      score = true, featureData = Some(fmPath),
+      modelsDir = Some(only(s"$dir/out_jobs_b", "_models")),
+      outputDir = s"$dir/out_jobs_s")))
+    // the per-site model writes and loads add no job: they move on the
+    // fits' fan-out, not out of it
+    assert((build.length, score.length) == ((71, 42)),
+      (build ++ score).map(_.name).mkString(", "))
+  }
+
   test("--build-models sources --feature-data without a parse stage") {
     // ADVICE: this validation-accepted path used to crash on the eager
     // `parsed.get` before the feature branch was consulted
