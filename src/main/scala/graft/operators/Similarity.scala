@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.VectorFunctions.ivf_nearest
 
 /** Similarity search over an embedding column (SURVEY §2.10 X2):
   * brute-force cosine top-k as the exact baseline, and IVF / SQ8
@@ -271,9 +272,10 @@ object Similarity {
     * query probes its `nprobe` nearest cells and exact cosine re-ranks
     * only those cells' vectors.
     *
-    * Plan shape at scale: centroids are tiny (nlist × dim, broadcast);
-    * cell assignment is one map-side pass; the probe join is an
-    * equi-join on cell id. Corpus is hash-partitioned by cell — the
+    * Plan shape at scale: centroids are tiny (nlist × dim, a literal
+    * in the plan); cell assignment and each query's probe are map-side
+    * passes of the [[graft.functions.IvfNearest]] kernel; the probe
+    * join is an equi-join on cell id. Corpus is hash-partitioned by cell — the
     * classic FAISS-style IVF layout expressed as DataFrames. Recall vs
     * brute force is asserted in SimilaritySpec. */
   def ivfCosineTopK(
@@ -283,18 +285,14 @@ object Similarity {
       col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("n", norm(col("v")))
     val centDf = ivfCentroids(vecs, "vec_id", "v", nlist)
-    val assigned = ivfAssign(vecs, centDf, "vec_id", "v")
-    // query-side: distance to every centroid (nlist is small), keep the
+    val assigned = ivfAssign(vecs, centDf, "v")
+    // query-side: dot to every centroid (nlist is small), keep the
     // nprobe nearest cells
     val q = vecs.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("n").as("qn"))
-    val qCells = q.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("qv"), col("qn"), col("cell"),
-        dot(col("qv"), col("cv")).as("sim"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("sim").desc, col("cell"))))
-      .filter(col("rk") <= nprobe)
-      .select("qid", "qv", "qn", "cell")
+    val qCells = q.select(col("qid"), col("qv"), col("qn"),
+      explode(ivf_nearest(col("qv"), ivfCells(centDf), nprobe,
+        probe = true)).as("cell"))
     val cand = assigned
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn"),
         col("cell"))
@@ -346,21 +344,31 @@ object Similarity {
       .withColumn("c2", dot(col("cv"), col("cv")))
   }
 
+  /** An [[ivfCentroids]]-form frame (cell, cv, c2) as the literal the
+    * [[graft.functions.IvfNearest]] kernel scores against: its nlist
+    * rows, collected once (no job for a driver-side frame; one
+    * kilobyte read for a persisted one). */
+  def ivfCells(cent: DataFrame): Column = typedLit(centroidRows(cent))
+
+  private def centroidRows(cent: DataFrame): Seq[(Int, Seq[Double], Double)] =
+    cent.select("cell", "cv", "c2").collect().toSeq.map(r =>
+      (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
+
   /** (id, v, ...) → (id, v, ..., cell, cv): nearest centroid of an
     * [[ivfCentroids]] frame by Euclidean argmin — rank by
     * (c2 − 2·v·c), the ||v||²-free form, tie-broken by cell id so
-    * assignment is deterministic. One narrow map with a kilobyte
-    * broadcast; no shuffle beyond the window's id hash. Keeps the
-    * matched centroid `cv` (the drift statistic reads it). */
-  def ivfAssign(
-      vs: DataFrame, cent: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val scored = vs.crossJoin(broadcast(cent))
-      .withColumn("__ad", col("c2") - lit(2.0) * dot(col(vecCol), col("cv")))
-    val w = Window.partitionBy(idCol).orderBy(col("__ad"), col("cell"))
-    scored.withColumn("__ar", row_number().over(w))
-      .filter(col("__ar") === 1)
-      .drop("__ad", "__ar", "c2")
+    * assignment is deterministic. One narrow projection, one row out
+    * per row in: the [[graft.functions.IvfNearest]] kernel against the
+    * [[ivfCells]] literal, then a literal lookup of the matched
+    * centroid `cv` (the drift statistic reads it) — no exchange or
+    * sort; the centroid collect is its only job (none for a
+    * driver-side frame). */
+  def ivfAssign(vs: DataFrame, cent: DataFrame, vecCol: String): DataFrame = {
+    val rows = centroidRows(cent)
+    val cvOf = typedLit(rows.map { case (cell, cv, _) => cell -> cv }.toMap)
+    vs.withColumn("cell",
+        ivf_nearest(col(vecCol), typedLit(rows), 1, probe = false).getItem(0))
+      .withColumn("cv", element_at(cvOf, col("cell")))
   }
 
   /** Deterministic local Lloyd's k-means for the IVF coarse quantizer:
@@ -550,18 +558,13 @@ object Similarity {
       .withColumn("d2", vec_dot(col("qc"), col("qc")))
       .filter(col("d2") > 0.0)
     val centDf = ivfCentroids(vecs, "vec_id", "v", nlist)
-    val assigned = ivfAssign(vecs, centDf, "vec_id", "v")
+    val assigned = ivfAssign(vecs, centDf, "v")
     val q = vecs.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("n").as("qn"), col("qc").as("qqc"), col("d2").as("qd2"))
-    val qCells = q.crossJoin(broadcast(centDf))
-      .select(col("qid"), col("qv"), col("qn"), col("qqc"),
-        col("qd2"), col("cell"),
-        dot(col("qv"), col("cv")).as("sim"))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("qid").orderBy(col("sim").desc, col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("qid", "qv", "qn", "qqc", "qd2", "cell")
+    val qCells = q.select(col("qid"), col("qv"), col("qn"), col("qqc"),
+      col("qd2"), explode(ivf_nearest(col("qv"), ivfCells(centDf), nprobe,
+        probe = true)).as("cell"))
     // stage 1: quantized scoring over the probed cells only
     val cand = assigned
       .select(col("vec_id").as("cid"), col("v").as("cv2"),

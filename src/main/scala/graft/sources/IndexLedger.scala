@@ -33,9 +33,12 @@ import org.apache.spark.sql.types.StructType
   *    (vector, committed centroids), any increment composition commits
   *    the same state: two absorbs == one absorb of the union, so
   *    [[topK]] shortlists are identical at any oversample.
-  *  - [[topK]] serves from committed state only: broadcast the
-  *    kilobyte centroid frame, probe `nprobe` cells, score int8 codes
-  *    (`vec_dot` over exact-integer doubles — the q162 discipline),
+  *  - [[topK]] serves from committed state only: collect the
+  *    kilobyte centroid frame into a literal, probe each query's
+  *    `nprobe` best cells with the [[graft.functions.IvfNearest]]
+  *    kernel inside the query scan (no exchange), score the stored
+  *    int8 codes in place (`vec_dot` reads them as exact-integer
+  *    doubles — the q162 discipline),
   *    keep each query's k·oversample best with the engine's
   *    bounded-heap [[graft.plans.TopKPerKey]] (partial heap → one qid
   *    exchange → final heap; the candidates are never sorted), rank
@@ -58,17 +61,18 @@ import org.apache.spark.sql.types.StructType
   *    superseded state beyond a version horizon.
   *
   * 100 TB posture: per-increment work is O(|batch| · nlist) assign +
-  * O(|batch| · d) code — a narrow map over the batch with a kilobyte
-  * broadcast; queries touch `nprobe/nlist` of the code rows via the
-  * cell equi-join, and each task keeps at most k·oversample
+  * O(|batch| · d) code — a map over the batch against a kilobyte
+  * centroid literal, behind one exchange of the batch by id (one row
+  * per id); queries touch `nprobe/nlist` of the code
+  * rows via the cell equi-join, and each task keeps at most k·oversample
   * candidates per query (the heap bound), so candidates are never
   * shuffled or sorted in full; the k·|query batch| result is ordered
   * inside one partition (a serving batch is bounded by the caller);
   * nothing driver-side exceeds the `nlist`-row centroid collect. */
 object IndexLedger {
 
-  import graft.operators.Similarity.{asDouble, ivfAssign, ivfCentroids, sq8Codes}
-  import graft.functions.VectorFunctions.vec_dot
+  import graft.operators.Similarity.{asDouble, ivfAssign, ivfCells, ivfCentroids, sq8Codes}
+  import graft.functions.VectorFunctions.{ivf_nearest, vec_dot}
   import graft.plans.TopKPerKey
   import Ledger.{Manifest, partName}
 
@@ -130,17 +134,27 @@ object IndexLedger {
     readCentroids(spark, statePath, ixAt(statePath, asOfVersion))
 
   /** Committed per-vector state (vec_id, cell, qc, d2) — CURRENT or
-    * as-of. qc reads back as array<tinyint>; [[topK]] casts for the
-    * exact-integer double dot. */
+    * as-of. qc reads back as array<tinyint>; [[topK]] dots it in place
+    * (`vec_dot` reads int8 codes as exact-integer doubles). */
   def codes(
       spark: SparkSession, statePath: String,
       asOfVersion: Long = -1L): DataFrame =
     readCodes(spark, statePath, ixAt(statePath, asOfVersion))
 
   /** (__aid, __v, ...) → + (cell, cv): nearest committed centroid —
-    * the shared [[graft.operators.Similarity.ivfAssign]] argmin. */
-  private def assign(vs: DataFrame, cent: DataFrame): DataFrame =
-    ivfAssign(vs, cent, "__aid", "__v")
+    * the shared [[graft.operators.Similarity.ivfAssign]] argmin — for
+    * ONE row per `__aid`: a repeated id keeps its least (__v, ...) row,
+    * so a write commits one code row per id and [[topK]] serves
+    * distinct (qid, cid) without a distinct. That cut is the one
+    * exchange of a build or an increment: an id's rows can sit in any
+    * partition. */
+  private def assign(vs: DataFrame, cent: DataFrame): DataFrame = {
+    val rest = vs.columns.filter(_ != "__aid").toSeq
+    val onePerId = vs.groupBy("__aid")
+      .agg(min(struct(rest.map(col): _*)).as("__r"))
+      .select(col("__aid") +: rest.map(c => col(s"__r.$c")): _*)
+    ivfAssign(onePerId, cent, "__v")
+  }
 
   /** Mean angular distortion 1 − cos(v, centroid(v)) over an assigned
     * frame — the drift statistic. */
@@ -163,20 +177,21 @@ object IndexLedger {
   }
 
   /** An embeddings frame as (__aid, __v, __qc, __d2): float vector,
-    * SQ8 codes (exact-integer doubles) and their squared norm. Zero
-    * vectors are unquantizable (d2 = 0, as in q166); [[quantizable]]
-    * drops them above the assign window, not here: Catalyst pushes a
-    * filter below the projections that compute its columns,
-    * substituting their expressions, so a `__d2` filter on this frame
-    * would run `sq8_codes` in the filter and again in the projection.
-    * A window passes down only filters on its partition key. */
+    * SQ8 codes (exact-integer doubles) and their squared norm, for the
+    * quantizable vectors only (zero vectors code to d2 = 0, as in
+    * q166). The cut is the `explode` of `[d2]`, empty when d2 = 0, not
+    * a filter: Catalyst pushes a filter below the projections that
+    * compute its columns, substituting their expressions, so a `__d2`
+    * filter would run `sq8_codes` in the filter and again in the
+    * projection (and list it in the scan's pushed filters); a
+    * generator's output stays above its generator. */
   private def prep(batch: DataFrame): DataFrame =
     batch.select(col("vec_id").as("__aid"),
         asDouble(col("embedding")).as("__v"))
       .withColumn("__qc", sq8Codes(col("__v")).cast("array<double>"))
       .withColumn("__d2", vec_dot(col("__qc"), col("__qc")))
-
-  private val quantizable = col("__d2") > 0.0
+      .select(col("__aid"), col("__v"), col("__qc"),
+        explode(when(col("__d2") > 0.0, array(col("__d2")))).as("__d2"))
 
   private def writeCodes(
       spark: SparkSession, statePath: String, part: String,
@@ -198,7 +213,8 @@ object IndexLedger {
   }
 
   /** The build body of [[init]] and [[refresh]]: fit the coarse
-    * quantizer on a sample of `vecs` (__aid, __v, __qc, __d2), write
+    * quantizer on a sample of the quantizable `vecs` (__aid, __v,
+    * __qc, __d2 > 0), write
     * the centroids, assign every vector against the PERSISTED
     * centroids (the same expression path [[absorb]] uses — init ==
     * absorb assignment parity is the composition contract), write the
@@ -207,12 +223,11 @@ object IndexLedger {
   private def build(
       spark: SparkSession, statePath: String, vecs: DataFrame, nlist: Int,
       ix: IxManifest): Unit = {
-    ivfCentroids(vecs.filter(quantizable), "__aid", "__v", nlist)
+    ivfCentroids(vecs, "__aid", "__v", nlist)
       .write.mode("overwrite")
       .parquet(centroidsDir(statePath, ix.centroidVersion))
     val cent = readCentroids(spark, statePath, ix)
-    val (assigned, baseObs) =
-      observedDistortion(assign(vecs, cent).filter(quantizable))
+    val (assigned, baseObs) = observedDistortion(assign(vecs, cent))
     writeCodes(spark, statePath, ix.codeParts.head, assigned)
     val base = scala.concurrent.Await.result(baseObs.future,
       scala.concurrent.duration.Duration(300, "s")).getDouble(0)
@@ -230,34 +245,35 @@ object IndexLedger {
     val known = readCodes(spark, statePath, ix)
       .select(col("vec_id").as("__aid"))
     val fresh = prep(batch).join(known, Seq("__aid"), "left_anti")
-    Pending(assign(fresh, cent).filter(quantizable).persist(), ix)
+    Pending(assign(fresh, cent), ix)
   }
 
+  /** Write the batch's code part and commit it; returns the part. */
   private def commitState(
       spark: SparkSession, statePath: String, p: Pending,
-      batchId: Option[Long]): Unit = {
+      batchId: Option[Long]): String = {
     val next = p.ix.version + 1
     writeCodes(spark, statePath, partName(next), p.assigned)
     Ledger.writeManifest(statePath, manifestOf(p.ix.copy(
       version = next,
       codeParts = p.ix.codeParts :+ partName(next),
       lastBatchId = batchId)))
+    partName(next)
   }
 
   /** Index an increment: assign + SQ8-code the batch's NEW vectors
     * against committed centroids, append one code part, advance one
-    * version. Returns the newly indexed (vec_id, cell). The corpus is
+    * version. Returns the newly indexed (vec_id, cell), read back from
+    * the committed part (not recomputed from the batch). The corpus is
     * never rescanned; a vec_id already committed is skipped (replay/
     * overlap safety). */
   def absorb(
       spark: SparkSession, statePath: String,
       batch: DataFrame): DataFrame = {
     val p = deriveBatch(spark, statePath, ixAt(statePath), batch)
-    commitState(spark, statePath, p, batchId = None)
-    val out = p.assigned.select(col("__aid").as("vec_id"), col("cell"))
-      .orderBy("vec_id")
-    p.assigned.unpersist()
-    out
+    val part = commitState(spark, statePath, p, batchId = None)
+    spark.read.schema(CodeSchema).parquet(codesDir(statePath, part))
+      .select("vec_id", "cell").orderBy("vec_id")
   }
 
   /** Streaming ingest with the [[Ledger.admit]] exactly-once
@@ -269,7 +285,9 @@ object IndexLedger {
       outDir: String): (DataFrame, Long) => Unit =
     (batch, batchId) =>
       Ledger.admit(statePath, batchId).foreach { m =>
+        // two writes read the batch's state: derive it once
         val p = deriveBatch(spark, statePath, parse(m), batch)
+        p.assigned.persist()
         p.assigned.select(col("__aid").as("vec_id"), col("cell"))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
         commitState(spark, statePath, p, Some(batchId))
@@ -293,22 +311,21 @@ object IndexLedger {
         asDouble(col("embedding")).as("qv"))
       .withColumn("qqc", sq8Codes(col("qv")).cast("array<double>"))
       .withColumn("qd2", vec_dot(col("qqc"), col("qqc")))
-    // the zero-query cut (qd2 > 0) sits above the probe window, so each
+    // a zero query (qd2 = 0) probes no cell: the cut sits inside the
+    // probe's generator, so it is not pushed below the encode and each
     // query is encoded once (see [[prep]])
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("__sim", vec_dot(col("qv"), col("cv")))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy("qid").orderBy(col("__sim").desc, col("cell"))))
-      .filter(col("__pr") <= nprobe && col("qd2") > 0.0)
-      .select("qid", "qqc", "qd2", "cell")
+    val qCells = q.select(col("qid"), col("qqc"), col("qd2"),
+      explode(when(col("qd2") > 0.0,
+        ivf_nearest(col("qv"), ivfCells(cent), nprobe, probe = true)))
+        .as("cell"))
     val self = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
     val cand = cs.join(broadcast(qCells), Seq("cell"))
       .filter(self)
       .select(col("qid"), col("vec_id").as("cid"),
-        (vec_dot(col("qqc"), col("qc").cast("array<double>")) /
+        (vec_dot(col("qqc"), col("qc")) /
           (sqrt(col("qd2")) * sqrt(col("d2")))).as("approx"))
     // (qid, cid) is unique without a distinct: each vec_id has one code
-    // row (ivfAssign keeps one cell per id within a write, absorb
+    // row ([[assign]] keeps one row per id within a write, absorb
     // anti-joins the committed ids) and a query's probed cells are
     // distinct
     val order = Seq(col("approx").desc, col("cid"))
@@ -347,7 +364,7 @@ object IndexLedger {
       batch: DataFrame): Double = {
     val ix = ixAt(statePath)
     val cent = readCentroids(spark, statePath, ix)
-    val d = distortionOf(assign(prep(batch), cent).filter(quantizable))
+    val d = distortionOf(assign(prep(batch), cent))
     if (ix.baseDistortion <= 0.0) 1.0 else d / ix.baseDistortion
   }
 

@@ -3,8 +3,16 @@ package graft
 import graft.operators.Similarity
 import graft.plans.PlanAudit
 import graft.sources.IndexLedger
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one IVF coarse-quantizer trainer ([[Similarity.ivfCentroids]]):
   * a deterministic sample of at most 256·nlist rows collected in one
@@ -68,15 +76,76 @@ class IvfTrainerSpec extends SparkSpec {
     assert(footer.isEmpty, footer.mkString(", "))
   }
 
+  /** The executed plans of the SQL executions `body` runs, drained
+    * like [[jobsOf]]. */
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(
+          funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(
+          funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(new Array[SparkPlan](0)).toSeq
+  }
+
+  private def encodesIn(plan: SparkPlan): Seq[graft.functions.Sq8Codes] =
+    PlanAudit.flatten(plan).flatMap(_.expressions
+      .flatMap(_.collect { case e: graft.functions.Sq8Codes => e }))
+
   test("IndexLedger.init runs exactly 5 jobs: the sample collect, the " +
-    "centroid write, and the code write's broadcast, shuffle map and " +
-    "write stages") {
+    "centroid write, the centroid collect, and the code write's " +
+    "one-row-per-id shuffle map and write stages") {
     val emb = tables.embeddings
     emb.inputFiles // resolve the file listing outside the count
     val state = freshState("ivf_jobs")
     val jobs = jobsOf(IndexLedger.init(spark, state, emb))
     assert(jobs.length == 5, s"IndexLedger.init ran: $jobs")
     assertNoFooterJobs(jobs)
+  }
+
+  test("IndexLedger.init's sample collect encodes each vector once: one " +
+    "sq8_codes in its executed plan, none in a pushed filter") {
+    val emb = tables.embeddings
+    emb.inputFiles
+    val state = freshState("ivf_sample_encode")
+    val plans = plansOf(IndexLedger.init(spark, state, emb))
+    val sample = plans.filter(p => PlanAudit.flatten(p).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.TakeOrderedAndProjectExec]))
+    assert(sample.length == 1, plans.mkString("\n---\n"))
+    assert(encodesIn(sample.head).length == 1, sample.head.toString)
+  }
+
+  test("IndexLedger.init and absorb assign without a centroid cross " +
+    "join or a window: each one's only shuffle is its one-row-per-id " +
+    "cut, hash-partitioned on the id") {
+    val plans = plansOf {
+      val state = q180State("ivf_one_exchange")
+      IndexLedger.absorb(spark, state,
+        tables.embeddings.filter(col("vec_id") % 10 >= 8))
+    }
+    val nodes = plans.flatMap(PlanAudit.flatten)
+    assert(!nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+      n.isInstanceOf[WindowExec]), plans.mkString("\n---\n"))
+    val shuffles = plans.map(p => PlanAudit.flatten(p).collect {
+      case e: ShuffleExchangeLike => e.outputPartitioning }.distinct)
+      .filter(_.nonEmpty)
+    assert(shuffles.length == 2, plans.mkString("\n---\n"))
+    shuffles.foreach { parts =>
+      assert(parts.length == 1)
+      parts.head match {
+        case HashPartitioning(Seq(a: Attribute), _) =>
+          assert(a.name == "__aid")
+        case other => fail(s"shuffle on $other")
+      }
+    }
   }
 
   /** The q180 layout: init on 80% of the fixture embeddings. */
@@ -87,25 +156,52 @@ class IvfTrainerSpec extends SparkSpec {
     state
   }
 
-  test("IndexLedger.absorb runs exactly 5 jobs, none of them a parquet " +
-    "footer read") {
+  test("IndexLedger.absorb runs exactly 4 jobs, none of them a parquet " +
+    "footer read: the centroid collect, the committed-id broadcast, and " +
+    "the code write's one-row-per-id shuffle map and write stages") {
     val state = q180State("ivf_absorb_jobs")
     val batch = tables.embeddings.filter(col("vec_id") % 10 >= 8)
     batch.inputFiles
     val jobs = jobsOf(IndexLedger.absorb(spark, state, batch))
-    assert(jobs.length == 5, s"IndexLedger.absorb ran: $jobs")
+    assert(jobs.length == 4, s"IndexLedger.absorb ran: $jobs")
     assertNoFooterJobs(jobs)
   }
 
-  test("one IndexLedger.topK call runs exactly 5 jobs, none of them a " +
-    "parquet footer read: the centroid and probed-cell broadcasts, the " +
-    "probe and heap exchanges, and the one-partition result") {
+  test("IndexLedger.absorb returns the committed part: its plan scans " +
+    "codes/part_<next> and encodes nothing, and its rows are the " +
+    "batch's assignment") {
+    val state = q180State("ivf_absorb_result")
+    val batch = tables.embeddings.filter(col("vec_id") % 10 >= 8)
+    val out = IndexLedger.absorb(spark, state, batch)
+    val got = out.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val plan = out.queryExecution.executedPlan
+    val scans = PlanAudit.flatten(plan).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.length == 1, plan.toString)
+    assert(scans.head.relation.location.rootPaths.map(_.getName) ==
+      Seq("part_00000002"), plan.toString)
+    assert(encodesIn(plan).isEmpty, plan.toString)
+    // the batch's assignment against the committed centroids, as the
+    // result was computed before it was read back
+    val v = batch.select(col("vec_id"),
+        Similarity.asDouble(col("embedding")).as("v"))
+      .filter(Similarity.dot(col("v"), col("v")) > 0.0)
+    val want = Similarity.ivfAssign(v, IndexLedger.centroids(spark, state),
+        "v")
+      .select("vec_id", "cell").orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(got.nonEmpty && got == want)
+  }
+
+  test("one IndexLedger.topK call runs exactly 4 jobs, none of them a " +
+    "parquet footer read: the centroid collect, the probed-cell " +
+    "broadcast, the heap exchange and the one-partition result") {
     val state = q180State("ivf_topk_jobs")
     val queries = tables.embeddings.filter(col("vec_id") < 10)
     queries.inputFiles
     val jobs = jobsOf(IndexLedger.topK(spark, state, queries,
       k = 10, nprobe = 8).collect())
-    assert(jobs.length == 5, s"IndexLedger.topK ran: $jobs")
+    assert(jobs.length == 4, s"IndexLedger.topK ran: $jobs")
     assertNoFooterJobs(jobs)
   }
 
@@ -116,9 +212,7 @@ class IvfTrainerSpec extends SparkSpec {
       tables.embeddings.filter(col("vec_id") < 10), k = 10, nprobe = 8)
     served.collect()
     val plan = served.queryExecution.executedPlan
-    val encodes = PlanAudit.flatten(plan).flatMap(_.expressions
-      .flatMap(_.collect { case e: graft.functions.Sq8Codes => e }))
-    assert(encodes.length == 1, plan.toString)
+    assert(encodesIn(plan).length == 1, plan.toString)
   }
 
   test("no MLlib clustering left in the program sources") {
