@@ -136,10 +136,7 @@ object Main {
           modelsDir = Option.when(p.build)(layout.models),
           targets = p.targetSites)
       if (p.score) {
-        val matrix = Ranker
-          .scoreMatrix(Ranker.scoreLong(cached, sites, models),
-            models.map(_.site))
-          .orderBy("id")
+        val matrix = Ranker.scoreMatrix(cached, sites, models).orderBy("id")
         Writers.csv(matrix, layout.predictions, p.singleFileOutput)
         matrix
       } else cached

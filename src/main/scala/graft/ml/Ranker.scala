@@ -2,10 +2,10 @@ package graft.ml
 
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.regression.{RandomForestRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Train/score stage: per-site RandomForest regression predicting a
   * site's popularity rank from every *other* site's features —
@@ -21,15 +21,15 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   *  - the `exists` leakage semantic is preserved exactly: the feature
   *    vector includes other sites' exists flags but excludes the whole
   *    target triple (Utils.scala:39-43);
-  *  - per-site failure isolation with an empty typed frame fallback
-  *    (ScorePredictor.scala:37-44) is kept;
+  *  - per-site failure isolation is kept: a site that cannot be scored
+  *    is all-null, as the reference's empty-frame fallback leaves it;
   *  - model saves and loads run on the fits' bounded 8-way fan-out
   *    (JobRunner.scala:15,51-54) instead of one site at a time
   *    (ScorePredictor.scala:26-34): each site's model is written by
   *    the thread that fit it;
   *  - the N-way outer-join score-matrix reduce (ScorePredictor.scala:47)
-  *    is replaced by union-then-pivot — one shuffle instead of N−1,
-  *    and the plan depth no longer grows with the site count. The
+  *    is replaced by one projection over the feature rows missing in
+  *    some modeled site — no join, union, pivot or shuffle. The
   *    join-chain form is kept for parity testing.
   */
 object Ranker {
@@ -137,63 +137,63 @@ object Ranker {
       }
     }.flatten
 
-  /** Score the missing (exists=0) rows of every modeled site; long form
-    * `(id, site, score)`. Sites with no missing rows contribute no rows;
-    * a failed site contributes the reference's empty-frame fallback. */
-  def scoreLong(
+  /** Score matrix `id × modeled sites` (sorted): the feature rows missing
+    * in some modeled site, each site's prediction where it is missing —
+    * one projection of per-site VectorAssembler + model columns. A site
+    * whose stages fail their schema check is an all-null column and adds
+    * no rows (the reference's empty-frame fallback). */
+  def scoreMatrix(
       features: DataFrame, sites: Seq[String],
       models: Seq[SiteModel]): DataFrame = {
-    val spark = features.sparkSession
-    val emptyFallback = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("id", StringType), StructField("site", StringType),
-        StructField("score", DoubleType))))
-    models.map { sm =>
-      try {
-        val missing = workData(features, sites, sm.site, exists = false)
-        sm.model.transform(missing)
-          .select(col("id"), lit(sm.site).as("site"),
-            col(sm.site).as("score"))
+    val planned = models.sortBy(_.site).map { case SiteModel(site, model, _) =>
+      site -> (try {
+        val assemble = new VectorAssembler()
+          .setInputCols(featureCols(sites, site)).setOutputCol(s"__f_$site")
+        val predict = model.copy(ParamMap.empty)
+          .setFeaturesCol(s"__f_$site").setPredictionCol(s"__score_$site")
+        predict.transformSchema(assemble.transformSchema(features.schema))
+        Some((features.col(s"exists_$site") === 0.0,
+          (df: DataFrame) => predict.transform(assemble.transform(df))))
       } catch {
         case e: Exception =>
-          System.err.println(s"[ranker] score ${sm.site} failed: ${e.getMessage}")
-          emptyFallback
-      }
-    }.reduceOption(_ unionByName _).getOrElse(emptyFallback)
-  }
-
-  /** Score matrix `id × sites` via union+pivot — the scale-path rewrite
-    * of the reference's outer-join reduce (one shuffle, flat plan). */
-  def scoreMatrix(scoreLongDf: DataFrame, sites: Seq[String]): DataFrame =
-    scoreLongDf.groupBy("id").pivot("site", sites.sorted)
-      .agg(first("score"))
-
-  /** The reference's literal left-deep full-outer-join chain
-    * (ScorePredictor.scala:47) — kept for parity testing against
-    * [[scoreMatrix]]. */
-  def scoreMatrixJoinChain(
-      scoreLongDf: DataFrame, sites: Seq[String]): DataFrame = {
-    val perSite = sites.sorted.map(s =>
-      scoreLongDf.filter(col("site") === s)
-        .select(col("id"), col("score").as(s)))
-    perSite.filter(!_.isEmpty).toList match {
-      case Nil => scoreLongDf.select("id").distinct()
-      case head :: tail =>
-        tail.foldLeft(head)((l, r) => l.join(r, Seq("id"), "full_outer"))
+          System.err.println(s"[ranker] score $site failed: ${e.getMessage}")
+          None
+      })
     }
+    val live = planned.flatMap(_._2)
+    val missingAny = live.map(_._1).reduceOption(_ || _).getOrElse(lit(false))
+    live.foldLeft(features.filter(missingAny))((df, s) => s._2(df))
+      .select(col("id") +: planned.map {
+        case (site, Some((missing, _))) =>
+          when(missing, col(s"__score_$site")).as(site)
+        case (site, None) => lit(null).cast("double").as(site)
+      }: _*)
   }
+
+  /** The reference's whole score stage (ScorePredictor.scala:22-47): per
+    * site, `model.transform` of its missing rows or an empty typed frame,
+    * then the left-deep full-outer-join chain on `id` — the parity
+    * reference for [[scoreMatrix]]. */
+  def scoreMatrixJoinChain(
+      features: DataFrame, sites: Seq[String],
+      models: Seq[SiteModel]): DataFrame =
+    models.sortBy(_.site).map { case SiteModel(site, model, _) =>
+      try model.transform(workData(features, sites, site, exists = false))
+        .select("id", site)
+      catch {
+        case _: Exception =>
+          features.select(col("id"), lit(null).cast("double").as(site)).limit(0)
+      }
+    }.reduceOption(_.join(_, Seq("id"), "full_outer"))
+      .getOrElse(features.select("id").limit(0))
 
   /** End-to-end pipeline on the events proxy domain: parse → rank →
-    * pivot → train → score-missing → score matrix. */
+    * feature pivot → train → score matrix of the missing cells. */
   def pipeline(spark: SparkSession, events: DataFrame): DataFrame = {
     val (fm, sites) = Features.featureMatrix(events)
     val cached = fm.cache()
-    try {
-      val models = train(cached, sites)
-      scoreMatrix(scoreLong(cached, sites, models), models.map(_.site))
-        .orderBy("id")
-    } finally { cached.unpersist(); () }
+    try scoreMatrix(cached, sites, train(cached, sites)).orderBy("id")
+    finally { cached.unpersist(); () }
   }
 
   /** Per-site holdout RMSE (the reference's logged quality signal,

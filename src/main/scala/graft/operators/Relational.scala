@@ -91,8 +91,8 @@ object Relational {
 
   /** Q06 — full-outer-join reduce chain + COALESCE fill (reference
     * J2/J3, ScorePredictor.scala:47). Kept as the literal join-chain for
-    * parity; see [[graft.ml.Scoring]] for the union+pivot rewrite that
-    * replaces an N-deep chain at scale. */
+    * parity; see [[graft.ml.Ranker.scoreMatrix]] for the one-projection
+    * form that replaces an N-deep chain at scale. */
   def q06(t: Tables): DataFrame = {
     def leg(eventType: String, alias: String): DataFrame =
       t.events.filter(col("event_type") === eventType)

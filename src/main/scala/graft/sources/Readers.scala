@@ -115,11 +115,11 @@ object Readers {
       .as[SitelinkPageviewsEntry]
   }
 
-  /** S5 — parquet load of previously persisted parsed data. */
+  /** S5 — persisted parsed data; the declared schema skips the footer job. */
   def parsedParquet(
       spark: SparkSession, path: String): Dataset[SitelinkPageviewsEntry] = {
     import spark.implicits._
-    spark.read.parquet(path).as[SitelinkPageviewsEntry]
+    spark.read.schema(rawDataSchema).parquet(path).as[SitelinkPageviewsEntry]
   }
 
   /** JSON-lines source (one object per line — the interchange format

@@ -9,6 +9,7 @@ class MlSpec extends SparkSpec {
   lazy val parsed = Features.parse(tables.events)
   lazy val sites = Features.siteList(parsed)
   lazy val fm = Features.pivotFeatures(Features.ranked(parsed), sites).cache()
+  lazy val models = Ranker.train(fm, sites)
 
   test("rank is in (0,1], max 1 per site, monotone in pageviews") {
     val r = Features.ranked(parsed)
@@ -45,31 +46,65 @@ class MlSpec extends SparkSpec {
   }
 
   test("train fits every site with a finite rmse below 0.5") {
-    val models = Ranker.train(fm, sites)
     assert(models.map(_.site).toSet == sites.toSet,
       s"trained=${models.map(_.site)}")
     models.foreach(m =>
       assert(!m.rmse.isNaN && m.rmse < 0.5, s"${m.site} rmse=${m.rmse}"))
   }
 
-  test("score matrix: union+pivot equals the reference join-chain") {
-    val models = Ranker.train(fm, sites)
-    val long = Ranker.scoreLong(fm, sites, models).cache()
-    val a = Ranker.scoreMatrix(long, sites)
-    val b = Ranker.scoreMatrixJoinChain(long, sites)
-    assert(a.columns.sorted.toSeq == b.columns.sorted.toSeq)
+  /** Equal as row multisets over the same column set: `exceptAll` both
+    * ways, with columns in sorted order on both sides. */
+  def sameRows(
+      a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean = {
     val aCanon = a.select(a.columns.sorted.map(col): _*)
     val bCanon = b.select(b.columns.sorted.map(col): _*)
-    assert(aCanon.exceptAll(bCanon).count() == 0
-      && bCanon.exceptAll(aCanon).count() == 0)
-    long.unpersist()
+    a.columns.sorted.sameElements(b.columns.sorted) &&
+      aCanon.exceptAll(bCanon).count() == 0 &&
+      bCanon.exceptAll(aCanon).count() == 0
+  }
+
+  test("score matrix: one projection equals the reference join-chain") {
+    val a = Ranker.scoreMatrix(fm, sites, models)
+    val b = Ranker.scoreMatrixJoinChain(fm, sites, models)
+    assert(a.columns.toSeq == "id" +: sites.sorted)
+    assert(sameRows(a, b))
   }
 
   test("predictions are within the label range (0,1]") {
-    val models = Ranker.train(fm, sites)
-    val long = Ranker.scoreLong(fm, sites, models)
-    assert(long.filter(col("score") < 0 || col("score") > 1).count() == 0)
-    assert(long.count() > 0, "no missing cells scored — proxy id grain wrong")
+    val m = Ranker.scoreMatrix(fm, sites, models)
+    val cells = m.select(explode(array(sites.map(col): _*)).as("score"))
+      .filter(col("score").isNotNull)
+    assert(cells.filter(col("score") < 0 || col("score") > 1).count() == 0)
+    assert(cells.count() > 0, "no missing cells scored — proxy id grain wrong")
+  }
+
+  test("score matrix with no models: column id only, no rows") {
+    val m = Ranker.scoreMatrix(fm, sites, Seq())
+    assert(m.columns.toSeq == Seq("id"))
+    assert(m.count() == 0)
+  }
+
+  test("score matrix: a modeled site with no missing rows is an all-null " +
+    "column, columns in sorted site order") {
+    val full = sites.sorted.last
+    val present = fm.filter(col(s"exists_$full") === 1.0)
+    val m = Ranker.scoreMatrix(present, sites, models.reverse)
+    assert(m.columns.toSeq == "id" +: sites.sorted)
+    assert(m.filter(col(full).isNotNull).count() == 0)
+    assert(m.count() > 0)
+    assert(sameRows(m, Ranker.scoreMatrixJoinChain(present, sites, models)))
+  }
+
+  test("score matrix: a model for a site with no exists column is an " +
+    "all-null column and adds no rows") {
+    val ghost = Ranker.SiteModel("aaa_nosuchwiki", models.head.model, Double.NaN)
+    val m = Ranker.scoreMatrix(fm, sites, models :+ ghost)
+    assert(m.columns.toSeq == "id" +: (ghost.site +: sites.sorted))
+    assert(m.schema(ghost.site).dataType == org.apache.spark.sql.types.DoubleType)
+    assert(m.filter(col(ghost.site).isNotNull).count() == 0)
+    assert(sameRows(m.drop(ghost.site), Ranker.scoreMatrix(fm, sites, models)))
+    assert(sameRows(m, Ranker.scoreMatrixJoinChain(fm, sites, models :+ ghost)))
   }
 
   test("model save/load round-trip predicts identically") {

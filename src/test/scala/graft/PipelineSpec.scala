@@ -113,9 +113,28 @@ class PipelineSpec extends SparkSpec {
       modelsDir = Some(only(s"$dir/out_jobs_b", "_models")),
       outputDir = s"$dir/out_jobs_s")))
     // the per-site model writes and loads add no job: they move on the
-    // fits' fan-out, not out of it
-    assert((build.length, score.length) == ((71, 42)),
+    // fits' fan-out, not out of it. Score is 30 model-load jobs, the
+    // feature read's footer job, and 4 jobs of the id-ordered csv write:
+    // the score matrix itself is one projection of the cached features,
+    // with no union-branch or pivot stage of its own
+    assert((build.length, score.length) == ((71, 35)),
       (build ++ score).map(_.name).mkString(", "))
+  }
+
+  test("an extract-only run reads persisted parsed data without a " +
+    "footer-inference job") {
+    Main.run(spark, Main.Params(
+      parse = true, sitelinks = Some(slPath), pagecounts = Some(pcPath),
+      outputDir = s"$dir/out_pq_p"))
+    val parsedPath = new java.io.File(s"$dir/out_pq_p").listFiles()
+      .find(_.getName.endsWith("_parsedData")).get.getPath
+    val jobs = jobsOf(Main.run(spark, Main.Params(
+      extract = true, parsedData = Some(parsedPath),
+      outputDir = s"$dir/out_pq_x")))
+    assert(jobs.nonEmpty)
+    val inferred = jobs.filter(j =>
+      !j.inQuery && j.name.startsWith("parquet at Readers.scala"))
+    assert(inferred.isEmpty, jobs.mkString(", "))
   }
 
   test("--build-models sources --feature-data without a parse stage") {
