@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 /** Bench harness: runs the declared oracle queries (q*) on
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -21,6 +23,9 @@ package graft
   * Output: every run writes target/bench.json; pass `--anchor` to
   * also write the tracked repo-root bench_latest.json (the committed
   * anchor) — routine and filtered runs can no longer clobber it.
+  * Every run goes through [[Trace]]: the file adds each query's
+  * `layers` for its canonical (fastest) run, whose job list and
+  * executed plans go to target/trace/<query>.txt.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -37,24 +42,30 @@ object Bench {
       } }
       .toSeq.sortBy(_._1)
 
-    def run1(name: String): Either[String, Double] = {
-      val t0 = System.nanoTime()
+    // each query's fastest measured run (its jobs and plans: target/trace)
+    val fastest = scala.collection.mutable.Map.empty[String, Trace.Layers]
+    Files.createDirectories(Paths.get("target/trace"))
+    def run1(name: String): Either[String, Double] =
       try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
+        val t = Trace.of(spark)(SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save())
+        if (fastest.get(name).forall(_.wallS > t.wallS)) {
+          fastest(name) = t.layers
+          Files.writeString(Paths.get(s"target/trace/$name.txt"), t.report)
+        }
+        Right(t.wallS)
       } catch { case e: Throwable =>
         val line = BenchGate.errorLine(e)
         System.err.println(s"[bench] $name FAILED: $line")
         Left(line)
       }
-    }
 
     // full unmeasured warmup pass: every query touches its own codegen
     // paths, JIT tiers, and parquet footer caches — warming only one
     // query leaves the text/array/md5-heavy document paths paying
     // first-run compilation inside measured time
     benched.foreach { case (name, _) => run1(name) }
+    fastest.clear()
     // two measured passes, report the per-query MIN: a single pass is
     // exposed to one-off GC/JIT pauses that can multiply a sub-second
     // query several-fold and trip a relative gate on pure noise; the
@@ -64,19 +75,10 @@ object Bench {
       benched.map { case (name, _) => name -> run1(name) }.toMap
     val (p1, p2) = (timedPass(), timedPass())
     val results: Seq[(String, Double)] = benched.flatMap { case (name, _) =>
-      (p1(name), p2(name)) match {
-        case (Right(a), Right(b)) => Some(name -> math.min(a, b))
-        case (Right(a), _)        => Some(name -> a)
-        case (_, Right(b))        => Some(name -> b)
-        case _                    => None
-      }
+      Seq(p1(name), p2(name)).collect { case Right(t) => t }.minOption.map(name -> _)
     }
-    val errors: Seq[(String, String)] = benched.flatMap { case (name, _) =>
-      (p1(name), p2(name)) match {
-        case (Left(e), Left(_)) => Some(name -> e)
-        case _                  => None
-      }
-    }
+    val errors: Seq[(String, String)] = benched.collect { case (name, _)
+      if p1(name).isLeft && p2(name).isLeft => name -> p1(name).swap.getOrElse("") }
 
     // sweep-outlier re-measure: read the machine-readable gate rows
     // (baseline_rows.json — see BenchGate for why NOT the markdown)
@@ -96,8 +98,7 @@ object Bench {
     // never succeeded; it keeps its sweep value untagged
     val focused: Seq[(String, Double)] =
       BenchGate.flagged(results, baseline).flatMap { name =>
-        val runs = Seq(run1(name), run1(name)).collect { case Right(t) => t }
-        if (runs.nonEmpty) Some(name -> runs.min) else None
+        Seq(run1(name), run1(name)).collect { case Right(t) => t }.minOption.map(name -> _)
       }
     val focusedMap = focused.toMap
 
@@ -160,13 +161,13 @@ object Bench {
     // ran last (round 13 shipped the q192=19.64s sweep artifact that
     // way). target/ is wiped by clean builds, so anchor runs still
     // need the tracked copy; routine runs must not touch it.
-    val bytes = json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val out = java.nio.file.Paths.get("target/bench.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out, bytes)
-    if (args.contains("--anchor"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_latest.json"), bytes)
+    // the file adds each canonical run's layers; stdout keeps the line
+    val layers = canonical.map { case (k, _) => "\"" + k + "\":" + fastest(k).json }
+      .mkString("{", ",", "}")
+    val bytes = (json.stripSuffix("}") + s""","layers":$layers}""")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    Files.write(Paths.get("target/bench.json"), bytes)
+    if (args.contains("--anchor")) Files.write(Paths.get("bench_latest.json"), bytes)
     println(json)
     val compact = numOrdered.map { case (k, v) =>
       "\"" + k.split('_').head + f"\":$v%.3f" } ++

@@ -420,7 +420,7 @@ object Relational {
     * SPECIALIZES each copy — the cumulative path's `val IS NOT NULL`
     * pushes through the aggregate into its own scan — so runtime
     * exchange reuse never fires and every reference re-scanned and
-    * re-aggregated the FULL INPUT (JobCountProbe, round 16: q99 read
+    * re-aggregated the FULL INPUT (job task metrics, round 16: q99 read
     * 10× |events|, q70 5×, q69's gate re-ran its whole tokenize+score
     * upstream per reference). One checkpoint job pins the
     * |distinct (group, value)|-row frame; every consumer then reads

@@ -136,9 +136,6 @@ object Readers {
       .option("mode", "DROPMALFORMED")
       .json(path)
 
-  /** ORC source — columnar alternative to parquet (some warehouses are
-    * ORC-native); predicate pushdown and column pruning apply the same
-    * way. */
   /** Schema-evolution parquet read: union the footers of every file in
     * the directory (mergeSchema) so a table whose writers added columns
     * over time reads as the superset schema, old files null-filling
@@ -149,6 +146,9 @@ object Readers {
   def evolvedParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
+  /** ORC source — columnar alternative to parquet (some warehouses are
+    * ORC-native); predicate pushdown and column pruning apply the same
+    * way. */
   def orc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 

@@ -3,16 +3,14 @@ package graft
 import graft.operators.Similarity
 import graft.plans.PlanAudit
 import graft.sources.IndexLedger
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one IVF coarse-quantizer trainer ([[Similarity.ivfCentroids]]):
   * a deterministic sample of at most 256·nlist rows collected in one
@@ -70,30 +68,10 @@ class IvfTrainerSpec extends SparkSpec {
     * frames, so every read declares their schema. A footer-inference
     * job runs while the read is analyzed, outside any SQL execution;
     * the ledger's parquet WRITES carry the same name inside one. */
-  private def assertNoFooterJobs(jobs: Seq[SparkSpec.Job]): Unit = {
+  private def assertNoFooterJobs(jobs: Seq[Trace.Job]): Unit = {
     val footer = jobs.filter(j =>
       !j.inQuery && j.name.startsWith("parquet at IndexLedger.scala"))
     assert(footer.isEmpty, footer.mkString(", "))
-  }
-
-  /** The executed plans of the SQL executions `body` runs, drained
-    * like [[jobsOf]]. */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(
-          funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(
-          funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      body
-      ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    plans.toArray(new Array[SparkPlan](0)).toSeq
   }
 
   private def encodesIn(plan: SparkPlan): Seq[graft.functions.Sq8Codes] =
@@ -106,7 +84,7 @@ class IvfTrainerSpec extends SparkSpec {
     val emb = tables.embeddings
     emb.inputFiles // resolve the file listing outside the count
     val state = freshState("ivf_jobs")
-    val jobs = jobsOf(IndexLedger.init(spark, state, emb))
+    val jobs = Trace.of(spark)(IndexLedger.init(spark, state, emb)).jobs
     assert(jobs.length == 5, s"IndexLedger.init ran: $jobs")
     assertNoFooterJobs(jobs)
   }
@@ -116,7 +94,7 @@ class IvfTrainerSpec extends SparkSpec {
     val emb = tables.embeddings
     emb.inputFiles
     val state = freshState("ivf_sample_encode")
-    val plans = plansOf(IndexLedger.init(spark, state, emb))
+    val plans = Trace.of(spark)(IndexLedger.init(spark, state, emb)).plans.map(_.plan)
     val sample = plans.filter(p => PlanAudit.flatten(p).exists(
       _.isInstanceOf[org.apache.spark.sql.execution.TakeOrderedAndProjectExec]))
     assert(sample.length == 1, plans.mkString("\n---\n"))
@@ -126,11 +104,11 @@ class IvfTrainerSpec extends SparkSpec {
   test("IndexLedger.init and absorb assign without a centroid cross " +
     "join or a window: each one's only shuffle is its one-row-per-id " +
     "cut, hash-partitioned on the id") {
-    val plans = plansOf {
+    val plans = Trace.of(spark) {
       val state = q180State("ivf_one_exchange")
       IndexLedger.absorb(spark, state,
         tables.embeddings.filter(col("vec_id") % 10 >= 8))
-    }
+    }.plans.map(_.plan)
     val nodes = plans.flatMap(PlanAudit.flatten)
     assert(!nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
       n.isInstanceOf[WindowExec]), plans.mkString("\n---\n"))
@@ -162,7 +140,7 @@ class IvfTrainerSpec extends SparkSpec {
     val state = q180State("ivf_absorb_jobs")
     val batch = tables.embeddings.filter(col("vec_id") % 10 >= 8)
     batch.inputFiles
-    val jobs = jobsOf(IndexLedger.absorb(spark, state, batch))
+    val jobs = Trace.of(spark)(IndexLedger.absorb(spark, state, batch)).jobs
     assert(jobs.length == 4, s"IndexLedger.absorb ran: $jobs")
     assertNoFooterJobs(jobs)
   }
@@ -199,8 +177,8 @@ class IvfTrainerSpec extends SparkSpec {
     val state = q180State("ivf_topk_jobs")
     val queries = tables.embeddings.filter(col("vec_id") < 10)
     queries.inputFiles
-    val jobs = jobsOf(IndexLedger.topK(spark, state, queries,
-      k = 10, nprobe = 8).collect())
+    val jobs = Trace.of(spark)(IndexLedger.topK(spark, state, queries,
+      k = 10, nprobe = 8).collect()).jobs
     assert(jobs.length == 4, s"IndexLedger.topK ran: $jobs")
     assertNoFooterJobs(jobs)
   }

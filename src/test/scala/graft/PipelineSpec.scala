@@ -105,13 +105,13 @@ class PipelineSpec extends SparkSpec {
       new java.io.File(out).listFiles()
         .find(_.getName.endsWith(suffix)).get.getPath
     val fmPath = only(s"$dir/out_jobs_x", "_featureData")
-    val build = jobsOf(Main.run(spark, Main.Params(
+    val build = Trace.of(spark)(Main.run(spark, Main.Params(
       build = true, featureData = Some(fmPath),
-      outputDir = s"$dir/out_jobs_b")))
-    val score = jobsOf(Main.run(spark, Main.Params(
+      outputDir = s"$dir/out_jobs_b"))).jobs
+    val score = Trace.of(spark)(Main.run(spark, Main.Params(
       score = true, featureData = Some(fmPath),
       modelsDir = Some(only(s"$dir/out_jobs_b", "_models")),
-      outputDir = s"$dir/out_jobs_s")))
+      outputDir = s"$dir/out_jobs_s"))).jobs
     // the per-site model writes and loads add no job: they move on the
     // fits' fan-out, not out of it. Score is 30 model-load jobs, the
     // feature read's footer job, and 4 jobs of the id-ordered csv write:
@@ -128,9 +128,9 @@ class PipelineSpec extends SparkSpec {
       outputDir = s"$dir/out_pq_p"))
     val parsedPath = new java.io.File(s"$dir/out_pq_p").listFiles()
       .find(_.getName.endsWith("_parsedData")).get.getPath
-    val jobs = jobsOf(Main.run(spark, Main.Params(
+    val jobs = Trace.of(spark)(Main.run(spark, Main.Params(
       extract = true, parsedData = Some(parsedPath),
-      outputDir = s"$dir/out_pq_x")))
+      outputDir = s"$dir/out_pq_x"))).jobs
     assert(jobs.nonEmpty)
     val inferred = jobs.filter(j =>
       !j.inQuery && j.name.startsWith("parquet at Readers.scala"))

@@ -5,6 +5,10 @@ machine-readable gate file the Bench/StageBench gates actually read.
 
 Usage: baseline_table.py <bench.json> [--json-out baseline_rows.json]
 
+When the input carries graft.Bench's per-query `layers`, it also prints
+the sweep's split (total planning, job union, driver gap and task time)
+and the 20 queries with the largest driver gap.
+
 With --json-out, the target file's "queries" map is REPLACED by this
 bench run's per-query numbers (other keys, e.g. stage_budgets, are
 preserved). Re-baselines must go through this tool so the markdown
@@ -29,6 +33,29 @@ for i in range(half):
     print(l + r)
 print()
 print(f"total: {d['value']:.1f} s over {len(q)} queries")
+
+# the sweep's split, from the per-query layers graft.Bench writes to
+# target/bench.json (wall = plan + job union + driver gap per query)
+layers = d.get("layers", {})
+if layers:
+    def total(key):
+        return sum(v[key] for v in layers.values())
+    print()
+    print("| wall_s | plan_s | job union_s | driver_gap_s | task_s | jobs |")
+    print("|---|---|---|---|---|---|")
+    print(f"| {total('wall_s'):.1f} | {total('plan_s'):.1f} "
+          f"| {total('union_s'):.1f} | {total('driver_gap_s'):.1f} "
+          f"| {total('task_s'):.1f} | {total('jobs'):.0f} |")
+    print()
+    print("top 20 by driver gap:")
+    print()
+    print("| query | wall_s | plan_s | driver_gap_s | task_s | jobs | stages |")
+    print("|---|---|---|---|---|---|---|")
+    for k, v in sorted(layers.items(),
+                       key=lambda kv: -kv[1]["driver_gap_s"])[:20]:
+        print(f"| {k} | {v['wall_s']:.2f} | {v['plan_s']:.2f} "
+              f"| {v['driver_gap_s']:.2f} | {v['task_s']:.2f} "
+              f"| {v['jobs']} | {v['stages']} |")
 
 if "--json-out" in sys.argv:
     path = sys.argv[sys.argv.index("--json-out") + 1]
