@@ -24,8 +24,9 @@ import java.nio.file.{Files, Paths}
   * also write the tracked repo-root bench_latest.json (the committed
   * anchor) — routine and filtered runs can no longer clobber it.
   * Every run goes through [[Trace]]: the file adds each query's
-  * `layers` for its canonical (fastest) run, whose job list and
-  * executed plans go to target/trace/<query>.txt.
+  * `layers` for its canonical (fastest) run (with a `by_stage` roll-up
+  * where its jobs carry [[Trace.stage]] labels, as q177/q183's do),
+  * whose job list and executed plans go to target/trace/<query>.txt.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

@@ -78,6 +78,64 @@ object BenchGate {
       case (n, v) if baseline.get(n).exists(b => v > factor * b) => n
     }
 
+  /** The [[StageBench]] `--check` tripwire, extracted so BenchGateSpec
+    * can assert it on planted values: one FAIL line per breach of
+    * `measured` (pipeline, stage, seconds) rows against `budgets`
+    * (pipeline -> stage -> seconds), empty when nothing trips. Only
+    * pipelines with a budget entry are judged. */
+  def stageFailures(measured: Seq[(String, String, Double)],
+      budgets: Map[String, Map[String, Double]]): Seq[String] = {
+    // Three clauses, ALL required to fail a budgeted stage:
+    //  1. >1.5x its budget row (the stated contract);
+    //  2. >0.5 s absolute move — the accretion this tripwire
+    //     exists for is seconds-scale (q177 crept 10.5→14.4 s),
+    //     while a 0.2 s stage routinely doubles on scheduler
+    //     jitter;
+    //  3. its SHARE of the pipeline grew >1.25x vs its budget
+    //     share — the weather-immunity clause: the round-13 A/B
+    //     proved ambient 1.37–1.54x UNIFORM inflations on a
+    //     bit-identical tree, and a uniform inflation moves every
+    //     absolute row while leaving shares fixed; a genuine
+    //     stage accretion is precisely a share move. Without
+    //     this clause the gate fires on weather every slow
+    //     session and trains everyone to ignore it.
+    val mTotal = measured.groupBy(_._1)
+      .map { case (p, rs) => p -> rs.map(_._3).sum }
+    val bTotal = budgets.map { case (p, b) => p -> b.values.sum }
+    val perStage = measured.flatMap { case (pipe, st, sec) =>
+      budgets.get(pipe).flatMap { b =>
+        b.get(st) match {
+          case Some(bud) =>
+            val share = sec / math.max(mTotal(pipe), 1e-9)
+            val budShare = bud / math.max(bTotal(pipe), 1e-9)
+            if (sec > 1.5 * bud && sec > bud + 0.5 &&
+                share > 1.25 * budShare)
+              Some(
+                f"""{"stage_check":"FAIL","pipeline":"$pipe","stage":"$st","sec":$sec%.3f,"budget":$bud%.3f,"ratio":${sec / bud}%.2f,"share":$share%.3f,"budget_share":$budShare%.3f}""")
+            else None
+          case None if sec > 2.0 => Some(
+            f"""{"stage_check":"FAIL","pipeline":"$pipe","stage":"$st","sec":$sec%.3f,"budget":null,"reason":"unbudgeted new stage > 2 s"}""")
+          case _ => None
+        }
+      }
+    }
+    // Fourth clause — pipeline-TOTAL tripwire (round-14 advice):
+    // the share clause above cannot fire for a stage whose budget
+    // share exceeds 0.8, and a correlated regression from a shared
+    // feeder that inflates every stage proportionally keeps shares
+    // fixed and reads as weather. A total >1.5x its budget sum AND
+    // >2 s over it is caught regardless of how the excess is
+    // distributed (2 s absolute slack: the round-13 ambient band
+    // multiplies sub-second pipelines without meaning anything).
+    val totalFails = bTotal.toSeq.flatMap { case (pipe, budSum) =>
+      mTotal.get(pipe).filter(t =>
+          t > 1.5 * budSum && t > budSum + 2.0)
+        .map(t =>
+          f"""{"stage_check":"FAIL","pipeline":"$pipe","stage":"__TOTAL__","sec":$t%.3f,"budget":$budSum%.3f,"ratio":${t / budSum}%.2f,"reason":"pipeline total over budget sum"}""")
+    }
+    perStage ++ totalFails
+  }
+
   /** Canonical per-query estimator (round-16 measurement-bug fix,
     * extracted so BenchGateSpec can assert it): the MIN over every
     * successful measurement of the run — the sweep min-of-two and,

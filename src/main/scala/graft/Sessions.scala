@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - FAIR scheduling so the per-site ML fan-out's concurrent jobs
   *    share executors instead of convoying (reference used FIFO with 8
   *    driver threads, JobRunner.scala:15,51-54);
-  *  - the engine's SQL functions, planner strategy and optimizer rule
-  *    installed via GraftExtensions.
+  *  - the engine's SQL functions and planner strategy installed via
+  *    GraftExtensions.
   *
   * Every entry point — the CLI, the harness mains, the test suite and
   * the benchmark — gets its session here; nothing else calls

@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Focused per-stage timing for the three composed pipelines
-  * (VERDICT r12 item 2): q177/q183 report the [[StageTimer]] wall
-  * clocks their stages record while the REAL pipeline runs; q224 is
+  * (VERDICT r12 item 2): q177/q183 report the summed wall clock of
+  * each [[Trace.stage]] block the REAL pipeline runs under one
+  * [[Trace.of]] (a stage name repeated across increments sums); q224 is
   * one lazy composed plan (no driver-side stage boundaries to clock),
   * so its breakdown materializes each ingredient operator separately
   * over the SAME planted frame and then the composed manifest. Since
@@ -50,7 +51,6 @@ object StageBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-stagebench")
-    StageTimer.enable() // recording is off by default (see StageTimer)
     val t = new Tables(spark, sfDir)
     // (pipeline, stage, sec) rows accumulated for --check
     val measured =
@@ -63,18 +63,16 @@ object StageBench {
       f"""{"stage_bench":"$name","total":$total%.3f,"unit":"sec","stages":$body,"sf":"$sfDir"}"""
     }
 
-    /** One measured run: reset the timer, run, return (total, stage
-      * timings). Stages repeating across increments (q177 runs two)
-      * are summed per name, keeping first-appearance order. */
+    /** `df` materialized through the noop sink under one trace. */
+    def noop(df: => DataFrame): Trace.Traced[Unit] =
+      Trace.of(spark)(df.write.format("noop").mode("overwrite").save())
+
+    /** One measured run: (total, stage walls). Stages repeating across
+      * increments (q177 runs two) are summed per name, keeping
+      * first-appearance order. */
     def once(body: => DataFrame): (Double, Seq[(String, Double)]) = {
-      StageTimer.reset()
-      val t0 = System.nanoTime()
-      body.write.format("noop").mode("overwrite").save()
-      val total = (System.nanoTime() - t0) / 1e9
-      val raw = StageTimer.timings
-      val order = raw.map(_._1).distinct
-      (total, order.map(k =>
-        k -> raw.filter(_._1 == k).map(_._2).sum))
+      val r = noop(body)
+      (r.wallS, r.byStage.map(s => s.name -> s.wallS))
     }
 
     /** Min-of-two on the TOTAL (the Bench estimator); the PRINTED
@@ -116,13 +114,8 @@ object StageBench {
         docs.filter(pmod(col("doc_id"), lit(dupMod)) === 0)
           .withColumn("doc_id", col("doc_id") + idOffset))
       def stage(name: String)(df: => DataFrame): (String, Double) = {
-        df.write.format("noop").mode("overwrite").save() // warmup
-        val runs = Seq.fill(3) {
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        name -> runs.min
+        noop(df) // warmup
+        name -> Seq.fill(3)(noop(df).wallS).min
       }
       val stages = Seq(
         stage("blocklist")(
@@ -139,12 +132,8 @@ object StageBench {
           operators.TextAnalysis.qualityGate(planted)))
       stages.foreach { case (s, v) => measured += (("q224", s, v)) }
       // composed manifest, min-of-two (already warm from the stages)
-      val totals = Seq.fill(2) {
-        val t0 = System.nanoTime()
-        operators.Curation.curationManifest(docs)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val totals = Seq.fill(2)(
+        noop(operators.Curation.curationManifest(docs)).wallS)
       println(jline("q224", totals.min, stages))
 
       // fixed-size-benchmark decontamination leg: hold the bench
@@ -174,55 +163,7 @@ object StageBench {
         println(s"""{"stage_check":"SKIP","reason":"${
           if (!atBaselineSf) "non-sf0.1 sfDir" else "no stage_budgets"}"}""")
       } else {
-        // Three clauses, ALL required to fail a budgeted stage:
-        //  1. >1.5x its budget row (the stated contract);
-        //  2. >0.5 s absolute move — the accretion this tripwire
-        //     exists for is seconds-scale (q177 crept 10.5→14.4 s),
-        //     while a 0.2 s stage routinely doubles on scheduler
-        //     jitter;
-        //  3. its SHARE of the pipeline grew >1.25x vs its budget
-        //     share — the weather-immunity clause: the round-13 A/B
-        //     proved ambient 1.37–1.54x UNIFORM inflations on a
-        //     bit-identical tree, and a uniform inflation moves every
-        //     absolute row while leaving shares fixed; a genuine
-        //     stage accretion is precisely a share move. Without
-        //     this clause the gate fires on weather every slow
-        //     session and trains everyone to ignore it.
-        val mTotal = measured.groupBy(_._1)
-          .map { case (p, rs) => p -> rs.map(_._3).sum }
-        val bTotal = budgets.map { case (p, b) => p -> b.values.sum }
-        val perStage = measured.toSeq.flatMap { case (pipe, st, sec) =>
-          budgets.get(pipe).flatMap { b =>
-            b.get(st) match {
-              case Some(bud) =>
-                val share = sec / math.max(mTotal(pipe), 1e-9)
-                val budShare = bud / math.max(bTotal(pipe), 1e-9)
-                if (sec > 1.5 * bud && sec > bud + 0.5 &&
-                    share > 1.25 * budShare)
-                  Some(
-                    f"""{"stage_check":"FAIL","pipeline":"$pipe","stage":"$st","sec":$sec%.3f,"budget":$bud%.3f,"ratio":${sec / bud}%.2f,"share":$share%.3f,"budget_share":$budShare%.3f}""")
-                else None
-              case None if sec > 2.0 => Some(
-                f"""{"stage_check":"FAIL","pipeline":"$pipe","stage":"$st","sec":$sec%.3f,"budget":null,"reason":"unbudgeted new stage > 2 s"}""")
-              case _ => None
-            }
-          }
-        }
-        // Fourth clause — pipeline-TOTAL tripwire (round-14 advice):
-        // the share clause above cannot fire for a stage whose budget
-        // share exceeds 0.8, and a correlated regression from a shared
-        // feeder that inflates every stage proportionally keeps shares
-        // fixed and reads as weather. A total >1.5x its budget sum AND
-        // >2 s over it is caught regardless of how the excess is
-        // distributed (2 s absolute slack: the round-13 ambient band
-        // multiplies sub-second pipelines without meaning anything).
-        val totalFails = bTotal.toSeq.flatMap { case (pipe, budSum) =>
-          mTotal.get(pipe).filter(t =>
-              t > 1.5 * budSum && t > budSum + 2.0)
-            .map(t =>
-              f"""{"stage_check":"FAIL","pipeline":"$pipe","stage":"__TOTAL__","sec":$t%.3f,"budget":$budSum%.3f,"ratio":${t / budSum}%.2f,"reason":"pipeline total over budget sum"}""")
-        }
-        val failures = perStage ++ totalFails
+        val failures = BenchGate.stageFailures(measured.toSeq, budgets)
         failures.foreach(println)
         if (failures.isEmpty)
           println(s"""{"stage_check":"OK","n_stages":${measured.size}}""")

@@ -15,19 +15,19 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * every session by [[graft.Sessions.builder]] (or, outside graft's
   * entry points, `spark.sql.extensions=graft.plans.GraftExtensions`).
   *
-  * Custom rules: exactly one, [[IntervalJoinRewrite]] — the only place
-  * built-in Catalyst genuinely mis-plans a reference-relevant shape
-  * (equi-keyless interval joins become BroadcastNestedLoopJoin).
-  * Everything else maps to built-in operators whose optimizer rules
-  * (pushdown, pruning, join selection, AQE) already produce the plans
-  * we want (SURVEY §4.2/§7.3) — plan-shape evidence in BASELINE.md.
+  * Custom optimizer rules: none. Every shape maps to built-in
+  * operators whose optimizer rules (pushdown, pruning, join selection,
+  * AQE) already produce the plans we want (SURVEY §4.2/§7.3) —
+  * plan-shape evidence in BASELINE.md. Interval joins are bucketed by
+  * hand where they are large ([[graft.operators.RangeJoin]]); the one
+  * declared query a theta-join rewrite fired on (q233, a 5-row
+  * broadcast) ran no faster with it (plans/r17/interval_join_rule_ab.md).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     GraftExtensions.tableFunctions.foreach(ext.injectTableFunction)
-    ext.injectOptimizerRule(_ => IntervalJoinRewrite)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }
 }

@@ -122,7 +122,7 @@ object CorpusIncrement {
     Ledger.requireFresh(root)
     // same one-materialization discipline as increment(): dedup,
     // minhash, and ref_counts all consume the scrubbed corpus
-    val scrubbed = graft.StageTimer.timed("init/scrub") {
+    val scrubbed = graft.Trace.stage(spark, "init/scrub") {
       scrub(corpus).localCheckpoint(true)
     }
     // the four sub-states are INDEPENDENT (separate roots, all fed by
@@ -136,16 +136,16 @@ object CorpusIncrement {
     // every later increment compares against without touching corpus
     // text again.
     graft.Overlap.all(
-      () => graft.StageTimer.timed("init/dedup") {
+      () => graft.Trace.stage(spark, "init/dedup") {
         DedupLedger.init(spark, dedupState(root), scrubbed, prefixTokens)
       },
-      () => graft.StageTimer.timed("init/minhash") {
+      () => graft.Trace.stage(spark, "init/minhash") {
         MinhashLedger.init(spark, minhashState(root), scrubbed, k)
       },
-      () => graft.StageTimer.timed("init/sketch") {
+      () => graft.Trace.stage(spark, "init/sketch") {
         SketchLedger.init(spark, sketchState(root))
       },
-      () => graft.StageTimer.timed("init/ref_counts") {
+      () => graft.Trace.stage(spark, "init/ref_counts") {
         scrubbed.groupBy("source").agg(count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(refCountsDir(root))
       })
@@ -181,14 +181,14 @@ object CorpusIncrement {
     // an increment stages its scrubbed batch, it never re-reads the
     // crawl three times. Recovery contract unchanged (the checkpoint
     // is execution state, not a commit point; a replay re-scrubs).
-    val scrubbed = graft.StageTimer.timed("inc/scrub") {
+    val scrubbed = graft.Trace.stage(spark, "inc/scrub") {
       scrub(batch).localCheckpoint(true)
     }
 
     // stage 2 — exact dedup: the ledger sink's own marker makes a
     // crash replay of this stage a no-op; its kept rows are durable.
     // (stage-1 scan+scrub cost sits in inc/scrub above, paid once)
-    graft.StageTimer.timed("inc/exact") {
+    graft.Trace.stage(spark, "inc/exact") {
       DedupLedger.absorbSink(
         spark, dedupState(root), exactOut(root), prefixTokens)(
         scrubbed, incrementId)
@@ -201,7 +201,7 @@ object CorpusIncrement {
     // stage 3 — near-dup: q170 flags vs ledger ∪ own batch; drop every
     // doc whose smallest partner precedes it (ledger partners always
     // do for id-ordered increments; in-batch keep-first otherwise)
-    graft.StageTimer.timed("inc/near") {
+    graft.Trace.stage(spark, "inc/near") {
       MinhashLedger.absorbSink(
         spark, minhashState(root), nearOut(root), k, bands,
         minEstJaccard)(survivors, incrementId)
@@ -223,7 +223,7 @@ object CorpusIncrement {
     // whole scrub → dedup-join → gate lineage re-evaluates for the
     // histogram (the GlobalRank.cumSum lesson; measured +1.5 s per
     // q177 at sf0.1 before this truncation)
-    val gatedFull = graft.StageTimer.timed("inc/gate") {
+    val gatedFull = graft.Trace.stage(spark, "inc/gate") {
       nearKept
         .withColumn("n_tokens", size(toks).cast("long"))
         .withColumn("sw_ratio",
@@ -253,11 +253,11 @@ object CorpusIncrement {
     // batch's text feeds monitoring, and it is the batch scan the
     // increment already pays — never a corpus rescan
     graft.Overlap.all(
-      () => graft.StageTimer.timed("inc/kept_write") {
+      () => graft.Trace.stage(spark, "inc/kept_write") {
         gated.write.mode("overwrite")
           .parquet(keptDir(root, partOf(incrementId)))
       },
-      () => graft.StageTimer.timed("inc/hist") {
+      () => graft.Trace.stage(spark, "inc/hist") {
         gatedFull
           .select(explode(toks).as("tok"))
           .filter(length(col("tok")) > 0)
@@ -285,18 +285,18 @@ object CorpusIncrement {
     val statsSlot = new java.util.concurrent.atomic.AtomicReference[
       Map[String, Map[String, Long]]]
     graft.Overlap.all(
-      () => graft.StageTimer.timed("inc/sketch") {
+      () => graft.Trace.stage(spark, "inc/sketch") {
         SketchLedger.absorbSink(spark, sketchState(root))(
           keptPart.select(lit("n_tokens").as("event_type"),
             to_timestamp(incrementDay(incrementId)).as("ts"),
             col("n_tokens").cast("double").as("value")),
           incrementId)
       },
-      () => graft.StageTimer.timed("inc/monitor") {
+      () => graft.Trace.stage(spark, "inc/monitor") {
         statsSlot.set(
           monitorStats(spark, root, m, incrementId, keptPart))
       })
-    graft.StageTimer.timed("inc/monitor") {
+    graft.Trace.stage(spark, "inc/monitor") {
       writeMonitor(spark, root, incrementId, statsSlot.get(),
         ksAlarm, psiAlarm, jsdAlarm)
     }
@@ -631,7 +631,7 @@ object CorpusIncrement {
       return spark.read.parquet(out).orderBy("doc_id")
 
     // mixture selection: |budget| rows of kept-ledger metadata
-    val sel = graft.StageTimer.timed("shards/mixture") {
+    val sel = graft.Trace.stage(spark, "shards/mixture") {
       mixture(spark, root, budget)
         .select("doc_id", "lang", "source")
         .localCheckpoint(true)
@@ -657,17 +657,17 @@ object CorpusIncrement {
     val shSlot =
       new java.util.concurrent.atomic.AtomicReference[DataFrame]
     graft.Overlap.all(
-      () => graft.StageTimer.timed("shards/bpe_train") {
+      () => graft.Trace.stage(spark, "shards/bpe_train") {
         mergesSlot.set(committedMerges(spark, root, selText, m.version,
           numMerges, selectionTag = s"budget=$budget"))
       },
-      () => graft.StageTimer.timed("shards/shuffle") {
+      () => graft.Trace.stage(spark, "shards/shuffle") {
         shSlot.set(TextAnalysis.shuffleShards(selText, nShards, salt))
       })
     val merges = mergesSlot.get()
     val sh = shSlot.get()
     val acct = graft.operators.Bpe.encodeAccounting(selText, merges)
-    graft.StageTimer.timed("shards/encode_write") {
+    graft.Trace.stage(spark, "shards/encode_write") {
       sh.join(acct, "doc_id")
         .join(sel, Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("source"), col("shard"),

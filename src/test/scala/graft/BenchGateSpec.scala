@@ -100,6 +100,32 @@ class BenchGateSpec extends AnyFunSuite {
     assert(BenchGate.flagged(results, Map.empty).isEmpty)
   }
 
+  test("stage tripwire: a budgeted stage trips only on all three of " +
+    ">1.5x, >0.5 s over and a >1.25x share; the pipeline total and an " +
+    "unbudgeted stage over 2 s trip on their own") {
+    // budget sum 10 s; stage a's budget share is 0.05
+    val budgets = Map("p" -> Map("a" -> 0.5, "big" -> 9.5))
+    def fails(ms: (String, Double)*): Seq[String] =
+      BenchGate.stageFailures(ms.map { case (st, v) => ("p", st, v) }, budgets)
+    // ratio alone: a 1.6x but +0.3 s, share 0.8/13 < 1.25 x 0.05
+    assert(fails("a" -> 0.8, "big" -> 12.2).isEmpty)
+    // absolute move alone: big +0.7 s but 1.07x, share ~fixed
+    assert(fails("a" -> 0.5, "big" -> 10.2).isEmpty)
+    // share alone: a's share 0.7/5.7 but 1.4x and +0.2 s
+    assert(fails("a" -> 0.7, "big" -> 5.0).isEmpty)
+    // all three: a 2.4x, +0.7 s, share 1.2/10.7
+    val all3 = fails("a" -> 1.2, "big" -> 9.5)
+    assert(all3.size == 1 && all3.head.contains(""""stage":"a","sec":1.200"""), all3)
+    // total 15.7 > 1.5 x 10 and > 10 + 2 while every share stays put
+    val total = fails("a" -> 0.5, "big" -> 15.2)
+    assert(total.size == 1 && total.head.contains(""""stage":"__TOTAL__""""), total)
+    // a stage with no row trips over 2 s only; an unbudgeted pipeline never
+    val fresh = fails("a" -> 0.5, "big" -> 9.5, "new" -> 2.1, "newer" -> 1.9)
+    assert(fresh.size == 1 && fresh.head.contains(
+      """"stage":"new","sec":2.100,"budget":null"""), fresh)
+    assert(BenchGate.stageFailures(Seq(("q9", "x", 50.0)), budgets).isEmpty)
+  }
+
   test("canonical estimator takes the min over sweep and focused " +
     "measurements - a sick focused re-run cannot override a healthy " +
     "sweep value (round-16 q132 post-mortem)") {

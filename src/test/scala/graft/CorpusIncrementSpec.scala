@@ -485,4 +485,22 @@ class CorpusIncrementSpec extends SparkSpec {
     assert(kept2.select("doc_id").collect().map(_.getLong(0)).toSet
       == vSet, "purged docs must survive a re-ingest")
   }
+
+  test("every stage_budgets row of q177 and q183 names a stage the " +
+    "pipeline traces; traced stages without a row are listed here") {
+    val budgets = BenchGate.loadStageBudgets()
+    val unbudgeted = Map("q177" -> Set.empty[String],
+      "q183" -> Set("shards/shuffle"))
+    for ((q, run) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "q177" -> (() => CorpusIncrement.q177(tables.documents)),
+        "q183" -> (() => CorpusIncrement.q183(tables.documents)))) {
+      val t = Trace.of(spark)(
+        run().write.format("noop").mode("overwrite").save())
+      val traced = t.byStage.map(_.name).toSet
+      assert(budgets(q).keySet.subsetOf(traced),
+        s"$q: budget rows naming no traced stage: ${budgets(q).keySet -- traced}")
+      assert(traced -- budgets(q).keySet == unbudgeted(q), s"$q: $traced")
+      assert(t.byStage.forall(_.jobs <= t.layers.jobs), t.byStage)
+    }
+  }
 }
