@@ -4,6 +4,7 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one job-and-plan ledger: `Trace.of(spark)(body)` returns `body`'s
@@ -18,10 +19,13 @@ object Trace {
   /** The local property that carries a job's stage label. */
   val StageKey = "graft.stage"
 
-  /** A job: its result stage's name (its call site), whether it ran in
-    * a SQL execution, its `stage` label, its stages (skipped ones
-    * included), its interval and the summed metrics of its stages'
-    * tasks. */
+  /** A job: its call site, whether it ran in a SQL execution, its
+    * `stage` label, its stages (skipped ones included), its interval and
+    * the summed metrics of its stages' tasks. A job in a SQL execution
+    * is named by that execution's description (the action's call site
+    * unless a job description is set), so a job that Spark's broadcast
+    * or subquery pool starts is not named after the pool's frame; any
+    * other job by its result stage's name. */
   final case class Job(id: Int, name: String, inQuery: Boolean,
       label: Option[String], stageIds: Seq[Int], startMs: Long,
       endMs: Long = -1L, taskMs: Long = 0L,
@@ -153,11 +157,22 @@ object Trace {
     val jobs = scala.collection.mutable.LinkedHashMap.empty[Int, Job]
     val plans = scala.collection.mutable.ArrayBuffer.empty[Execution]
     val blocks = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    /** SQL execution id → description, for the executions started here. */
+    private val executions = scala.collection.mutable.Map.empty[String, String]
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        synchronized(executions(x.executionId.toString) = x.description)
+      case _ =>
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val props = Option(e.properties)
-      jobs(e.jobId) = Job(e.jobId, e.stageInfos.maxBy(_.stageId).name,
-        props.exists(_.getProperty(SQLExecution.EXECUTION_ID_KEY) != null),
+      val execution = props.flatMap(p =>
+        Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      jobs(e.jobId) = Job(e.jobId, execution.flatMap(executions.get)
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name),
+        execution.nonEmpty,
         props.flatMap(p => Option(p.getProperty(StageKey))), e.stageIds, e.time)
     }
 

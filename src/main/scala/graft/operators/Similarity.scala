@@ -36,8 +36,90 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** q26 — exact cosine top-k: for each query vector (`vec_id` ∈
-    * queryIds), the k nearest other vectors by cosine.
+  // ---- the retrieval core ------------------------------------------
+  // Every ANN path below (exact q26/q190/q230, IVF q83, SQ8 q162/q171,
+  // IVF+SQ8 q166) and graft.sources.IndexLedger are built from these
+  // pieces: a normed vector frame split into a bounded query panel and
+  // its candidate side, the SQ8 encode-and-cut, the IVF probe and the
+  // per-query ranker.
+
+  /** (vec_id, v, extra…, n): `vec` of each embedding and its norm,
+    * computed once per vector (|q|+|c| sqrt loops, not 2·|q|·|c|). */
+  private def normed(embeddings: DataFrame, vec: Column => Column = asDouble,
+      extra: Seq[Column] = Nil): DataFrame =
+    embeddings
+      .select(Seq(col("vec_id"), vec(col("embedding")).as("v")) ++ extra: _*)
+      .withColumn("n", norm(col("v")))
+
+  /** One side of a scored pair, from a [[normed]] frame: (`p`id, `p`v,
+    * `p`n, extra…) — "q" for the query panel, "c" for candidates. */
+  private def panel(vecs: DataFrame, p: String, extra: Column*): DataFrame =
+    vecs.select(Seq(col("vec_id").as(p + "id"), col("v").as(p + "v"),
+      col("n").as(p + "n")) ++ extra: _*)
+
+  /** The bounded query panel: the vectors with vec_id < queryMaxId. */
+  private def queryPanel(
+      vecs: DataFrame, queryMaxId: Long, extra: Column*): DataFrame =
+    panel(vecs.filter(col("vec_id") < queryMaxId), "q", extra: _*)
+
+  /** Every (query, other candidate) pair: the bounded panel broadcast
+    * against the candidate scan, a map-side nested loop. */
+  private def exactPairs(q: DataFrame, c: DataFrame): DataFrame =
+    c.join(broadcast(q), col("qid") =!= col("cid"))
+
+  /** Float cosine of a (qv, qn) × (cv, cn) pair rounded to 6 dp, so the
+    * ranking, not only the output, is reproducible across engines. */
+  private val cos6 =
+    round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
+
+  /** `vs` plus its `vecCol`'s SQ8 codes `<p>qc` as exact-integer
+    * doubles (the form `vec_dot` sums exactly) and their squared norm
+    * `<p>d2`, for every vector: a zero vector codes to d2 = 0, which the
+    * caller must cut ([[sq8Quantizable]], or IndexLedger's probe guard).
+    * `p` "q" names a query's codes as [[sq8Cosine]] reads them. */
+  def sq8Encode(vs: DataFrame, vecCol: String, p: String = ""): DataFrame =
+    vs.withColumn(p + "qc", sq8Codes(col(vecCol)).cast("array<double>"))
+      .withColumn(p + "d2", dot(col(p + "qc"), col(p + "qc")))
+
+  /** The SQ8 encode-and-cut: [[sq8Encode]] for the quantizable vectors
+    * only. The cut is the `explode` of `[d2]`, empty when d2 = 0, not a
+    * filter: Catalyst pushes a filter below the projections that
+    * compute its columns, substituting their expressions, so a `d2`
+    * filter would run `sq8_codes` twice in the filter (and list it in
+    * the scan's pushed filters) and again in the projection; a
+    * generator's output stays above its generator, so each vector is
+    * encoded once. */
+  def sq8Quantizable(vs: DataFrame, vecCol: String): DataFrame =
+    sq8Encode(vs, vecCol).select(vs.columns.map(col).toSeq ++ Seq(col("qc"),
+      explode(when(col("d2") > 0.0, array(col("d2")))).as("d2")): _*)
+
+  /** The IVF probe: one row per each query's `nprobe` nearest cells of
+    * an [[ivfCentroids]] frame (the [[graft.functions.IvfNearest]]
+    * kernel against the [[ivfCells]] literal, inside the query scan —
+    * no exchange); a query whose `live` is false probes no cell. */
+  def ivfProbe(qv: Column, cent: DataFrame, nprobe: Int,
+      live: Column = lit(true)): Column =
+    explode(when(live, ivf_nearest(qv, ivfCells(cent), nprobe, probe = true)))
+
+  /** The per-query ranker: each qid's `k` best rows by (`score` desc,
+    * cid asc) with their 1-based rank `rk` as a long. Spark plans the
+    * `row_number` filter with a map-side partial WindowGroupLimit, so
+    * the one qid exchange carries at most k rows per query and task. */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int,
+      rk: String = "rk"): DataFrame =
+    scored.withColumn(rk, row_number().over(Window.partitionBy("qid")
+        .orderBy(col(score).desc, col("cid").asc)))
+      .filter(col(rk) <= k)
+      .withColumn(rk, col(rk).cast("long"))
+
+  /** The served top-k: (qid, cid, `score`, rk) ordered by (qid, rk). */
+  private def ranked(scored: DataFrame, score: String, k: Int): DataFrame =
+    topKPerQuery(scored, score, k)
+      .select(col("qid"), col("cid"), col(score), col("rk"))
+      .orderBy("qid", "rk")
+
+  /** q26 — exact cosine top-k: for each query vector (vec_id <
+    * queryMaxId), the k nearest other vectors by cosine.
     *
     * Plan shape: the (tiny) query set is broadcast against the corpus —
     * a map-side nested loop over each corpus partition, then a top-k
@@ -48,6 +130,13 @@ object Similarity {
     * to 6 decimals so the ranking (not just the output) is reproducible
     * across engines.
     */
+  def cosineTopK(
+      embeddings: DataFrame, queryMaxId: Long = 10, k: Int = 5): DataFrame = {
+    val vecs = normed(embeddings)
+    ranked(exactPairs(queryPanel(vecs, queryMaxId), panel(vecs, "c"))
+      .select(col("qid"), col("cid"), cos6.as("cos")), "cos", k)
+  }
+
   /** q194 — embedding-space diagnostics per class: vector count, norm
     * mean/spread, centroid norm, and the MEAN PAIRWISE COSINE within
     * the class — the collapse/anisotropy panel run before trusting an
@@ -146,31 +235,6 @@ object Similarity {
         |SELECT qid, cid, cos, CAST(rk AS BIGINT) AS rk
         |FROM rk WHERE rk <= 3
         |ORDER BY qid, rk""".stripMargin)
-  }
-
-  def cosineTopK(
-      embeddings: DataFrame, queryMaxId: Long = 10, k: Int = 5): DataFrame = {
-    // norms precomputed per vector (not per pair): |q|+|c| sqrt loops
-    // instead of 2·|q|·|c|; numerically identical to inline norms
-    val q = embeddings.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val c = embeddings
-      .select(col("vec_id").as("cid"), asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-    val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(
-        col("qid"), col("cid"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-          .as("cos"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"),
-        col("rk").cast("long").as("rk"))
-      .orderBy("qid", "rk")
   }
 
   /** Engine-portable hyperplane signs: sign(i,j) = high bit of the
@@ -279,36 +343,18 @@ object Similarity {
     * classic FAISS-style IVF layout expressed as DataFrames. Recall vs
     * brute force is asserted in SimilaritySpec. */
   def ivfCosineTopK(
-      embeddings: DataFrame, dim: Int = 64, queryMaxId: Long = 10,
+      embeddings: DataFrame, queryMaxId: Long = 10,
       k: Int = 5, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    val vecs = embeddings.select(
-      col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("n", norm(col("v")))
-    val centDf = ivfCentroids(vecs, "vec_id", "v", nlist)
-    val assigned = ivfAssign(vecs, centDf, "v")
-    // query-side: dot to every centroid (nlist is small), keep the
-    // nprobe nearest cells
-    val q = vecs.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n").as("qn"))
-    val qCells = q.select(col("qid"), col("qv"), col("qn"),
-      explode(ivf_nearest(col("qv"), ivfCells(centDf), nprobe,
-        probe = true)).as("cell"))
-    val cand = assigned
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn"),
-        col("cell"))
+    val vecs = normed(embeddings)
+    val cent = ivfCentroids(vecs, "vec_id", "v", nlist)
+    val qCells = queryPanel(vecs, queryMaxId)
+      .withColumn("cell", ivfProbe(col("qv"), cent, nprobe))
+    val cand = panel(ivfAssign(vecs, cent, "v"), "c", col("cell"))
       .join(broadcast(qCells), Seq("cell"))
       .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-          .as("cos"))
+      .select(col("qid"), col("cid"), cos6.as("cos"))
       .distinct()
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos").desc, col("cid").asc)
-    cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"),
-        col("rk").cast("long").as("rk"))
-      .orderBy("qid", "rk")
+    ranked(cand, "cos", k)
   }
 
   /** Training rows per IVF cell: the FAISS train-on-sample convention
@@ -505,36 +551,22 @@ object Similarity {
   def sq8CosineTopK(
       embeddings: DataFrame, queryMaxId: Long = 10,
       k: Int = 5): DataFrame = {
-    // codes ride as ARRAY<DOUBLE> so the scoring loop is the fused
-    // native vec_dot expression (one codegen'd primitive loop, no
-    // per-pair intermediate array) — every product and running sum
-    // stays < 2^53, so double arithmetic here IS exact integer
-    // arithmetic and the oracle's BIGINT formulation matches
-    // bit-for-bit
-    import graft.functions.VectorFunctions.vec_dot
-    val base = embeddings
-      .select(col("vec_id"),
-        sq8Codes(asDouble(col("embedding")))
-          .cast("array<double>").as("qc"))
-      .withColumn("d2", vec_dot(col("qc"), col("qc")))
-      .filter(col("d2") > 0.0)
-    val q = base.select(col("vec_id").as("qid"), col("qc").as("qa"),
-      col("d2").as("da")).filter(col("qid") < queryMaxId)
-    val c = base.select(col("vec_id").as("cid"), col("qc").as("qb"),
-      col("d2").as("db"))
-    val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(
-          vec_dot(col("qa"), col("qb")) /
-            (sqrt(col("da")) * sqrt(col("db"))), 6).as("cos_q"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_q").desc, col("cid").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos_q"),
-        col("rk").cast("long").as("rk"))
-      .orderBy("qid", "rk")
+    val coded = sq8Quantizable(normed(embeddings), "v")
+    val scored = exactPairs(
+        queryPanel(coded, queryMaxId, col("qc").as("qqc"), col("d2").as("qd2")),
+        panel(coded, "c", col("qc"), col("d2")))
+      .select(col("qid"), col("cid"), round(sq8Cosine, 6).as("cos_q"))
+    ranked(scored, "cos_q", k)
   }
+
+  /** Quantized cosine of a (qqc, qd2) × (qc, d2) code pair. Codes ride
+    * as ARRAY<DOUBLE> so the scoring loop is the fused native vec_dot
+    * (one codegen'd primitive loop, no per-pair intermediate array);
+    * every product and running sum stays < 2^53, so double arithmetic
+    * here IS exact integer arithmetic and the oracle's BIGINT
+    * formulation matches bit-for-bit. */
+  val sq8Cosine =
+    dot(col("qqc"), col("qc")) / (sqrt(col("qd2")) * sqrt(col("d2")))
 
   /** The composed 100 TB ANN path the q83/q162 scaladocs promise —
     * IVF coarse quantization bounds WHICH vectors are scored (nprobe
@@ -549,49 +581,22 @@ object Similarity {
   def ivfSq8TopK(
       embeddings: DataFrame, queryMaxId: Long = 10, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, oversample: Int = 4): DataFrame = {
-    import graft.functions.VectorFunctions.vec_dot
-
-    val vecs = embeddings.select(
-      col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("n", norm(col("v")))
-      .withColumn("qc", sq8Codes(col("v")).cast("array<double>"))
-      .withColumn("d2", vec_dot(col("qc"), col("qc")))
-      .filter(col("d2") > 0.0)
-    val centDf = ivfCentroids(vecs, "vec_id", "v", nlist)
-    val assigned = ivfAssign(vecs, centDf, "v")
-    val q = vecs.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("n").as("qn"), col("qc").as("qqc"), col("d2").as("qd2"))
-    val qCells = q.select(col("qid"), col("qv"), col("qn"), col("qqc"),
-      col("qd2"), explode(ivf_nearest(col("qv"), ivfCells(centDf), nprobe,
-        probe = true)).as("cell"))
+    val vecs = sq8Quantizable(normed(embeddings), "v")
+    val cent = ivfCentroids(vecs, "vec_id", "v", nlist)
+    val qCells = queryPanel(vecs, queryMaxId,
+        col("qc").as("qqc"), col("d2").as("qd2"))
+      .withColumn("cell", ivfProbe(col("qv"), cent, nprobe))
     // stage 1: quantized scoring over the probed cells only
-    val cand = assigned
-      .select(col("vec_id").as("cid"), col("v").as("cv2"),
-        col("n").as("cn"), col("qc"), col("d2"), col("cell"))
+    val cand = panel(ivfAssign(vecs, cent, "v"), "c",
+        col("qc"), col("d2"), col("cell"))
       .join(broadcast(qCells), Seq("cell"))
       .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("qv"), col("qn"), col("cid"), col("cv2"),
-        col("cn"),
-        (vec_dot(col("qqc"), col("qc")) /
-          (sqrt(col("qd2")) * sqrt(col("d2")))).as("approx"))
+      .select(col("qid"), col("qv"), col("qn"), col("cid"), col("cv"),
+        col("cn"), sq8Cosine.as("approx"))
       .distinct()
-    val wApprox = Window.partitionBy("qid")
-      .orderBy(col("approx").desc, col("cid").asc)
-    val shortlist = cand.withColumn("ar", row_number().over(wApprox))
-      .filter(col("ar") <= k * oversample)
-    // stage 2: exact rescore of the shortlist, final top-k
-    val wExact = Window.partitionBy("qid")
-      .orderBy(col("cos").desc, col("cid").asc)
-    shortlist
-      .select(col("qid"), col("cid"),
-        round(dot(col("qv"), col("cv2")) / (col("qn") * col("cn")), 6)
-          .as("cos"))
-      .withColumn("rk", row_number().over(wExact))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"),
-        col("rk").cast("long").as("rk"))
-      .orderBy("qid", "rk")
+    // stage 2: exact rescore of the k·oversample shortlist, final top-k
+    ranked(topKPerQuery(cand, "approx", k * oversample, "ar")
+      .select(col("qid"), col("cid"), cos6.as("cos")), "cos", k)
   }
 
   /** q171 — PCA-rotated SQ8 ANN: the FAISS PCAR/OPQ-lite
@@ -714,29 +719,19 @@ object Similarity {
   def hardNegatives(
       embeddings: DataFrame, queryMaxId: Long = 10,
       k: Int = 10): DataFrame = {
-    val q = embeddings.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"),
-        col("label").cast("long").as("q_label"))
-      .withColumn("qn", norm(col("qv")))
-    val c = embeddings
-      .select(col("vec_id").as("cid"), asDouble(col("embedding")).as("cv"),
-        col("label").cast("long").as("c_label"))
-      .withColumn("cn", norm(col("cv")))
-    val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
+    val vecs = normed(embeddings,
+      extra = Seq(col("label").cast("long").as("label")))
+    val scored = exactPairs(
+        queryPanel(vecs, queryMaxId, col("label").as("q_label")),
+        panel(vecs, "c", col("label").as("c_label")))
       .select(col("qid"), col("q_label"), col("cid"), col("c_label"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
-          .as("cos"))
+        cos6.as("cos"))
     val bestPos = scored.filter(col("c_label") === col("q_label"))
       .groupBy("qid").agg(max("cos").as("bp"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.filter(col("c_label") =!= col("q_label"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topKPerQuery(scored.filter(col("c_label") =!= col("q_label")), "cos", k)
       .join(broadcast(bestPos), Seq("qid"), "left")
       .withColumn("best_pos_cos", coalesce(col("bp"), lit(-1.0)))
-      .select(col("qid"), col("cid"), col("cos"),
-        col("rk").cast("long").as("neg_rank"),
+      .select(col("qid"), col("cid"), col("cos"), col("rk").as("neg_rank"),
         col("best_pos_cos"),
         round(col("best_pos_cos") - col("cos"), 6).as("margin"))
       .orderBy("qid", "neg_rank")
@@ -834,35 +829,22 @@ object Similarity {
       dims: Int = 16,
       k: Int = 5,
       queryMaxId: Long = 50): DataFrame = {
-    def topk(sliceDims: Option[Int], rkName: String): DataFrame = {
-      val proj: Column => Column = sliceDims match {
-        case Some(d) => v => asDouble(slice(v, 1, d))
-        case None => v => asDouble(v)
-      }
-      val q = embeddings.filter(col("vec_id") < queryMaxId)
-        .select(col("vec_id").as("qid"), proj(col("embedding")).as("qv"))
-        .withColumn("qn", norm(col("qv")))
-      val c = embeddings
-        .select(col("vec_id").as("cid"), proj(col("embedding")).as("cv"))
-        .withColumn("cn", norm(col("cv")))
+    def topk(vec: Column => Column, rkName: String): DataFrame = {
+      val vecs = normed(embeddings, vec)
       // zero-norm guard: a vector whose first `dims` entries are all
       // zero would make 0/0 = NaN, and Spark ranks NaN ABOVE every
       // real cosine in the desc sort (seizing top-k slots) while
       // DuckDB's NULL-from-0/0 sorts last — pin both engines to the
       // same well-defined floor instead
-      val scored = c.join(broadcast(q), col("qid") =!= col("cid"))
+      val scored = exactPairs(queryPanel(vecs, queryMaxId), panel(vecs, "c"))
         .select(col("qid"), col("cid"),
-          when(col("qn") > 0 && col("cn") > 0,
-            round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+          when(col("qn") > 0 && col("cn") > 0, cos6)
             .otherwise(lit(-1.0)).as("cos"))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("cos").desc, col("cid").asc)
-      scored.withColumn(rkName, row_number().over(w).cast("long"))
-        .filter(col(rkName) <= k)
+      topKPerQuery(scored, "cos", k, rkName)
         .select(col("qid"), col("cid"), col(rkName))
     }
-    val full = topk(None, "rk_full")
-    val trunc = topk(Some(dims), "rk_trunc")
+    val full = topk(asDouble, "rk_full")
+    val trunc = topk(v => asDouble(slice(v, 1, dims)), "rk_trunc")
     val overlap = full.join(trunc, Seq("qid", "cid"))
       .groupBy("qid").agg(count(lit(1)).as("overlap"),
         sum(when(col("rk_full") === 1 && col("rk_trunc") === 1, 1L)

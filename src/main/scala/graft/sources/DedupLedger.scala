@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   *
   * Scale posture at 100 TB: an increment touches (a) the batch itself,
   * (b) the ~128 KB bloom payload (one-row parquet, broadcast as a
-  * literal), (c) the key parts — 16-byte md5 keys, |corpus docs| rows
+  * one-row frame), (c) the key parts — 16-byte md5 keys, |corpus docs| rows
   * ≪ corpus bytes — and (c) only on the build side of the left-anti
   * confirm join that bloom-POSITIVE rows enter; the bloom-negative
   * bulk of a typical increment never shuffles at all. Bloom merge is
@@ -53,11 +53,16 @@ object DedupLedger {
   private val payloadSchema =
     StructType(Seq(StructField("payload", ArrayType(LongType), false)))
 
+  /** A Bloom payload as a one-row frame (payload): what a plan probes
+    * or merges through a broadcast, not an array literal that would
+    * ride every task's closure and print in full in every plan. */
+  private def bloomFrame(spark: SparkSession, payload: Array[Long]): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(payload.toSeq)), payloadSchema)
+
   private def writeBloom(
       spark: SparkSession, statePath: String, version: Long,
       payload: Array[Long]): Unit =
-    spark.createDataFrame(
-      java.util.List.of(Row(payload.toSeq)), payloadSchema)
+    bloomFrame(spark, payload)
       .write.mode("overwrite").parquet(bloomDir(statePath, version))
 
   private def readBloom(
@@ -137,13 +142,15 @@ object DedupLedger {
     val ledgerKeys = keysOf(spark, statePath, m)
     val payload = readBloom(spark, statePath, m.version)
 
-    // same split as Dedup.incrementalDedup, with the PERSISTED bloom
-    // as a literal instead of a rebuilt aggregate: negatives are
+    // same split and broadcast probe as Dedup.incrementalDedup, with
+    // the PERSISTED bloom instead of a rebuilt aggregate: negatives are
     // definitely-new and skip the confirm join entirely
     val keyed = batch
       .withColumn("__k", keyOf(col("text"), prefixTokens))
+      .crossJoin(broadcast(bloomFrame(spark, payload).toDF("__bloom")))
       .withColumn("__maybe",
-        bloom_might_contain(xxhash64(col("__k")), lit(payload)))
+        bloom_might_contain(xxhash64(col("__k")), col("__bloom")))
+      .drop("__bloom")
     val sureNew = keyed.filter(!col("__maybe"))
     val confirmed = keyed.filter(col("__maybe"))
       .join(ledgerKeys, Seq("__k"), "left_anti")
@@ -199,8 +206,9 @@ object DedupLedger {
     spark.read
       .parquet(keysDir(statePath, partName(next)))
       .agg(bloom_agg(xxhash64(col("__k")), mBits, numHashes).as("p"))
+      .crossJoin(broadcast(bloomFrame(spark, payload)))
       .select(zip_with(
-        lit(payload), col("p"), (a, b) => a.bitwiseOR(b)).as("payload"))
+        col("payload"), col("p"), (a, b) => a.bitwiseOR(b)).as("payload"))
       .write.mode("overwrite").parquet(bloomDir(statePath, next))
     Ledger.writeManifest(statePath,
       Manifest(next, p.m.keyParts :+ partName(next), batchId))

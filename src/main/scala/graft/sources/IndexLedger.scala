@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Persistent incremental ANN index — the fifth ledger. The q166
-  * composed path ([[graft.operators.Similarity.ivfSq8TopK]]) rebuilds
-  * IVF centroids and SQ8 codes on every call; at production cadence a
-  * crawl increment would re-pay the full index build while every other
-  * derived state here (keys, signatures, sketches, moments) already
-  * has a ledger. This one persists the q166 layout:
+  * composed path ([[graft.operators.Similarity.ivfSq8TopK]]) trains its
+  * IVF centroids and encodes every vector's SQ8 codes on each call; at
+  * production cadence a crawl increment would re-pay the full index
+  * build while every other derived state here (keys, signatures,
+  * sketches, moments) already has a ledger. This one persists the
+  * q166 layout:
   *
   *  - `centroids/v_<N>/` — the IVF coarse quantizer: `nlist` rows of
   *    (cell, cv, c2), kilobytes, written by [[init]] and [[refresh]]
@@ -35,10 +36,10 @@ import org.apache.spark.sql.types.StructType
   *    [[topK]] shortlists are identical at any oversample.
   *  - [[topK]] serves from committed state only: collect the
   *    kilobyte centroid frame into a literal, probe each query's
-  *    `nprobe` best cells with the [[graft.functions.IvfNearest]]
-  *    kernel inside the query scan (no exchange), score the stored
-  *    int8 codes in place (`vec_dot` reads them as exact-integer
-  *    doubles — the q162 discipline),
+  *    `nprobe` best cells with the shared IVF probe
+  *    ([[graft.operators.Similarity.ivfProbe]], inside the query scan,
+  *    no exchange), score the stored int8 codes in place (`vec_dot`
+  *    reads them as exact-integer doubles — the q162 discipline),
   *    keep each query's k·oversample best with the engine's
   *    bounded-heap [[graft.plans.TopKPerKey]] (partial heap → one qid
   *    exchange → final heap; the candidates are never sorted), rank
@@ -68,11 +69,15 @@ import org.apache.spark.sql.types.StructType
   * candidates per query (the heap bound), so candidates are never
   * shuffled or sorted in full; the k·|query batch| result is ordered
   * inside one partition (a serving batch is bounded by the caller);
-  * nothing driver-side exceeds the `nlist`-row centroid collect. */
+  * nothing driver-side exceeds the `nlist`-row centroid collect.
+  *
+  * The SQ8 encode-and-cut, the query encode, the IVF probe and the
+  * quantized score are the retrieval core of
+  * [[graft.operators.Similarity]], shared with q162 and q166. */
 object IndexLedger {
 
-  import graft.operators.Similarity.{asDouble, ivfAssign, ivfCells, ivfCentroids, sq8Codes}
-  import graft.functions.VectorFunctions.{ivf_nearest, vec_dot}
+  import graft.operators.Similarity.{asDouble, ivfAssign, ivfCentroids, ivfProbe, sq8Cosine, sq8Encode, sq8Quantizable}
+  import graft.functions.VectorFunctions.vec_dot
   import graft.plans.TopKPerKey
   import Ledger.{Manifest, partName}
 
@@ -176,28 +181,19 @@ object IndexLedger {
     (assigned.observe(obs, meanDistortion.as("base")), obs)
   }
 
-  /** An embeddings frame as (__aid, __v, __qc, __d2): float vector,
-    * SQ8 codes (exact-integer doubles) and their squared norm, for the
-    * quantizable vectors only (zero vectors code to d2 = 0, as in
-    * q166). The cut is the `explode` of `[d2]`, empty when d2 = 0, not
-    * a filter: Catalyst pushes a filter below the projections that
-    * compute its columns, substituting their expressions, so a `__d2`
-    * filter would run `sq8_codes` in the filter and again in the
-    * projection (and list it in the scan's pushed filters); a
-    * generator's output stays above its generator. */
-  private def prep(batch: DataFrame): DataFrame =
-    batch.select(col("vec_id").as("__aid"),
-        asDouble(col("embedding")).as("__v"))
-      .withColumn("__qc", sq8Codes(col("__v")).cast("array<double>"))
-      .withColumn("__d2", vec_dot(col("__qc"), col("__qc")))
-      .select(col("__aid"), col("__v"), col("__qc"),
-        explode(when(col("__d2") > 0.0, array(col("__d2")))).as("__d2"))
+  /** An embeddings frame as (__aid, __v, qc, d2): float vector, SQ8
+    * codes and their squared norm, for the quantizable vectors only —
+    * the shared encode-and-cut ([[graft.operators.Similarity
+    * .sq8Quantizable]]), one encode per vector. */
+  private def quantizable(batch: DataFrame): DataFrame =
+    sq8Quantizable(batch.select(col("vec_id").as("__aid"),
+      asDouble(col("embedding")).as("__v")), "__v")
 
   private def writeCodes(
       spark: SparkSession, statePath: String, part: String,
       assigned: DataFrame): Unit =
     assigned.select(col("__aid").cast("long").as("vec_id"), col("cell"),
-        col("__qc").cast("array<tinyint>").as("qc"), col("__d2").as("d2"))
+        col("qc").cast("array<tinyint>").as("qc"), col("d2"))
       .write.mode("overwrite").parquet(codesDir(statePath, part))
 
   /** Build the index from the seed corpus — the ONE full embedding
@@ -208,13 +204,13 @@ object IndexLedger {
       spark: SparkSession, statePath: String, embeddings: DataFrame,
       nlist: Int = 16): Unit = {
     Ledger.requireFresh(statePath)
-    build(spark, statePath, prep(embeddings), nlist,
+    build(spark, statePath, quantizable(embeddings), nlist,
       IxManifest(1L, Seq(partName(1L)), 1L, 0.0, None))
   }
 
   /** The build body of [[init]] and [[refresh]]: fit the coarse
     * quantizer on a sample of the quantizable `vecs` (__aid, __v,
-    * __qc, __d2 > 0), write
+    * qc, d2 > 0), write
     * the centroids, assign every vector against the PERSISTED
     * centroids (the same expression path [[absorb]] uses — init ==
     * absorb assignment parity is the composition contract), write the
@@ -244,7 +240,7 @@ object IndexLedger {
     val cent = readCentroids(spark, statePath, ix)
     val known = readCodes(spark, statePath, ix)
       .select(col("vec_id").as("__aid"))
-    val fresh = prep(batch).join(known, Seq("__aid"), "left_anti")
+    val fresh = quantizable(batch).join(known, Seq("__aid"), "left_anti")
     Pending(assign(fresh, cent), ix)
   }
 
@@ -307,23 +303,16 @@ object IndexLedger {
     val ix = ixAt(statePath, asOfVersion)
     val cent = readCentroids(spark, statePath, ix)
     val cs = readCodes(spark, statePath, ix)
-    val q = queries.select(col("vec_id").as("qid"),
-        asDouble(col("embedding")).as("qv"))
-      .withColumn("qqc", sq8Codes(col("qv")).cast("array<double>"))
-      .withColumn("qd2", vec_dot(col("qqc"), col("qqc")))
-    // a zero query (qd2 = 0) probes no cell: the cut sits inside the
-    // probe's generator, so it is not pushed below the encode and each
-    // query is encoded once (see [[prep]])
+    val q = sq8Encode(queries.select(col("vec_id").as("qid"),
+      asDouble(col("embedding")).as("qv")), "qv", "q")
+    // a zero query (qd2 = 0) probes no cell: the cut is the probe's
+    // guard, inside its generator, so each query is encoded once
     val qCells = q.select(col("qid"), col("qqc"), col("qd2"),
-      explode(when(col("qd2") > 0.0,
-        ivf_nearest(col("qv"), ivfCells(cent), nprobe, probe = true)))
-        .as("cell"))
+      ivfProbe(col("qv"), cent, nprobe, live = col("qd2") > 0.0).as("cell"))
     val self = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
     val cand = cs.join(broadcast(qCells), Seq("cell"))
       .filter(self)
-      .select(col("qid"), col("vec_id").as("cid"),
-        (vec_dot(col("qqc"), col("qc")) /
-          (sqrt(col("qd2")) * sqrt(col("d2")))).as("approx"))
+      .select(col("qid"), col("vec_id").as("cid"), sq8Cosine.as("approx"))
     // (qid, cid) is unique without a distinct: each vec_id has one code
     // row ([[assign]] keeps one row per id within a write, absorb
     // anti-joins the committed ids) and a query's probed cells are
@@ -364,7 +353,7 @@ object IndexLedger {
       batch: DataFrame): Double = {
     val ix = ixAt(statePath)
     val cent = readCentroids(spark, statePath, ix)
-    val d = distortionOf(assign(prep(batch), cent))
+    val d = distortionOf(assign(quantizable(batch), cent))
     if (ix.baseDistortion <= 0.0) 1.0 else d / ix.baseDistortion
   }
 
@@ -382,7 +371,7 @@ object IndexLedger {
       .select(col("vec_id").as("__aid"),
         transform(col("qc").cast("array<double>"),
           x => x / sqrt(col("d2"))).as("__v"),
-        col("qc").cast("array<double>").as("__qc"), col("d2").as("__d2"))
+        col("qc").cast("array<double>").as("qc"), col("d2"))
     val next = ix.version + 1
     build(spark, statePath, decoded, nlist, IxManifest(
       next, Seq(partName(next)), next, 0.0, ix.lastBatchId))

@@ -6,7 +6,6 @@ import graft.sources.IndexLedger
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -73,10 +72,6 @@ class IvfTrainerSpec extends SparkSpec {
       !j.inQuery && j.name.startsWith("parquet at IndexLedger.scala"))
     assert(footer.isEmpty, footer.mkString(", "))
   }
-
-  private def encodesIn(plan: SparkPlan): Seq[graft.functions.Sq8Codes] =
-    PlanAudit.flatten(plan).flatMap(_.expressions
-      .flatMap(_.collect { case e: graft.functions.Sq8Codes => e }))
 
   test("IndexLedger.init runs exactly 5 jobs: the sample collect, the " +
     "centroid write, the centroid collect, and the code write's " +

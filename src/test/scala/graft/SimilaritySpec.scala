@@ -29,7 +29,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF topk recall vs brute force") {
     val exact = Similarity.cosineTopK(tables.embeddings, 10, 5)
       .select("qid", "cid").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfCosineTopK(tables.embeddings, 64, 10, 5,
+    val ivf = Similarity.ivfCosineTopK(tables.embeddings, 10, 5,
       nlist = 8, nprobe = 4)
     val approx = ivf.select("qid", "cid").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
@@ -407,6 +407,26 @@ class SimilaritySpec extends SparkSpec {
       r =>
         assert(r.getLong(1) == 5L && r.getLong(2) <= 5L)
         assert(r.getDouble(4) >= 0.0 && r.getDouble(4) <= 1.0)
+    }
+  }
+
+  test("q162, q166 and q171 encode each vector once: one sq8_codes per " +
+    "encoded embeddings scan, none in a filter or a pushed scan filter") {
+    import graft.functions.Sq8Codes
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    // q166: the trainer's sample scan, then the candidate and query scans
+    Seq("q162_sq8_ann" -> 2, "q166_ivf_sq8_ann" -> 3,
+      "q171_pca_sq8_ann" -> 2).foreach { case (name, encodedScans) =>
+      val plans = Trace.of(spark)(
+        SparkEntry.queries(name)(spark, sfDir).collect()).plans.map(_.plan)
+      val inFilter = plans.flatMap(graft.plans.PlanAudit.flatten).filter {
+        case _: FilterExec | _: FileSourceScanExec => true
+        case _ => false
+      }.filter(_.expressions.exists(_.exists(_.isInstanceOf[Sq8Codes])))
+      assert(inFilter.isEmpty, s"$name: an encode in a filter\n" +
+        plans.mkString("\n---\n"))
+      assert(plans.map(encodesIn(_).size).sum == encodedScans,
+        s"$name\n" + plans.mkString("\n---\n"))
     }
   }
 }

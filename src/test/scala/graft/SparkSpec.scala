@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared ScalaTest base: one local SparkSession per suite, on the
@@ -15,4 +16,10 @@ trait SparkSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
   lazy val tables: Tables = Tables(spark, sfDir)
+
+  /** Every SQ8 encode an executed plan evaluates, adaptive stages
+    * included. */
+  def encodesIn(plan: SparkPlan): Seq[graft.functions.Sq8Codes] =
+    graft.plans.PlanAudit.flatten(plan).flatMap(_.expressions
+      .flatMap(_.collect { case e: graft.functions.Sq8Codes => e }))
 }

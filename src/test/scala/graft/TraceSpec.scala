@@ -84,6 +84,15 @@ class TraceSpec extends SparkSpec {
       t.layers.json.contains(""","by_stage":{"x":{"wall_s":"""), t.layers.json)
   }
 
+  test("a broadcast join's jobs, its broadcast job on Spark's pool " +
+    "included, are named by the query's call site, none after the pool") {
+    val t = Trace.of(spark)(broadcastJoin())
+    assert(t.jobs.size >= 2 && t.jobs.forall(_.inQuery), t.report)
+    assert(!t.jobs.exists(_.name.contains("CompletableFuture")), t.report)
+    assert(t.jobs.map(_.name).distinct == Seq(t.jobs.head.name) &&
+      t.jobs.head.name.startsWith("save at TraceSpec.scala:"), t.report)
+  }
+
   test("10,000 stage calls with no trace running leave nothing behind") {
     (1 to 10000).foreach(i => Trace.stage(spark, s"s$i")(()))
     assert(Trace.active.isEmpty)
